@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -113,7 +113,16 @@ object Serving {
     * `{"error":"Internal server error","details": …}` envelope — a
     * monitor must never be told a server fault was the client's. */
   def handleWithStatus(s: SparkSession, d: String, requestJson: String)
-      : (Int, String) = {
+      : (Int, String) =
+    handleWithStatus(s, d, requestJson, s)
+
+  /** [[handleWithStatus]] executing on `exec`. The request's DataFrame
+    * is still built on `s`, so the per-JVM index and memo builds inside
+    * [[Retrieval.run]] run there; its analyzed plan is then re-bound to
+    * `exec` and the JSON rows are collected on it. [[ServingHttp]]
+    * passes its interpreted serving session here. */
+  def handleWithStatus(s: SparkSession, d: String, requestJson: String,
+      exec: SparkSession): (Int, String) = {
     val req =
       try Right(parseRequest(requestJson))
       catch { case NonFatal(e) => Left(errMsg(e)) }
@@ -121,7 +130,11 @@ object Serving {
       case Left(msg) => (400, s"""{"error":${quote(msg)}}""")
       case Right(r) =>
         try {
-          val rows = Retrieval.run(s, d, r).toJSON.collect()
+          val df = Retrieval.run(s, d, r)
+          val onExec =
+            if (exec eq s) df
+            else GraftSqlShim.ofRows(exec, GraftSqlShim.analyzed(df))
+          val rows = onExec.toJSON.collect()
           (200,
             s"""{"mode":${quote(r.mode)},"top_k":${r.k},"results":[${rows.mkString(",")}]}""")
         } catch {
@@ -169,6 +182,24 @@ object Serving {
   * then stall `/health` past any liveness probe) and Spark schedules the
   * concurrent collect()s fairly. This is the reference's deployment
   * shape (one Flask process in front of one engine), not a fleet story.
+  *
+  * Serving session: [[start]] derives one execution session from the
+  * caller's `s` ([[servingSession]]). It shares `s`'s SparkContext,
+  * cached data and per-JVM caches, and inherits a SNAPSHOT of `s`'s SQL
+  * conf, registered functions and temp views taken at `start`; later
+  * changes to `s` do not reach it, and nothing set on it reaches `s`.
+  * Each request is still BUILT on `s` (the index and memo builds inside
+  * [[graft.operators.Retrieval.run]] stay compiled there, where they
+  * are paid once per JVM), and only its final plan runs on the serving
+  * session, interpreted. A request's final plan is small and runs once,
+  * and compiling it is most of its fixed cost: Spark's JVM-wide codegen
+  * cache holds 100 classes while the 11-mode mix needs about 180, so
+  * even a repeated request compiled 4 to 30 Janino classes, and one
+  * served from the cache ran 30 to 50 % faster. Turning off whole-stage
+  * codegen alone still compiled 2 to 22 classes a request (projections,
+  * predicates, orderings); the factory mode below removes the rest, and
+  * ServingHttpSpec pins zero compilations for a warm round of fresh
+  * requests.
   */
 object ServingHttp {
 
@@ -211,11 +242,12 @@ object ServingHttp {
       maxConcurrent: Int = defaultMaxConcurrent): com.sun.net.httpserver.HttpServer = {
     require(maxConcurrent >= 1,
       s"ServingHttp.start: maxConcurrent must be >= 1, got $maxConcurrent")
+    val exec = servingSession(s)
     val admission = new java.util.concurrent.Semaphore(maxConcurrent)
     val srv = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(port), 0)
     srv.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
-      try route(s, d, ex, admission)
+      try route(s, exec, d, ex, admission)
       catch { // app.py:329-331 envelope — a handler bug must answer JSON
         case scala.util.control.NonFatal(e) =>
           respond(ex, 500,
@@ -231,7 +263,21 @@ object ServingHttp {
     srv
   }
 
-  private def route(s: SparkSession, d: String,
+  /** The interpreted execution session [[start]] serves from: a clone
+    * of `s` (see the object doc) with whole-stage codegen off and the
+    * expression factories set to `NO_CODEGEN`, so projections,
+    * predicates and orderings are interpreted too. Both values are fixed,
+    * not configurable. `spark.sql.codegen.factoryMode` is marked internal
+    * in Spark; the compile-count spec in ServingHttpSpec pins that it
+    * still has this effect. */
+  private[graft] def servingSession(s: SparkSession): SparkSession = {
+    val exec = GraftSqlShim.cloneSession(s)
+    exec.conf.set("spark.sql.codegen.wholeStage", "false")
+    exec.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    exec
+  }
+
+  private def route(s: SparkSession, exec: SparkSession, d: String,
       ex: com.sun.net.httpserver.HttpExchange,
       admission: java.util.concurrent.Semaphore): Unit = {
     val path = ex.getRequestURI.getPath
@@ -246,7 +292,7 @@ object ServingHttp {
           // but NOT a JSON object is the client's error — refusing
           // beats silently discarding its parameters and answering 200
           withMode(body, mode) match {
-            case Right(merged) => admit(s, d, ex, merged, admission)
+            case Right(merged) => admit(s, exec, d, ex, merged, admission)
             case Left(err) => respond(ex, 400, s"""{"error":${jstr(err)}}""")
           }
         }
@@ -263,7 +309,7 @@ object ServingHttp {
                 respond(ex, 400,
                   """{"error":"Invalid mode. Use: whole, segment, hybrid, or tags"}""")
               else withMode(body, mode) match {
-                case Right(merged) => admit(s, d, ex, merged, admission)
+                case Right(merged) => admit(s, exec, d, ex, merged, admission)
                 case Left(err) => respond(ex, 400, s"""{"error":${jstr(err)}}""")
               }
           }
@@ -279,7 +325,7 @@ object ServingHttp {
     * 28 s. Shedding happens AFTER request validation (a 400 is a 400
     * even on a busy node) and holds the permit for the full engine call
     * so the ceiling bounds in-flight Spark work, not just accepts. */
-  private def admit(s: SparkSession, d: String,
+  private def admit(s: SparkSession, exec: SparkSession, d: String,
       ex: com.sun.net.httpserver.HttpExchange, requestJson: String,
       admission: java.util.concurrent.Semaphore): Unit =
     if (!admission.tryAcquire()) {
@@ -287,11 +333,11 @@ object ServingHttp {
       respond(ex, 503,
         """{"error":"Server overloaded, retry shortly","retry_after_seconds":1}""")
     } else {
-      try dispatch(s, d, ex, requestJson)
+      try dispatch(s, exec, d, ex, requestJson)
       finally admission.release()
     }
 
-  private def dispatch(s: SparkSession, d: String,
+  private def dispatch(s: SparkSession, exec: SparkSession, d: String,
       ex: com.sun.net.httpserver.HttpExchange, requestJson: String): Unit = {
     // Scheduler FAIRNESS needs per-request POOLS, not just
     // spark.scheduler.mode=FAIR: with no pool set, every job lands in
@@ -308,7 +354,7 @@ object ServingHttp {
       // 200 success / 400 engine-rejected request / 500 engine fault —
       // the classification lives with the engine boundary, not in string
       // inspection here
-      val (status, out) = Serving.handleWithStatus(s, d, requestJson)
+      val (status, out) = Serving.handleWithStatus(s, d, requestJson, exec)
       respond(ex, status, out)
     } finally s.sparkContext.setLocalProperty("spark.scheduler.pool", null)
   }

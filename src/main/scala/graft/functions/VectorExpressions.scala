@@ -51,8 +51,16 @@ trait VectorBinaryArithmetic extends BinaryExpression {
   protected def getter(e: Expression): String =
     if (elementType(e).contains(FloatType)) "getFloat" else "getDouble"
 
-  protected def get(a: ArrayData, e: Expression, i: Int): Double =
-    if (elementType(e).contains(FloatType)) a.getFloat(i).toDouble else a.getDouble(i)
+  // Element types resolved once per expression instance: the interpreted
+  // path (the serving session's) reads every element through these, and
+  // re-matching the child's data type per element cost an Option each.
+  @transient protected lazy val leftFloat: Boolean = elementType(left).contains(FloatType)
+  @transient protected lazy val rightFloat: Boolean = elementType(right).contains(FloatType)
+}
+
+private[functions] object VectorKernels {
+  @inline def at(a: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 }
 
 /** Σ aᵢ·bᵢ in one primitive-array pass. */
@@ -64,8 +72,9 @@ case class DotProductExpr(left: Expression, right: Expression)
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
     val n = a.numElements()
     if (n != b.numElements()) return null
+    val fa = leftFloat; val fb = rightFloat
     var s = 0.0; var i = 0
-    while (i < n) { s += get(a, left, i) * get(b, right, i); i += 1 }
+    while (i < n) { s += VectorKernels.at(a, fa, i) * VectorKernels.at(b, fb, i); i += 1 }
     s
   }
 
@@ -99,9 +108,10 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
     val n = a.numElements()
     if (n != b.numElements()) return null
+    val fa = leftFloat; val fb = rightFloat
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
-      val x = get(a, left, i); val y = get(b, right, i)
+      val x = VectorKernels.at(a, fa, i); val y = VectorKernels.at(b, fb, i)
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
@@ -141,7 +151,7 @@ case class L2NormExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_l2norm"
   override def dataType: DataType = DoubleType
 
-  private def isFloat: Boolean = child.dataType match {
+  @transient private lazy val isFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
@@ -154,9 +164,10 @@ case class L2NormExpr(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData]
+    val f = isFloat
     var s = 0.0; var i = 0; val n = a.numElements()
     while (i < n) {
-      val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val x = VectorKernels.at(a, f, i)
       s += x * x; i += 1
     }
     math.sqrt(s)

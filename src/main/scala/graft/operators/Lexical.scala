@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
@@ -582,7 +584,7 @@ object Lexical {
     val expRows = fuzzyExpCache.computeIfAbsent(
       (s, dir, terms.toList, maxExpansions, auto), _ => {
         graft.SessionSweep.watch(s)
-        val vocab = s.read.parquet(s"$dir/terms").select("term", "df")
+        val vocab = s.read.schema(TermsSchema).parquet(s"$dir/terms").select("term", "df")
         (if (auto) autoFuzzyExpansions(vocab, terms, maxExpansions)
          else fuzzyExpansions(vocab, terms, maxExpansions))
           .select("q_term", "term").collect()
@@ -598,7 +600,7 @@ object Lexical {
       .select("doc_id", "dl", "term", "tf")
     val dfreq = prunedRead(s, dir, "terms", expTerms, buckets)
       .select("term", "df")
-    val stats = s.read.parquet(s"$dir/stats")
+    val stats = readStats(s, dir)
     val pivots = terms.zipWithIndex.map { case (t, i) =>
       max(when(col("q_term") === t, col("s"))).as(s"s_$i")
     }
@@ -724,7 +726,7 @@ object Lexical {
 
   def writeInvertedIndex(docs: DataFrame, id: Column, text: Column,
       dir: String, buckets: Int = IndexBuckets): Unit = {
-    val toks = docs.select(id.as("doc_id"), tokens(text).as("toks"))
+    val toks = docs.select(id.cast("long").as("doc_id"), tokens(text).as("toks"))
     val posts = postings(toks, buckets)
     // cluster rows before the partitioned writes — without it every task
     // opens a file in every bucket dir it has rows for (the guide-§6
@@ -743,6 +745,30 @@ object Lexical {
         sum(size(col("toks"))).cast("double").as("sum_dl"))
       .write.mode("overwrite").parquet(s"$dir/stats")
   }
+
+  /** The fixed schemas of the three index tables, as [[postings]] and
+    * the writers produce them (`bucket` is the partition column, typed
+    * as partition inference types it). Serving reads pass them to the
+    * reader, so no read runs a schema-inference job over the footers. */
+  val PostingsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("dl", DoubleType),
+    StructField("term", StringType), StructField("tf", DoubleType),
+    StructField("positions", ArrayType(IntegerType)),
+    StructField("bucket", IntegerType)))
+  val TermsSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", DoubleType),
+    StructField("bucket", IntegerType)))
+  val StatsSchema: StructType = StructType(Seq(
+    StructField("n_docs", DoubleType), StructField("avgdl", DoubleType),
+    StructField("sum_dl", DoubleType)))
+
+  /** The bucket of `term` in a `buckets`-way layout, computed on the
+    * driver by evaluating the very expression [[postings]] writes with
+    * (`pmod(xxhash64(term), buckets)`, Spark's seed 42), so the ids are
+    * bit-identical by construction and routing runs no Spark job. */
+  private[graft] def bucketOf(term: String, buckets: Int): Long =
+    Pmod(new XxHash64(Seq(Literal(term))), Literal(buckets.toLong))
+      .eval().asInstanceOf[Long]
 
   /** Crash-safe table rewrite (the Compact swap pattern): stage the new
     * contents (the staging job may still READ `path` — it is untouched
@@ -818,7 +844,7 @@ object Lexical {
     // on PATH_NOT_FOUND without ever reaching the swap's own self-heal
     healIndex(s, dir)
     invalidateFuzzyExpansions(dir) // vocabulary/df change below
-    val toks = docs.select(id.as("doc_id"), tokens(text).as("toks"))
+    val toks = docs.select(id.cast("long").as("doc_id"), tokens(text).as("toks"))
     val posts = postings(toks, buckets)
       .localCheckpoint() // one computation feeds both the append and the df merge
     if (requireDisjoint) {
@@ -862,16 +888,15 @@ object Lexical {
     }
   }
 
-  /** BM25 served from a [[writeInvertedIndex]] layout: the query terms'
-    * bucket ids become PartitionFilters (≤ |Q| of `buckets` directories
-    * read) and the term equality a PushedFilter inside them — corpus
-    * text is never touched. Bit-identical to [[bm25Scores]] (shared
-    * [[score]] tail; parity spec-pinned). */
   /** Shared index-serving preamble: heal interrupted swaps, compute the
-    * query terms' bucket ids via the same xxhash64 (one job over a
-    * |Q|-row local relation, no index read), and open a bucket-partitioned
-    * index table with the bucket PartitionFilter + term PushedFilter
-    * applied — every index-served query path (BM25, phrase, proximity)
+    * query terms' bucket ids on the driver ([[bucketOf]]), and open only
+    * those `bucket=<b>` leaf dirs that exist, with the table's fixed
+    * schema, with the bucket PartitionFilter + term PushedFilter applied.
+    * Neither routing, listing nor schema resolution runs a Spark job;
+    * opening the table root instead would list every bucket dir (a
+    * parallel listing job past 32 dirs) and infer the schema in another
+    * job, on every call.
+    * Every index-served query path (BM25, fuzzy, phrase, proximity)
     * reads through here so the pruning logic has exactly one definition. */
   private def prunedRead(s: SparkSession, dir: String, table: String,
       terms: Seq[String], buckets: Int): DataFrame = {
@@ -881,11 +906,17 @@ object Lexical {
     // be visible to this very read
     if (table == "postings")
       graft.sources.Tombstones.healPartitions(s, s"$dir/postings")
-    import s.implicits._
-    val bIds = terms.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .distinct().as[Long].collect().toSeq
-    val read = s.read.parquet(s"$dir/$table")
+    val bIds = terms.map(bucketOf(_, buckets)).distinct
+    val root = new org.apache.hadoop.fs.Path(s"$dir/$table")
+    val f = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val leaves = bIds.map(b => new org.apache.hadoop.fs.Path(root, s"bucket=$b"))
+      .filter(f.exists).map(_.toString)
+    val schema = if (table == "postings") PostingsSchema else TermsSchema
+    // a bucket no indexed term hashes to has no dir: its terms match nothing
+    val all =
+      if (leaves.isEmpty) s.createDataFrame(java.util.List.of[Row](), schema)
+      else s.read.schema(schema).option("basePath", root.toString).parquet(leaves: _*)
+    val read = all
       .filter(col("bucket").isin(bIds: _*) && col("term").isin(terms: _*))
     // Lucene liveDocs semantics for takedowns ([[deleteFromIndex]]):
     // deleted docs' postings are filtered out of EVERY index-served
@@ -973,6 +1004,11 @@ object Lexical {
     }
   }
 
+  /** BM25 served from a [[writeInvertedIndex]] layout: the query terms'
+    * bucket ids become PartitionFilters (≤ |Q| of `buckets` directories
+    * listed and read) and the term equality a PushedFilter inside them —
+    * corpus text is never touched. Bit-identical to [[bm25Scores]]
+    * (shared [[score]] tail; parity spec-pinned). */
   def bm25FromIndex(s: SparkSession, dir: String,
       rawTerms: Seq[String] = QueryTerms,
       buckets: Int = IndexBuckets): DataFrame = {
@@ -982,9 +1018,12 @@ object Lexical {
       .select("doc_id", "dl", "term", "tf")
     val dfreq = prunedRead(s, dir, "terms", terms, buckets)
       .select("term", "df")
-    val stats = s.read.parquet(s"$dir/stats")
-    score(posts, dfreq, stats, terms)
+    score(posts, dfreq, readStats(s, dir), terms)
   }
+
+  /** The one-row corpus stats table, read with its fixed schema. */
+  private def readStats(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(StatsSchema).parquet(s"$dir/stats")
 
   /** The benchmark phrase (occurs in the corpus, some docs twice). */
   val Phrase: Seq[String] = Seq("hash", "join")

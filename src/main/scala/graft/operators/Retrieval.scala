@@ -1341,8 +1341,9 @@ object Retrieval {
       case "lexical" => // beyond-reference: deterministic BM25 (portable ES _score)
         require(req.terms.nonEmpty, "lexical mode needs non-empty 'terms'")
         // served from the at-rest index (r19): per request only the query
-        // terms' bucket dirs are read — bit-identical to the ad-hoc scan
-        // on a fresh per-JVM index (search_bm25_idx's oracle contract)
+        // terms' bucket dirs are listed and read, routed on the driver
+        // without a Spark job — bit-identical to the ad-hoc scan on a
+        // fresh per-JVM index (search_bm25_idx's oracle contract)
         Lexical.bm25Serve(s, d, req.terms)
           .orderBy(desc("score"), asc("doc_id")).limit(req.k)
       case "rrf" => // beyond-reference: ES-style hybrid rank fusion

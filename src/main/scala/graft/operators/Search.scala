@@ -372,7 +372,7 @@ object Search {
     val tomb0 = tombFiles(pathP)
     val applied: Option[DataFrame] =
       if (tomb0.isEmpty) None
-      else Some(s.read.parquet(tomb0.toSeq.sorted
+      else Some(s.read.schema(graft.sources.Tombstones.Schema).parquet(tomb0.toSeq.sorted
         .map(n => s"${tombRoot}/$n"): _*).distinct())
     def dropApplied(df: DataFrame): DataFrame = applied match {
       case Some(t) => df.join(t, id === t("id"), "left_anti")
@@ -1575,7 +1575,7 @@ object Search {
     val tomb0 = tombFiles(pathP)
     val applied: Option[DataFrame] =
       if (tomb0.isEmpty) None
-      else Some(s.read.parquet(tomb0.toSeq.sorted
+      else Some(s.read.schema(graft.sources.Tombstones.Schema).parquet(tomb0.toSeq.sorted
         .map(n => s"${graft.sources.Tombstones.dir(indexPath)}/$n"): _*)
         .select(col("id").as("__t")).distinct())
     var seen = nodeFiles(pathP)

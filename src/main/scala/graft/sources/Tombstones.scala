@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Takedown tombstones for the at-rest index layouts — the
   * right-to-be-forgotten half of index maintenance that the append paths
@@ -35,6 +36,11 @@ object Tombstones {
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
+  /** The store's fixed schema, as [[add]] writes it: reads pass it to
+    * the reader, so a probe of a tombstoned index runs no
+    * schema-inference job over the store's footers. */
+  val Schema: StructType = StructType(Seq(StructField("id", LongType)))
+
   /** Record `idCol` of `ids` as deleted. O(|ids|) — no index data file
     * is touched; serving excludes the ids immediately (every probe path
     * filters through [[dropDeleted]]) and compaction reclaims the space
@@ -50,7 +56,7 @@ object Tombstones {
     * with no deletes pays nothing for the capability). */
   def ids(s: SparkSession, indexDir: String): Option[DataFrame] = {
     val p = new Path(dir(indexDir))
-    if (fs(s, p).exists(p)) Some(s.read.parquet(dir(indexDir)).distinct())
+    if (fs(s, p).exists(p)) Some(s.read.schema(Schema).parquet(dir(indexDir)).distinct())
     else None
   }
 

@@ -7,15 +7,23 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** The handful of `private[sql]` internals graft's deferred-view leaf
-  * needs, exposed through the standard library-shim pattern (a tiny
-  * object compiled into the `org.apache.spark.sql` package — the same
-  * technique public Spark connectors use). Everything here is a thin
-  * forwarder; all logic lives in `graft.plans.DeferredView`.
+  * and serving session need, exposed through the standard library-shim
+  * pattern (a tiny object compiled into the `org.apache.spark.sql`
+  * package — the same technique public Spark connectors use). Everything
+  * here is a thin forwarder; all logic lives in `graft.plans.DeferredView`
+  * and `graft.ServingHttp`.
   */
 object GraftSqlShim {
 
   private def classicSession(s: SparkSession): classic.SparkSession =
     s.asInstanceOf[classic.SparkSession]
+
+  /** A child session of `s`: same SparkContext, shared state and cache
+    * manager, and a snapshot of `s`'s SQL conf, function registry, temp
+    * views and experimental strategies taken now (`cloneSession`). Later
+    * changes to either session do not reach the other. */
+  def cloneSession(s: SparkSession): SparkSession =
+    classicSession(s).cloneSession()
 
   /** Wrap a logical plan as a DataFrame (`Dataset.ofRows`). */
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =

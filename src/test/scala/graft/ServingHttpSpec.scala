@@ -3,6 +3,7 @@ package graft
 import java.net.{HttpURLConnection, URI}
 
 import graft.SparkSpec
+import graft.operators.Retrieval
 
 /** Drives [[ServingHttp]] over REAL sockets: every route's body must be
   * byte-identical to the pure function it wraps, and the status-code /
@@ -251,5 +252,68 @@ class ServingHttpSpec extends SparkSpec {
       val (hs, _) = req(port, "GET", "/health")
       assert(hs === 200)
     } finally srv.stop(0)
+  }
+
+  // --- the interpreted serving session ------------------------------------
+
+  /** Request `i` of a mode, with ids and terms that differ per `i`. */
+  private def keyed(mode: String, i: Int): String = {
+    val terms = Seq(Seq("hash", "merge"), Seq("vector", "stream"), Seq("sort", "window"),
+      Seq("scan", "column"), Seq("batch", "spark"))(i % 5)
+    val typo = terms.map(t => t.dropRight(1) + "x") // one substitution each
+    def arr(ts: Seq[String]) = ts.map(t => s""""$t"""").mkString("[", ",", "]")
+    val id = 1 + 7 * i
+    mode match {
+      case "tags" => s"""{"mode":"tags","top_k":5,"tags":["lbl_${i % 10}","lbl_${(i + 3) % 10}"]}"""
+      case "lexical" | "rrf" =>
+        s"""{"mode":"$mode","top_k":5,"terms":${arr(terms)},"query_image_id":$id}"""
+      case "fuzzy" => s"""{"mode":"fuzzy","top_k":5,"terms":${arr(typo)}}"""
+      case m => s"""{"mode":"$m","top_k":5,"query_image_id":$id}"""
+    }
+  }
+
+  test("serving session: every mode's body equals Retrieval.run collected on the compiled session") {
+    withServer { port =>
+      for (mode <- ServingHttp.OrderedModes; i <- 0 until 3) {
+        val json = keyed(mode, i)
+        val (status, body) = post(port, "/api/search", json)
+        val r = Serving.parseRequest(json)
+        val rows = Retrieval.run(spark, d, r).toJSON.collect()
+        val want = s"""{"mode":"$mode","top_k":${r.k},"results":[${rows.mkString(",")}]}"""
+        assert(status === 200, body)
+        assert(rows.nonEmpty, s"$mode request $i must return rows")
+        assert(body === want, s"$mode request $i")
+      }
+    }
+  }
+
+  test("serving session: a warm round of fresh requests compiles no class") {
+    // Spark's codegen cache holds 100 classes and the mode mix needs more,
+    // so a compiled serving path compiles on every round; the interpreted
+    // serving session must compile nothing once the per-JVM builds are done
+    val modes = Seq("whole", "tags", "segment", "hybrid", "maxsim", "graph", "lexical")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    withServer { port =>
+      def round(i: Int): Unit = modes.foreach { m =>
+        val (status, body) = post(port, "/api/search", keyed(m, i))
+        assert(status === 200, s"$m: $body")
+      }
+      round(3) // warm: per-JVM builds, memos and pools
+      val before = compiles.getCount
+      round(4)
+      assert(compiles.getCount - before === 0L,
+        s"a warm round compiled ${compiles.getCount - before} class(es)")
+    }
+  }
+
+  test("serving session: a snapshot of the caller's session, interpreted, leaving the caller's conf alone") {
+    val exec = ServingHttp.servingSession(spark)
+    assert(!(exec eq spark) && (exec.sparkContext eq spark.sparkContext))
+    assert(exec.conf.get("spark.sql.codegen.wholeStage") === "false")
+    assert(exec.conf.get("spark.sql.codegen.factoryMode") === "NO_CODEGEN")
+    assert(spark.conf.get("spark.sql.codegen.wholeStage") === "true")
+    assert(spark.conf.get("spark.sql.codegen.factoryMode") === "FALLBACK")
+    assert(exec.conf.get("spark.sql.shuffle.partitions") ===
+      spark.conf.get("spark.sql.shuffle.partitions"))
   }
 }

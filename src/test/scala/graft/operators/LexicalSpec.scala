@@ -639,4 +639,104 @@ class LexicalSpec extends SparkSpec {
     got.foreach { case (id, c, n) => assert(n === sizes(c), s"doc $id comp_size") }
     assert(got.nonEmpty, "sf0.001 has planted near-dups")
   }
+
+  // --- index routing and reads without Spark jobs -------------------------
+
+  private def rmTree(f: java.io.File): Unit = {
+    val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree); f.delete()
+  }
+
+  test("bucketOf: driver-side bucket ids equal Spark's pmod(xxhash64(term), n)") {
+    // the whole sf0.01 vocabulary, tokenized as the index tokenizes it,
+    // plus non-ASCII terms; both sides run through a scan so Spark's
+    // side is the generated code the index writers run
+    val vocab = graft.Tables.documents(spark, new java.io.File(sf).getParent + "/sf0.01")
+      .select(explode(graft.functions.TextFunctions.tokens($"text")).as("term"))
+      .distinct()
+    val odd = Seq("café", "naïve", "straße", "日本語", "привет", "😀x", "", " ")
+    val oddDf = spark.range(odd.size)
+      .select(element_at(typedlit(odd), $"id".cast("int") + 1).as("term"))
+    val synthetic = spark.range(2000).select(concat(lit("w"), $"id").as("term"))
+    val terms = vocab.unionByName(oddDf).unionByName(synthetic)
+    Seq(2, 32, 64).foreach { n =>
+      val got = terms.select($"term", pmod(xxhash64($"term"), lit(n.toLong)))
+        .as[(String, Long)].collect()
+      assert(got.length >= 2000 + odd.size + 20, s"too few terms: ${got.length}")
+      got.foreach { case (t, b) =>
+        assert(Lexical.bucketOf(t, n) === b, s"term '$t' at n=$n")
+      }
+    }
+  }
+
+  /** A 64-bucket index over two short docs: most bucket dirs are missing. */
+  private def sparseIndex(dir: String): Unit =
+    Lexical.writeInvertedIndex(
+      Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+      $"doc_id", $"text", dir)
+
+  /** A term whose bucket has no dir in `dir`'s postings. */
+  private def unroutedTerm(dir: String): String = {
+    val present = new java.io.File(s"$dir/postings").listFiles()
+      .map(_.getName).filter(_.startsWith("bucket=")).toSet
+    Iterator.from(0).map(i => s"zz$i")
+      .find(t => !present(s"bucket=${Lexical.bucketOf(t, Lexical.IndexBuckets)}")).get
+  }
+
+  test("index read: a term routed to a missing bucket dir returns no rows, no PATH_NOT_FOUND") {
+    val dir = java.nio.file.Files.createTempDirectory("lex_missing").toString
+    try {
+      sparseIndex(s"$dir/idx")
+      val t = unroutedTerm(s"$dir/idx")
+      assert(Lexical.bm25FromIndex(spark, s"$dir/idx", Seq(t)).collect().isEmpty)
+      assert(Lexical.phraseFromIndex(spark, s"$dir/idx", Seq(t, "zz_other")).collect().isEmpty)
+      // a routed term beside it still scores
+      assert(Lexical.bm25FromIndex(spark, s"$dir/idx", Seq(t, "gamma"))
+        .as[(Long, Double)].collect().map(_._1).toSeq === Seq(2L))
+    } finally rmTree(new java.io.File(dir))
+  }
+
+  test("index read: after appendToIndex into a previously empty bucket, the new doc is found") {
+    val dir = java.nio.file.Files.createTempDirectory("lex_newbucket").toString
+    try {
+      sparseIndex(s"$dir/idx")
+      val t = unroutedTerm(s"$dir/idx")
+      assert(Lexical.bm25FromIndex(spark, s"$dir/idx", Seq(t)).collect().isEmpty)
+      Lexical.appendToIndex(Seq((3L, s"beta $t")).toDF("doc_id", "text"),
+        $"doc_id", $"text", s"$dir/idx")
+      assert(Lexical.bm25FromIndex(spark, s"$dir/idx", Seq(t))
+        .as[(Long, Double)].collect().map(_._1).toSeq === Seq(3L))
+    } finally rmTree(new java.io.File(dir))
+  }
+
+  test("a warm lexical Retrieval.run launches no Spark job") {
+    val sc = spark.sparkContext
+    def req(terms: String*) = Retrieval.SearchRequest("lexical", k = 5, terms = terms)
+    Retrieval.run(spark, sf, req("hash", "merge")).collect() // builds the per-JVM index
+    val group = s"lex-warm-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "warm lexical build")
+      val df = Retrieval.run(spark, sf, req("vector", "window", "slow"))
+      // the listener bus delivers in order: once a later job's start
+      // arrives, every job the build launched has been counted
+      sc.setJobGroup(group + "-marker", "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() === 0, s"building the lexical request ran ${jobs.get()} job(s)")
+      assert(df.collect().length === 5)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
