@@ -131,10 +131,8 @@ object Serving {
       case Right(r) =>
         try {
           val df = Retrieval.run(s, d, r)
-          val onExec =
-            if (exec eq s) df
-            else GraftSqlShim.ofRows(exec, GraftSqlShim.analyzed(df))
-          val rows = onExec.toJSON.collect()
+          val rows = GraftSqlShim.ofRows(exec, GraftSqlShim.analyzed(df))
+            .toJSON.collect()
           (200,
             s"""{"mode":${quote(r.mode)},"top_k":${r.k},"results":[${rows.mkString(",")}]}""")
         } catch {

@@ -14,9 +14,11 @@ It prints every pair, then for each end-to-end metric of BENCHMARK.json
 each side's median and quartiles, how many pairs the change won (ties
 count for neither side) and the change of the medians against the
 parent's interquartile range and against the metric's bound. A gain in
-the `--metric` is claimed only when the change won at least nine tenths
-of the pairs and the medians differ by more than the parent's
-interquartile range. Nothing under perfbench/ is edited.
+`cpu_s_per_op` is claimed only when the change won at least nine tenths
+of all pairs run (a pair in which either side errored is a loss), the
+medians differ by more than the parent's interquartile range, and the
+change had no more errored or incorrect runs and no more failed ops than
+the parent. Nothing under perfbench/ is edited.
 """
 import argparse
 import json
@@ -29,6 +31,7 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CLAIMED = "cpu_s_per_op"  # the end-to-end metric a gain is claimed on
 
 
 def export(rev, dest):
@@ -63,13 +66,21 @@ def quartiles(v):
     return q1, statistics.median(v), q3
 
 
-def summarise(spec, pairs, claimed):
+def summarise(spec, pairs, total):
+    """The table of every end-to-end metric and the verdict on CLAIMED.
+
+    Wins are counted over all `total` pairs: a pair in which either side
+    errored counts as a loss for the change. Medians and quartiles are
+    taken over the pairs in which both sides produced metrics."""
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     ok = [p for p in pairs if "metrics" in p["parent"] and "metrics" in p["change"]]
-    lines = [f"{len(ok)} of {len(pairs)} pairs complete; runs not correct: parent "
-             f"{sum(1 for p in ok if not p['parent']['correct'])}, change "
-             f"{sum(1 for p in ok if not p['change']['correct'])}", "",
+    bad = {s: sum(1 for p in pairs if not p[s].get("correct")) + total - len(pairs)
+           for s in ("parent", "change")}
+    failed = {s: sum(p[s].get("failed", 0) for p in pairs) for s in ("parent", "change")}
+    lines = [f"{len(ok)} of {total} pairs complete; runs errored or not correct: parent "
+             f"{bad['parent']}, change {bad['change']}; failed ops: parent {failed['parent']}, "
+             f"change {failed['change']}", "",
              "| metric | parent median [Q1, Q3] | change median [Q1, Q3] | change | "
              "change wins | median diff > parent IQR | within bound |",
              "|---|---|---|---|---|---|---|"]
@@ -87,15 +98,16 @@ def summarise(spec, pairs, claimed):
         beyond_iqr = abs(diff) > (aq3 - aq1)
         worse = -sign * diff / amed if amed else 0.0
         lines.append(f"| {name} | {amed:.4g} [{aq1:.4g}, {aq3:.4g}] | {bmed:.4g} [{bq1:.4g}, {bq3:.4g}] | "
-                     f"{diff / amed * 100 if amed else 0:+.1f} % | {wins}/{len(ok)} | "
+                     f"{diff / amed * 100 if amed else 0:+.1f} % | {wins}/{total} | "
                      f"{'yes' if beyond_iqr else 'no'} | {'yes' if worse <= bounds[name] else 'NO'} |")
-        if name == claimed:
-            verdict = (wins >= 0.9 * len(ok) and sign * diff > 0 and beyond_iqr, wins, len(ok))
-    if verdict is not None:
-        won, wins, n = verdict
-        lines += ["", f"{claimed}: change won {wins}/{n} pairs; gain "
-                  f"{'claimed' if won else 'NOT shown'} (needs >= 9/10 of pairs and a median "
-                  "difference beyond the parent's interquartile range)"]
+        if name == CLAIMED:
+            verdict = (wins >= 0.9 * total and sign * diff > 0 and beyond_iqr, wins)
+    won, wins = verdict if verdict is not None else (False, 0)
+    won = won and bad["change"] <= bad["parent"] and failed["change"] <= failed["parent"]
+    lines += ["", f"{CLAIMED}: change won {wins}/{total} pairs; gain "
+              f"{'claimed' if won else 'NOT shown'} (needs >= 9/10 of all pairs, a median "
+              "difference beyond the parent's interquartile range, and no more errored, "
+              "incorrect runs or failed ops than the parent)"]
     return "\n".join(lines)
 
 
@@ -105,9 +117,7 @@ def main():
     p.add_argument("--workload", required=True)
     p.add_argument("--pairs", type=int, default=10)
     p.add_argument("--seed", type=int, default=1, help="seed of the first pair; pair i uses seed + i")
-    p.add_argument("--metric", default="cpu_s_per_op", help="the end-to-end metric a gain is claimed on")
     p.add_argument("--workdir", help="directory for the parent's copy (default: a new temporary directory)")
-    p.add_argument("--out", help="append each pair as one JSON line to this file")
     args = p.parse_args()
     spec = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     if args.workload not in [w["name"] for w in spec["workloads"]]:
@@ -127,18 +137,15 @@ def main():
             for side in order:
                 pair[side] = run(sides[side], args.workload, seed, seconds)
             pairs.append(pair)
-            if args.out:
-                with open(args.out, "a") as fh:
-                    fh.write(json.dumps(pair) + "\n")
-            vals = {s: pair[s].get("metrics", {}).get(args.metric, {}).get("value") for s in order}
+            vals = {s: pair[s].get("metrics", {}).get(CLAIMED, {}).get("value") for s in order}
             steal = {s: pair[s].get("env", {}).get("steal_s") for s in order}
-            print(f"pair {i} seed {seed} first {order[0]}: {args.metric} parent {vals['parent']} "
+            print(f"pair {i} seed {seed} first {order[0]}: {CLAIMED} parent {vals['parent']} "
                   f"change {vals['change']} (steal_s parent {steal['parent']}, change {steal['change']})",
                   flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print()
-    print(summarise(spec, pairs, args.metric))
+    print(summarise(spec, pairs, args.pairs))
 
 
 if __name__ == "__main__":
