@@ -10,8 +10,8 @@ runs `perfbench/run.py` once in each checkout with the same seed and the
 benchmark's `run_seconds`; which side goes first alternates from pair to
 pair, so drift of the box over the sequence touches both sides alike.
 
-It prints every pair, then for each end-to-end metric of BENCHMARK.json
-each side's median and quartiles, how many pairs the change won (ties
+It prints every pair's end-to-end metrics, then for each end-to-end
+metric of BENCHMARK.json each side's median and quartiles, how many pairs the change won (ties
 count for neither side) and the change of the medians against the
 parent's interquartile range and against the metric's bound. A gain in
 `cpu_s_per_op` is claimed only when the change won at least nine tenths
@@ -137,11 +137,13 @@ def main():
             for side in order:
                 pair[side] = run(sides[side], args.workload, seed, seconds)
             pairs.append(pair)
-            vals = {s: pair[s].get("metrics", {}).get(CLAIMED, {}).get("value") for s in order}
-            steal = {s: pair[s].get("env", {}).get("steal_s") for s in order}
-            print(f"pair {i} seed {seed} first {order[0]}: {CLAIMED} parent {vals['parent']} "
-                  f"change {vals['change']} (steal_s parent {steal['parent']}, change {steal['change']})",
-                  flush=True)
+            print(f"pair {i} seed {seed} first {order[0]}", flush=True)
+            for side in ("parent", "change"):
+                r = pair[side]
+                vals = " ".join(f"{m['name']} {r['metrics'][m['name']]['value']:.4g}"
+                                for m in spec["end_to_end"] if m["name"] in r.get("metrics", {}))
+                print(f"  {side}: correct {r.get('correct')} failed {r.get('failed')} "
+                      f"steal_s {r.get('env', {}).get('steal_s')} {vals}", flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print()
