@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Scratch
+
 /** One-off scale-stress evidence (`BENCH_scale.json`): replicate the
   * sf0.1 `documents`/`embeddings` tables 10× and time the four heaviest
   * queries at 1× and 10×. Pass condition = time grows ≤ ~linearly in
@@ -242,12 +244,8 @@ object ScaleBench {
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
   locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      scratchDirs.forEach(dir => rm(new java.io.File(dir)))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach(dir => Scratch.rm(new java.io.File(dir)))))
   }
 
   /** The k ∝ N blocked-kNN edge build every graph_* scale arm shares
@@ -592,10 +590,7 @@ object ScaleBench {
       val cents = Search.kmeansTrain(e, col("vec_id"), col("embedding"), k,
         iters = 3).localCheckpoint()
       val idx = s"$scratch/__ivf_${Integer.toHexString(d.hashCode)}/idx"
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(idx)) // always fresh — never a stale-code layout
+      Scratch.rm(new java.io.File(idx)) // always fresh — never a stale-code layout
       Search.writeIvfIndex(e, col("embedding"), cents, idx) // build UNTIMED
       val q0 = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("qv")).localCheckpoint()
@@ -604,10 +599,7 @@ object ScaleBench {
     }
     def bm25ProbeSec(d: String): Double = {
       val idx = s"$scratch/__bm25_${Integer.toHexString(d.hashCode)}/idx"
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      rm(new java.io.File(idx))
+      Scratch.rm(new java.io.File(idx))
       Lexical.writeInvertedIndex(Tables.documents(s, d), // build UNTIMED
         col("doc_id"), col("text"), idx)
       median3(Lexical.bm25FromIndex(s, idx)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.plans.Scratch
 
 /** Training-data curation operators beyond the reference's own surface —
   * the standard pre-training corpus hygiene passes (Gopher/C4-style
@@ -454,22 +455,6 @@ object Curation {
       .orderBy("doc_id")
   }
 
-  /** Per-JVM at-rest eval-signature index cache (the Dedup sigIdxCache
-    * pattern): testdata dirs are immutable, so one build serves every
-    * invocation and Bench reps measure the PROBE path — which is what
-    * production repeats: the benchmark suite is signed ONCE, every
-    * training batch afterwards probes it. */
-  private val fuzzyIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      fuzzyIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-    }))
-  }
-
   /** [[curateDecontamFuzzy]] served from the AT-REST MinHash signature
     * index ([[Dedup.writeMinhashIndex]]) built over the HELD-OUT set —
     * the 100 TB shape: the benchmark suite (the small, slowly-changing
@@ -484,12 +469,11 @@ object Curation {
   def curateDecontamFuzzyIdx(s: SparkSession, d: String): DataFrame = {
     val docs = Dedup.blocked(s, d)
     val isTest = graft.functions.HashFunctions.md5Bucket16(col("doc_id")) === "0"
-    val dir = fuzzyIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fz_idx").toString
+    val dir = Scratch.dir(s, s"fzidx|$d") { tmp =>
       Dedup.writeMinhashIndex(docs.filter(isTest), col("doc_id"),
         col("text"), col("blk"), tmp, shingleN = 3)
       tmp
-    })
+    }
     val cands = Dedup.probeMinhashIndex(docs.filter(!isTest),
       col("doc_id"), col("text"), col("blk"), dir)
       .select("doc_a", "doc_b")
@@ -543,16 +527,16 @@ object Curation {
     train.select(id.as("doc_id")).join(bad, Seq("doc_id"), "left_anti")
   }
 
-  /** Per-(SparkContext, dataset) Bloom handle cache — the
-    * [[fuzzyIdxCache]] discipline applied to broadcasts: the benchmark
+  /** Per-(SparkContext, dataset) Bloom handle cache — the at-rest
+    * indexes' build-once discipline applied to broadcasts: the benchmark
     * set is signed ONCE per JVM and every later invocation (each Bench
     * rep ran TWO extra jobs and leaked a fresh TorrentBroadcast before
     * this) reuses the bits. Keyed by applicationId because a broadcast
     * dies with its SparkContext — a cached handle from a stopped
     * context must not be served to a new one (the stale registry entry
     * is a map row, not a leak of bits). */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.FutureTask[String]]()
 
   /** [[curateDecontam]] through the Bloom-prefiltered probe — survivors
     * bit-identical by the no-false-negative argument, so it shares that
@@ -565,7 +549,7 @@ object Curation {
     def sh(c: Column) =
       graft.functions.TextExpressions.shingleHashes(s, tokens(c), 5)
     val key = s"${s.sparkContext.applicationId}|$d|n=5|fpp=0.001"
-    val handle = bloomCache.computeIfAbsent(key, _ =>
+    val handle = Scratch.once(bloomCache, key)(
       graft.functions.BloomFilters.build(
         docs.filter(isTest).select(explode(sh(col("text"))).as("sh")).distinct(),
         col("sh"), fpp = 0.001))
@@ -629,7 +613,7 @@ object Curation {
     * four bindings each re-ran the tokenize + two-level prefix-sum
     * pipeline before. Values unchanged (same deterministic rows). */
   private def packedDocs(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"exportpacks|$d") {
+    Scratch.frame(s, s"exportpacks|$d") {
       packSequences(
         Tables.documents(s, d)
           .withColumn("n_tokens", size(tokens(col("text"))).cast("long")),

@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.TextExpressions
 import graft.functions.TextFunctions._
 import graft.functions.VectorExpressions.fusedCosine
+import graft.plans.Scratch
 
 /** Deduplication suite for training-data pipelines: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash, and embedding near-dup — exposed as a GENERIC
@@ -944,29 +945,6 @@ object Dedup {
     verifyJaccard(s, docs, cands, minJac = 0.5)
   }
 
-  /** Per-JVM at-rest signature index cache: sfDir → index dir — the
-    * [[graft.operators.Retrieval]] ivfCache pattern: testdata dirs are
-    * immutable, so one build serves every invocation and Bench reps
-    * measure the PROBE path (what production repeats), with scratch dirs
-    * removed on JVM exit. */
-  private val sigIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** A SEPARATE signature index with [[CrossDeletedIds]] tombstoned —
-    * never the shared [[sigIdxCache]] one, whose probes must stay
-    * delete-free for `dedup_cross_idx`. */
-  private val sigDelIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      sigIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-      sigDelIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-    }))
-  }
-
   /** [[crossNearDup]] served from the AT-REST signature index — the
     * 100 TB shape of incremental dedup: the existing corpus
     * (doc_id % 4 ≠ 0) is signed and band-bucketed ONCE
@@ -977,12 +955,11 @@ object Dedup {
     * are identical to the in-plan [[crossNearDup]] (recall-1 at the
     * verify threshold, see that doc). */
   def crossNearDupIdx(s: SparkSession, d: String): DataFrame = {
-    val dir = sigIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sig_idx").toString
+    val dir = Scratch.dir(s, s"sig|$d") { tmp =>
       writeMinhashIndex(blocked(s, d).filter(col("doc_id") % 4 =!= 0),
         col("doc_id"), col("text"), col("blk"), tmp, shingleN = 3)
       tmp
-    })
+    }
     val cands = probeMinhashIndex(
       blocked(s, d).filter(col("doc_id") % 4 === 0),
       col("doc_id"), col("text"), col("blk"), dir)
@@ -1006,14 +983,13 @@ object Dedup {
     * doc 450); at larger SFs the surviving pairs hash-check. The
     * physical half ([[compactMinhashIndex]]) is `DedupIndexSpec`'s. */
   def crossNearDupIdxDel(s: SparkSession, d: String): DataFrame = {
-    val dir = sigDelIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sig_del").toString
+    val dir = Scratch.dir(s, s"sigdel|$d") { tmp =>
       writeMinhashIndex(blocked(s, d).filter(col("doc_id") % 4 =!= 0),
         col("doc_id"), col("text"), col("blk"), tmp, shingleN = 3)
       import s.implicits._
       deleteFromMinhashIndex(CrossDeletedIds.toDF("doc_id"), col("doc_id"), tmp)
       tmp
-    })
+    }
     val cands = probeMinhashIndex(
       blocked(s, d).filter(col("doc_id") % 4 === 0),
       col("doc_id"), col("text"), col("blk"), dir)
@@ -1023,27 +999,25 @@ object Dedup {
 
   /** The INDEX BUILD cost of [[crossNearDupIdx]], benched as its own row
     * (the same split `knn_ivfpq` made for the IVFADC build in r8): the
-    * per-JVM [[sigIdxCache]] keeps `dedup_cross_idx`'s number the PROBE
+    * per-JVM [[Scratch.dir]] memo keeps `dedup_cross_idx`'s number the PROBE
     * path production repeats, and this row measures the once-per-corpus
     * [[writeMinhashIndex]] job — sign the lake side, band, hash-partition
     * into bucket dirs — which at 100 TB is a scheduled build, not a
     * per-query cost. Every invocation builds FRESH into its own scratch
-    * dir (no cache) so each bench rep times a real build. The output is
-    * the build's audit summary read back FROM the written layout —
-    * distinct docs signed and total band rows — which a decode-free
-    * oracle checks as counting arithmetic (band_rows = docs × 16 bands),
-    * pinning that the build signed every lake doc exactly once per band. */
+    * dir (no memo, removed when the row returns or throws) so each bench
+    * rep times a real build. The output is the build's audit summary
+    * read back FROM the written layout — distinct docs signed and total
+    * band rows — which a decode-free oracle checks as counting
+    * arithmetic (band_rows = docs × 16 bands), pinning that the build
+    * signed every lake doc exactly once per band. */
   def crossIdxBuild(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sig_build").toString
-    writeMinhashIndex(blocked(s, d).filter(col("doc_id") % 4 =!= 0),
-      col("doc_id"), col("text"), col("blk"), tmp, shingleN = 3)
-    val r = s.read.parquet(s"$tmp/bands")
-      .agg(countDistinct(col("doc_id")).as("docs_signed"),
-        count(lit(1)).as("band_rows")).head()
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
+    val r = Scratch.tempDir(s) { tmp =>
+      writeMinhashIndex(blocked(s, d).filter(col("doc_id") % 4 =!= 0),
+        col("doc_id"), col("text"), col("blk"), tmp, shingleN = 3)
+      s.read.parquet(s"$tmp/bands")
+        .agg(countDistinct(col("doc_id")).as("docs_signed"),
+          count(lit(1)).as("band_rows")).head()
     }
-    rm(new java.io.File(tmp))
     import s.implicits._
     Seq((r.getLong(0), r.getLong(1))).toDF("docs_signed", "band_rows")
   }
@@ -1114,19 +1088,6 @@ object Dedup {
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos"))
       .orderBy(desc("cos"), asc("vec_a"), asc("vec_b")).limit(50)
 
-  /** Per-JVM at-rest hyperplane index cache ([[sigIdxCache]] rationale:
-    * immutable testdata dirs; one build, probe-path measurements). */
-  private val hplIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      hplIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-    }))
-  }
-
   /** [[embeddingNearDupLsh]] served from the AT-REST hyperplane index
     * at the same recall-1 32×2 band config — the r13-verdict ask: the
     * embedding family's meter (`dedup_embedding_lsh_prod`) now has an
@@ -1140,12 +1101,11 @@ object Dedup {
     * meter. */
   def embeddingNearDupLshIdx(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val dir = hplIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hpl_idx").toString
+    val dir = Scratch.dir(s, s"hpl|$d") { tmp =>
       writeHyperplaneIndex(emb, col("vec_id"), col("embedding"), tmp,
         nbits = 64, bands = 32)
       tmp
-    })
+    }
     val cands = probeHyperplaneIndex(emb, col("vec_id"), col("embedding"), dir)
       .filter(col("vec_a") < col("vec_b"))
     val base = emb.select(col("vec_id"), col("embedding").as("__v"))
@@ -1219,26 +1179,6 @@ object Dedup {
         col("dup_of"))
       .orderBy("vec_id")
 
-  /** Per-JVM at-rest lake-IVF index for `dedup_semantic_incr_idx` (the
-    * [[sigIdxCache]] rationale: testdata dirs are immutable; one build,
-    * probe-path measurements). */
-  private val semIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** A SEPARATE lake index with [[SemDeletedIds]] tombstoned — never the
-    * shared [[semIdxCache]] one, whose probes must stay delete-free. */
-  private val semDelIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      semIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-      semDelIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-    }))
-  }
-
   /** The `vec_id % 4` increment/lake split — same convention as
     * [[crossNearDup]]'s doc split, so the two incremental families probe
     * comparable shapes. */
@@ -1268,11 +1208,10 @@ object Dedup {
   def semanticIncrIdx(s: SparkSession, d: String): DataFrame = {
     val cents = Retrieval.labelCentroids(s, d)
       .select(col("label").as("cid"), col("c"))
-    val dir = semIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
+    val dir = Scratch.dir(s, s"sem|$d") { tmp =>
       Search.writeIvfIndex(lakeEmb(s, d), col("embedding"), cents, s"$tmp/idx")
       tmp
-    })
+    }
     semanticDedupIncrementIdx(s, s"$dir/idx", incEmb(s, d),
       col("vec_id"), col("embedding"), cents, minCos = 0.4)
       .select(col("__vid").as("vec_id"), col("cluster"), col("is_dup"),
@@ -1322,14 +1261,13 @@ object Dedup {
   def semanticIncrIdxDel(s: SparkSession, d: String): DataFrame = {
     val cents = Retrieval.labelCentroids(s, d)
       .select(col("label").as("cid"), col("c"))
-    val dir = semDelIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sem_del").toString
+    val dir = Scratch.dir(s, s"semdel|$d") { tmp =>
       Search.writeIvfIndex(lakeEmb(s, d), col("embedding"), cents, s"$tmp/idx")
       import s.implicits._
       Search.deleteFromIvfIndex(SemDeletedIds.toDF("vec_id"),
         col("vec_id"), s"$tmp/idx")
       tmp
-    })
+    }
     semanticDedupIncrementIdx(s, s"$dir/idx", incEmb(s, d),
       col("vec_id"), col("embedding"), cents, minCos = 0.4)
       .select(col("__vid").as("vec_id"), col("cluster"), col("is_dup"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions.tokens
 import graft.functions.TextExpressions
+import graft.plans.Scratch
 
 /** At-rest DISTINCT-GRAM index — the 5th at-rest index family (after
   * IVF, kNN-graph, MinHash signatures and the inverted index), serving
@@ -390,21 +391,9 @@ object GramIndex {
 
   // --- named queries -------------------------------------------------------
 
-  /** Per-JVM cached index builds over the immutable testdata dirs (the
-    * [[Lexical]] idxCache pattern) — the benched number is the SERVING
-    * path, and scratch dirs are removed on JVM exit. */
-  private val memIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val memDelIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val decIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      Seq(memIdxCache, memDelIdxCache, decIdxCache).foreach(
-        _.values.forEach { dir => rm(new java.io.File(dir)) })
-    }))
-  }
+  // The named queries serve per-JVM indexes over the immutable testdata
+  // dirs, built once through Scratch.dir: the benched number is the
+  // SERVING path.
 
   private def isTest: Column =
     graft.functions.HashFunctions.md5Bucket16(col("doc_id")) === "0"
@@ -416,33 +405,30 @@ object GramIndex {
   val MemDeletedDocIds: Seq[Long] = Seq(301L, 8L)
 
   private def memIdx(s: SparkSession, d: String): String =
-    memIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_gram_mem").toString
+    Scratch.dir(s, s"grammem|$d") { tmp =>
       write(Tables.documents(s, d).filter(!isTest), col("doc_id"), col("text"),
         s"$tmp/idx", n = 8)
       s"$tmp/idx"
-    })
+    }
 
   private def decIdx(s: SparkSession, d: String): String =
-    decIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_gram_dec").toString
+    Scratch.dir(s, s"gramdec|$d") { tmp =>
       write(Tables.documents(s, d).filter(!isTest), col("doc_id"), col("text"),
         s"$tmp/idx", n = 5)
       s"$tmp/idx"
-    })
+    }
 
   /** A SEPARATE index (never the shared [[memIdx]] — tombstones would
     * leak into `eval_memorization_idx`) with [[MemDeletedDocIds]]
     * tombstoned but not merged: the liveDocs serving state. */
   private def memDelIdx(s: SparkSession, d: String): String =
-    memDelIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_gram_memdel").toString
+    Scratch.dir(s, s"grammemdel|$d") { tmp =>
       write(Tables.documents(s, d).filter(!isTest), col("doc_id"), col("text"),
         s"$tmp/idx", n = 8)
       import s.implicits._
       delete(MemDeletedDocIds.toDF("doc_id"), col("doc_id"), s"$tmp/idx")
       s"$tmp/idx"
-    })
+    }
 
   /** [[Dedup.evalMemorizationQ]] served from the at-rest gram index —
     * SAME oracle, so the whole build/append/probe path is hash-checked

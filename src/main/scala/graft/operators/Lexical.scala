@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.concurrent.{ConcurrentHashMap, FutureTask}
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
 import org.apache.spark.sql.expressions.Window
@@ -8,6 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
+import graft.plans.Scratch
 
 /** Lexical (keyword) retrieval and lexical+vector fusion — the portable
   * replacement for the reference's Elasticsearch relevance scoring.
@@ -417,11 +420,11 @@ object Lexical {
     * query-independent, so one derivation serves every request; values
     * are unchanged (same deterministic rows). */
   private def docsAndVocab(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val docs = graft.plans.Scratch.frame(s, s"lexdocs|$d") {
+    val docs = Scratch.frame(s, s"lexdocs|$d") {
       Tables.documents(s, d)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
     }
-    val vocab = graft.plans.Scratch.frame(s, s"lexvocab|$d") {
+    val vocab = Scratch.frame(s, s"lexvocab|$d") {
       docs.select(explode(array_distinct(col("toks"))).as("term"))
         .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     }
@@ -526,20 +529,19 @@ object Lexical {
     // like the other serving pools (r20) and the repeated request costs
     // one pruned-bucket BM25 probe
     sweepIfLarge(mltTermsCache)
-    val selected = mltTermsCache.computeIfAbsent(
-      (s, d, docId, maxQueryTerms), _ => {
-        graft.SessionSweep.watch(s)
-        val (docs, vocab) = docsAndVocab(s, d)
-        val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-        val srcTf = docs.filter(col("doc_id") === docId)
-          .select(explode(col("toks")).as("term"))
-          .groupBy("term").agg(count(lit(1)).cast("double").as("tf"))
-        srcTf.join(vocab, "term").crossJoin(nDocs)
-          .withColumn("__mlt", col("tf") *
-            log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-          .orderBy(desc("__mlt"), col("term").asc).limit(maxQueryTerms)
-          .select("term").collect().map(_.getString(0)).toSeq.sorted
-      })
+    val selected = Scratch.once(mltTermsCache, (s, d, docId, maxQueryTerms)) {
+      graft.SessionSweep.watch(s)
+      val (docs, vocab) = docsAndVocab(s, d)
+      val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
+      val srcTf = docs.filter(col("doc_id") === docId)
+        .select(explode(col("toks")).as("term"))
+        .groupBy("term").agg(count(lit(1)).cast("double").as("tf"))
+      srcTf.join(vocab, "term").crossJoin(nDocs)
+        .withColumn("__mlt", col("tf") *
+          log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+        .orderBy(desc("__mlt"), col("term").asc).limit(maxQueryTerms)
+        .select("term").collect().map(_.getString(0)).toSeq.sorted
+    }
     if (selected.isEmpty) {
       return s.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
@@ -581,15 +583,15 @@ object Lexical {
     // still ~3× lexical's from the per-request vocabulary jobs).
     import s.implicits._
     sweepIfLarge(fuzzyExpCache)
-    val expRows = fuzzyExpCache.computeIfAbsent(
-      (s, dir, terms.toList, maxExpansions, auto), _ => {
-        graft.SessionSweep.watch(s)
-        val vocab = s.read.schema(TermsSchema).parquet(s"$dir/terms").select("term", "df")
-        (if (auto) autoFuzzyExpansions(vocab, terms, maxExpansions)
-         else fuzzyExpansions(vocab, terms, maxExpansions))
-          .select("q_term", "term").collect()
-          .map(r => (r.getString(0), r.getString(1)))
-      })
+    val expRows = Scratch.once(fuzzyExpCache,
+        (s, dir, terms.toList, maxExpansions, auto)) {
+      graft.SessionSweep.watch(s)
+      val vocab = s.read.schema(TermsSchema).parquet(s"$dir/terms").select("term", "df")
+      (if (auto) autoFuzzyExpansions(vocab, terms, maxExpansions)
+       else fuzzyExpansions(vocab, terms, maxExpansions))
+        .select("q_term", "term").collect()
+        .map(r => (r.getString(0), r.getString(1)))
+    }
     val expTerms = expRows.map(_._2).distinct.toSeq
     if (expTerms.isEmpty) {
       return s.emptyDataFrame
@@ -1094,30 +1096,14 @@ object Lexical {
   def proximityQ(s: SparkSession, d: String): DataFrame =
     proximityFromIndex(s, index(s, d), "sort", "merge", slop = 2)
 
-  /** Per-JVM index cache (same pattern as the IVFADC cache in
-    * [[Retrieval]]): the testdata dirs are immutable, so one build
-    * serves all Bench reps — the measured number is the SERVING path —
-    * and scratch dirs don't accumulate (one per sfDir, removed on JVM
-    * exit). */
-  private val idxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val delIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mergedIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      Seq(idxCache, delIdxCache, mergedIdxCache).foreach(
-        _.values.forEach { dir => rm(new java.io.File(dir)) })
-    }))
-  }
-
+  /** The per-JVM index over `d`'s documents, built once through
+    * [[Scratch.dir]]: the testdata dirs are immutable, so one build
+    * serves all Bench reps and the measured number is the SERVING path. */
   private def index(s: SparkSession, d: String): String =
-    idxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_idx").toString
+    Scratch.dir(s, s"bm25|$d") { tmp =>
       writeInvertedIndex(Tables.documents(s, d), col("doc_id"), col("text"), s"$tmp/idx")
       s"$tmp/idx"
-    })
+    }
 
   /** Serving entries (r19): the request-parameterized dispatch serves
     * the lexical family from the per-JVM AT-REST index — the 100 TB
@@ -1150,16 +1136,18 @@ object Lexical {
   // the exact pool expression the oracle-checked bindings used — the
   // shared-oracle contract of the index-served family), bounded (cleared
   // past 1024 entries — a pool is ≤ PoolN tuples, so the cap is ~400 KB),
-  // and swept with the owning session like every per-JVM cache here.
-
-  private val lexPoolCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, List[String]), Seq[(Long, Double)]]()
-  private val vecPoolCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), Seq[(Long, Double)]]()
-  private val mltTermsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Int), Seq[String]]()
-  private val fuzzyExpCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, List[String], Int, Boolean), Array[(String, String)]]()
+  // and swept with the owning session like every per-JVM cache here. A
+  // pool build is a Spark job, so it runs through Scratch.once, outside
+  // the map's bin lock.
+  private val lexPoolCache = new ConcurrentHashMap[
+    (SparkSession, String, List[String]), FutureTask[Seq[(Long, Double)]]]()
+  private val vecPoolCache = new ConcurrentHashMap[
+    (SparkSession, String, Long), FutureTask[Seq[(Long, Double)]]]()
+  private val mltTermsCache = new ConcurrentHashMap[
+    (SparkSession, String, Long, Int), FutureTask[Seq[String]]]()
+  private val fuzzyExpCache = new ConcurrentHashMap[
+    (SparkSession, String, List[String], Int, Boolean),
+    FutureTask[Array[(String, String)]]]()
   locally {
     graft.SessionSweep.onContextStop(sc => {
       lexPoolCache.keySet.removeIf(k => graft.SessionSweep.ownedBy(k._1, sc))
@@ -1168,7 +1156,7 @@ object Lexical {
       fuzzyExpCache.keySet.removeIf(k => graft.SessionSweep.ownedBy(k._1, sc))
     })
   }
-  private def sweepIfLarge(m: java.util.concurrent.ConcurrentHashMap[_, _]): Unit =
+  private def sweepIfLarge(m: ConcurrentHashMap[_, _]): Unit =
     if (m.size() > 1024) m.clear() // rebuilding a pool is one bounded query
 
   /** Drop cached fuzzy expansions for `dir` — called by the index
@@ -1187,13 +1175,13 @@ object Lexical {
   private def lexPoolRows(s: SparkSession, d: String,
       terms: Seq[String]): Seq[(Long, Double)] = {
     sweepIfLarge(lexPoolCache)
-    lexPoolCache.computeIfAbsent((s, d, terms.toList), _ => {
+    Scratch.once(lexPoolCache, (s, d, terms.toList)) {
       graft.SessionSweep.watch(s)
       bm25Serve(s, d, terms)
         .orderBy(desc("score"), asc("doc_id")).limit(PoolN)
         .select(col("doc_id").cast("long"), col("score").cast("double"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    })
+    }
   }
 
   /** Top-`PoolN` dense pool for `queryVecId` — the ROUNDED cosine cut
@@ -1201,7 +1189,7 @@ object Lexical {
   private def vecPoolRows(s: SparkSession, d: String,
       queryVecId: Long): Seq[(Long, Double)] = {
     sweepIfLarge(vecPoolCache)
-    vecPoolCache.computeIfAbsent((s, d, queryVecId), _ => {
+    Scratch.once(vecPoolCache, (s, d, queryVecId)) {
       graft.SessionSweep.watch(s)
       val q0 = Tables.embeddings(s, d).filter(col("vec_id") === queryVecId)
         .select(col("embedding").as("qv"))
@@ -1211,7 +1199,7 @@ object Lexical {
             s, col("embedding"), col("qv")), 6).as("cs"))
         .orderBy(desc("cs"), asc("doc_id")).limit(PoolN)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    })
+    }
   }
 
   /** The benchmark takedown set — doc_ids inside `search_bm25`'s sf0.01
@@ -1223,24 +1211,22 @@ object Lexical {
     * leak into `search_bm25_idx`) with [[DeletedDocIds]] tombstoned but
     * NOT merged: the liveDocs serving state. */
   private def delIndex(s: SparkSession, d: String): String =
-    delIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_del").toString
+    Scratch.dir(s, s"bm25del|$d") { tmp =>
       writeInvertedIndex(Tables.documents(s, d), col("doc_id"), col("text"), s"$tmp/idx")
       import s.implicits._
       deleteFromIndex(DeletedDocIds.toDF("doc_id"), col("doc_id"), s"$tmp/idx")
       s"$tmp/idx"
-    })
+    }
 
   /** Build → delete → [[mergeIndex]]: the post-merge physical state. */
   private def mergedIndex(s: SparkSession, d: String): String =
-    mergedIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_merged").toString
+    Scratch.dir(s, s"bm25merged|$d") { tmp =>
       writeInvertedIndex(Tables.documents(s, d), col("doc_id"), col("text"), s"$tmp/idx")
       import s.implicits._
       deleteFromIndex(DeletedDocIds.toDF("doc_id"), col("doc_id"), s"$tmp/idx")
       mergeIndex(s, s"$tmp/idx")
       s"$tmp/idx"
-    })
+    }
 
   /** Named query: [[bm25Q]] answered from the at-rest index — shares
     * `search_bm25`'s oracle, so the whole index write/read/serve path is

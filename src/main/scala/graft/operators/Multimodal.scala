@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Scratch
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata.
@@ -314,7 +315,7 @@ object Multimodal {
     * bit-identical rows; production shape — hash the frame lake once at
     * ingest, serve the 8-byte hashes everywhere. */
   private def corpusPhash(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"mmCorpusPhash4:$d")(
+    Scratch.frame(s, s"mmcorpusphash4|$d")(
       phashOf(corpusImgs(s, d), grid = 4))
 
   /** Shared perceptual-hash derivation — (doc_id, phash) from
@@ -518,26 +519,6 @@ object Multimodal {
       .distinct()
   }
 
-  /** Per-JVM at-rest phash index caches (the [[Dedup]] sigIdxCache
-    * pattern): testdata dirs are immutable, so one build serves every
-    * invocation and Bench reps measure the PROBE path — production
-    * signs the frame lake once at ingest and probes forever after. The
-    * del cache is a SEPARATE physical index (tombstoned) so
-    * `mm_phash_dedup_idx`'s probes stay delete-free. */
-  private val phashIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val phashDelIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      phashIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-      phashDelIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-    }))
-  }
-
   /** [[phashDedup]] served from the AT-REST hash index: the corpus is
     * decoded + hashed ONCE ([[writePhashIndex]], cached per JVM×sfDir)
     * and the probe pairs against 8-byte at-rest hashes. doc_a < doc_b
@@ -551,11 +532,10 @@ object Multimodal {
     * probes an increment that is ≪ the lake, which is where the at-rest
     * layout pays (the decode is the cost at 100 TB). */
   def phashDedupIdx(s: SparkSession, d: String): DataFrame = {
-    val dir = phashIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ph_idx").toString
+    val dir = Scratch.dir(s, s"phash|$d") { tmp =>
       writePhashIndexHashed(corpusPhash(s, d), tmp, grid = 4)
       tmp
-    })
+    }
     probePhashIndexHashed(corpusPhash(s, d), dir)
       .filter(col("doc_a") < col("doc_b"))
       .orderBy("doc_a", "doc_b")
@@ -572,14 +552,13 @@ object Multimodal {
     * oracle is the brute all-pairs SQL with the takedown slice filtered
     * out. The physical half ([[compactPhashIndex]]) is spec-pinned. */
   def phashDedupIdxDel(s: SparkSession, d: String): DataFrame = {
-    val dir = phashDelIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ph_del").toString
+    val dir = Scratch.dir(s, s"phashdel|$d") { tmp =>
       writePhashIndexHashed(corpusPhash(s, d), tmp, grid = 4)
       deleteFromPhashIndex(
         Tables.documents(s, d).filter(phashDeletedPred).select("doc_id"),
         col("doc_id"), tmp)
       tmp
-    })
+    }
     // the takedown predicate is on doc_id, so it filters the hashed
     // frame identically to filtering the images before hashing
     probePhashIndexHashed(
@@ -598,15 +577,12 @@ object Multimodal {
     * (band_rows = docs × 4 bands — every doc signed exactly once per
     * band). */
   def phashIdxBuild(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ph_build").toString
-    writePhashIndex(corpusImgs(s, d), tmp)
-    val r = s.read.parquet(s"$tmp/hashes")
-      .agg(countDistinct(col("doc_id")).as("docs_signed"),
-        count(lit(1)).as("band_rows")).head()
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
+    val r = Scratch.tempDir(s) { tmp =>
+      writePhashIndex(corpusImgs(s, d), tmp)
+      s.read.parquet(s"$tmp/hashes")
+        .agg(countDistinct(col("doc_id")).as("docs_signed"),
+          count(lit(1)).as("band_rows")).head()
     }
-    rm(new java.io.File(tmp))
     import s.implicits._
     Seq((r.getLong(0), r.getLong(1))).toDF("docs_signed", "band_rows")
   }

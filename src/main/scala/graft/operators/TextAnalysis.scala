@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.plans.Scratch
 
 /** Text-analysis queries over `documents` — the LLM-training-data operators
   * (quality scoring, language ID, token counting, fingerprinting) layered
@@ -459,30 +460,15 @@ object TextAnalysis {
     }
   }
 
-  /** Per-JVM line-count index cache over the reflow corpus (the
-    * [[Dedup]] sigIdxCache rationale: immutable testdata, one build,
-    * probe-path bench). */
-  private val lineIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      lineIdxCache.values.forEach { dir => rm(new java.io.File(dir)) }
-    }))
-  }
-
   /** Named query: [[exciseFromLineIndex]] with the store built once over
     * the same reflow corpus — bit-equal to [[lineDedupQ]], so it SHARES
     * `txt_line_dedup`'s oracle. */
   def lineDedupIdxQ(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).withColumn("__text2", reflowExpr)
-    val dir = lineIdxCache.computeIfAbsent(d, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_line_idx").toString
+    val dir = Scratch.dir(s, s"lineidx|$d") { tmp =>
       writeLineCountIndex(docs, col("__text2"), tmp)
       tmp
-    })
+    }
     exciseFromLineIndex(docs, col("doc_id"), col("__text2"), dir, maxOcc = 10L)
       // sampled-sort cut (r21, the gopherQuality note)
       .localCheckpoint(eager = false)

@@ -1,131 +1,125 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
+import java.io.File
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Build-once parquet-backed scratch frames — the at-rest spelling of
-  * the per-(JVM, sfDir) DataFrame memos.
+/** Build-once, per JVM: the one memo behind every at-rest index dir
+  * ([[dir]]) and every scratch parquet frame ([[frame]]).
   *
-  * r19 memoized the expensive query-independent derivations (the
-  * in-plan kNN edge build, the LPA label tables, the NB seed table, the
-  * whole-image vector aggregate, the lexical tokenization + vocabulary)
-  * as lazily-localCheckpointed DataFrames keyed per session. That held
-  * the rows in the session's block manager — and r20's measurement
-  * audit found the bench protocol silently breaking it: `graft.Bench`
-  * unpersists every persistent RDD between reps (deliberate timing
-  * hygiene for the per-query loop checkpoints), which also dropped the
-  * MEMOIZED frames' blocks. A locally-checkpointed RDD has truncated
-  * lineage, so every later rep that touched a memoized frame failed
-  * with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — swallowed by the bench's
-  * per-query try/catch — and the reported "median" for ~40 rows was the
-  * time-to-failure, not the computation (reproduced: graph_pagerank
-  * reps read ok/FAIL/FAIL, search_mlt FAIL on every rep).
+  * The contract:
+  *  - '''The key determines the rows.''' A key names its family and
+  *    its inputs (`"ivf|<sfDir>"`, `"lpadel|<sfDir>"`) — every family
+  *    shares one map — and the build is deterministic in those inputs,
+  *    so any later caller, from any session, may be served the stored
+  *    result.
+  *  - '''Built outside the lock.''' One `FutureTask` per key is
+  *    published with `putIfAbsent` and run by the thread that published
+  *    it, outside the map's bin lock: a build may call [[dir]] or
+  *    [[frame]] for another key (the takedown layouts copy their clean
+  *    layout; `communityLabels` reads `knnEdgesCos`), concurrent callers
+  *    of one key wait for the one build, and callers of other keys never
+  *    wait on it. A hit is a lock-free map read of a completed task.
+  *  - '''A failed build is removed and retried.''' A build that throws
+  *    deletes its dir and frees its slot; the next caller builds again
+  *    instead of replaying the failure.
+  *  - '''The root is `spark.graft.scratch.dir`''' when set (a filesystem
+  *    the executors share, on a real cluster), else the JVM temp dir.
+  *    One shutdown hook removes every dir made here; nothing outlives the
+  *    JVM, so every run still computes from its parquet inputs.
   *
-  * The fix is the discipline every at-rest index family already uses:
-  * materialize the derivation ONCE per (JVM, key) into a scratch
-  * parquet dir and serve the re-read relation. Parquet blocks survive
-  * RDD unpersists and session cycling (no SessionSweep eviction
-  * needed), the scan carries real size stats (join planning keeps its
-  * broadcast decisions, which lazy checkpoints' LogicalRDD lost), and
-  * the rows are bit-identical — parquet stores the longs/doubles/arrays
-  * these memos hold exactly. Scratch dirs are JVM-lifetime temp dirs
-  * removed by a shutdown hook: nothing persists across runs, every
-  * invocation still computes from the parquet inputs.
-  *
-  * The re-read relation is plan-memoized per dir (the
-  * [[graft.Tables]] planCache pattern): parquet schema inference runs
-  * once per build, not once per reference; reuse across sessions is
-  * safe (LogicalRelation is a MultiInstanceRelation). */
+  * No new memo without a fresh-build attribution row: a memo takes its
+  * build out of every measured call after the first, so each derivation
+  * memoized here needs a benched row that builds the same derivation
+  * fresh (as `dedup_cross_idx_build` and `mm_phash_idx_build` do for
+  * their index families), or its cost leaves the suite unseen. */
 object Scratch {
 
-  // One FutureTask per key, registered with putIfAbsent and RUN OUTSIDE
-  // the map's bin lock (r21, advice fix): several builds call
-  // Scratch.frame for ANOTHER key mid-build (communityLabels →
-  // knnEdgesCos in GraphAnalytics), and running builds inside
-  // computeIfAbsent violates ConcurrentHashMap's no-nested-update
-  // contract — a data-dependent IllegalStateException("Recursive
-  // update") or deadlock whenever outer and inner keys share a hash
-  // bin. It also held a bin lock across a full Spark job, stalling
-  // concurrent serving threads whose unrelated keys collided.
-  private val dirCache =
-    new ConcurrentHashMap[String, java.util.concurrent.FutureTask[String]]()
+  private val built = new ConcurrentHashMap[String, FutureTask[Any]]()
+  private val dirs = ConcurrentHashMap.newKeySet[File]()
   private val planCache = new ConcurrentHashMap[String, DataFrame]()
 
   locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
-      }
-      dirCache.values.forEach { t =>
-        // only completed, successful builds own a directory
-        if (t.isDone) {
-          try rm(new java.io.File(t.get())) catch { case _: Throwable => () }
-        }
-      }
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => dirs.forEach(d => rm(d))))
   }
 
-  /** Scratch root: `spark.graft.scratch.dir` if set (a shared
-    * filesystem on a real cluster — driver-local temp dirs are only
-    * correct in local mode, where executors and driver share a disk),
-    * else the JVM temp dir. */
-  private def newScratchDir(s: SparkSession): java.nio.file.Path = {
-    val conf = s.conf.getOption("spark.graft.scratch.dir")
-    conf match {
+  /** Remove `f` and everything under it. */
+  private[graft] def rm(f: File): Unit = {
+    val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete()
+  }
+
+  private def newDir(s: SparkSession): File =
+    s.conf.getOption("spark.graft.scratch.dir") match {
       case Some(root) =>
-        val p = java.nio.file.Paths.get(root)
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.createTempDirectory(p, "graft_scratch")
-      case None => java.nio.file.Files.createTempDirectory("graft_scratch")
+        val p = Files.createDirectories(Paths.get(root))
+        Files.createTempDirectory(p, "graft_scratch").toFile
+      case None => Files.createTempDirectory("graft_scratch").toFile
+    }
+
+  /** The value `build` computes, once per key of `m`: the first caller
+    * runs it outside `m`'s bin lock, concurrent callers wait for that
+    * run, and a build that throws frees its slot so the next caller
+    * retries. Callers may remove keys of `m` at any time (a sweep, an
+    * invalidation); the next call then builds again. */
+  def once[K, V](m: ConcurrentHashMap[K, FutureTask[V]], key: K)(build: => V): V = {
+    var task = m.get(key)
+    if (task == null) {
+      val fresh = new FutureTask[V](() => build)
+      task = m.putIfAbsent(key, fresh)
+      if (task == null) { fresh.run(); task = fresh }
+    }
+    try task.get()
+    catch {
+      case e: ExecutionException =>
+        m.remove(key, task)
+        throw e.getCause
     }
   }
 
-  /** The frame `build` evaluates to, computed and written to scratch
-    * parquet once per (JVM, `key`) — later calls (any session) read the
-    * stored rows. `key` must determine the rows (the callers key by
-    * derivation kind + sfDir/indexDir, and every derivation here is
-    * deterministic in its inputs). The build is EAGER at first call —
-    * exactly where the deferred-view contract wants it: the first query
-    * that resolves the binding, never view registration. A build that
-    * throws removes both its temp dir and its cache slot, so a later
-    * call can retry instead of replaying the cached failure. */
-  def frame(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val task = new java.util.concurrent.FutureTask[String](() => {
-      val tmp = newScratchDir(s)
-      try {
-        build.write.mode("overwrite").parquet(s"$tmp/data")
-        tmp.toString
-      } catch {
+  /** What `build` returns when given a fresh dir under the scratch root,
+    * built once per (JVM, `key`) under the contract above. The build
+    * writes its layout into the dir and returns what its readers need:
+    * the dir, a path inside it, or the dir with the in-memory state the
+    * layout was written with (the IVFADC codebook). */
+  def dir[A](s: SparkSession, key: String)(build: String => A): A =
+    once(built, key) {
+      val d = newDir(s)
+      dirs.add(d)
+      try build(d.toString)
+      catch {
         case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-            f.delete()
-          }
-          rm(tmp.toFile)
+          dirs.remove(d)
+          rm(d)
           throw e
       }
-    })
-    val existing = dirCache.putIfAbsent(key, task)
-    val winner = if (existing == null) { task.run(); task } else existing
-    val dir =
-      try winner.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          dirCache.remove(key, winner) // let the next caller retry
-          throw e.getCause
-      }
-    // Plan memo keyed by dir, revalidated against context cycling (r21,
-    // advice fix): a cached DataFrame is bound to the session that first
-    // read it, and after a SparkContext stop/start in the same JVM every
-    // use would fail with "Cannot call methods on a stopped
-    // SparkContext" — re-read through the CALLER's session instead (the
-    // data dir survives; the re-read is schema inference only).
-    val cached = planCache.get(dir)
+    }.asInstanceOf[A]
+
+  /** A dir under the scratch root that lives only for `body`: removed
+    * when `body` returns or throws. For fresh builds that are measured,
+    * not memoized. */
+  def tempDir[A](s: SparkSession)(body: String => A): A = {
+    val d = newDir(s)
+    try body(d.toString) finally rm(d)
+  }
+
+  /** The frame `build` evaluates to, written to scratch parquet by
+    * [[dir]] and read back. The build is eager at first call: the first
+    * query that resolves the binding, never view registration. The
+    * re-read relation is memoized per dir, so parquet schema inference
+    * runs once per build; it is re-read through the caller's session
+    * when the session that first read it has a stopped context. */
+  def frame(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+    val d = dir(s, key) { tmp =>
+      build.write.mode("overwrite").parquet(s"$tmp/data")
+      tmp
+    }
+    val cached = planCache.get(d)
     if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
     else {
-      val df = s.read.parquet(s"$dir/data")
-      planCache.put(dir, df)
+      val df = s.read.parquet(s"$d/data")
+      planCache.put(d, df)
       df
     }
   }
