@@ -95,9 +95,11 @@ object Serving {
   }
 
   /** One request, one JSON response: parse → [[Retrieval.run]] →
-    * `{"mode": …, "top_k": …, "results": [row, …]}`. Row objects come
-    * from Spark's own row→JSON encoder (`Dataset.toJSON`), so column
-    * names and values match the named-query surface exactly. Total
+    * `{"mode": …, "top_k": …, "results": [row, …]}`. Row objects are
+    * written on the driver by Spark's own row→JSON generator, the one
+    * `Dataset.toJSON` runs in its tasks (`GraftSqlShim.collectJson`), so
+    * column names and values match the named-query surface byte for
+    * byte, and a result already on the driver needs no Spark job. Total
     * (never throws) — the body of [[handleWithStatus]] for callers that
     * only want the JSON. */
   def handle(s: SparkSession, d: String, requestJson: String): String =
@@ -119,7 +121,7 @@ object Serving {
   /** [[handleWithStatus]] executing on `exec`. The request's DataFrame
     * is still built on `s`, so the per-JVM index and memo builds inside
     * [[Retrieval.run]] run there; its analyzed plan is then re-bound to
-    * `exec` and the JSON rows are collected on it. [[ServingHttp]]
+    * `exec` and its rows are collected and written as JSON on it. [[ServingHttp]]
     * passes its interpreted serving session here. */
   def handleWithStatus(s: SparkSession, d: String, requestJson: String,
       exec: SparkSession): (Int, String) = {
@@ -131,8 +133,8 @@ object Serving {
       case Right(r) =>
         try {
           val df = Retrieval.run(s, d, r)
-          val rows = GraftSqlShim.ofRows(exec, GraftSqlShim.analyzed(df))
-            .toJSON.collect()
+          val rows = GraftSqlShim.collectJson(
+            GraftSqlShim.ofRows(exec, GraftSqlShim.analyzed(df)))
           (200,
             s"""{"mode":${quote(r.mode)},"top_k":${r.k},"results":[${rows.mkString(",")}]}""")
         } catch {
@@ -198,6 +200,17 @@ object Serving {
   * predicates, orderings); the factory mode below removes the rest, and
   * ServingHttpSpec pins zero compilations for a warm round of fresh
   * requests.
+  *
+  * No-delay sockets: [[start]] sets the JDK server's own
+  * `sun.net.httpserver.nodelay=true` unless it is already set. The JDK
+  * server flushes a response's headers in `sendResponseHeaders`, before
+  * the body is written, so every response leaves as two small segments;
+  * with Nagle's algorithm on, the body then waits for the client to ACK
+  * the headers, and a client's delayed ACK holds that for up to 40 ms.
+  * On a point request that stall was a third or more of the latency.
+  * The JDK reads the property once per JVM, when its first server is
+  * created; graft creates servers only here. ServingHttpSpec pins a
+  * median below the delayed-ACK floor for requests that do no Spark work.
   */
 object ServingHttp {
 
@@ -242,6 +255,10 @@ object ServingHttp {
       s"ServingHttp.start: maxConcurrent must be >= 1, got $maxConcurrent")
     val exec = servingSession(s)
     val admission = new java.util.concurrent.Semaphore(maxConcurrent)
+    // no-delay sockets (see the object doc); the JDK reads this once per
+    // JVM, at the first server it creates, and a value set by the
+    // deployment wins
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
     val srv = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(port), 0)
     srv.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {

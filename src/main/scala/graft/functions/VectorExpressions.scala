@@ -58,9 +58,25 @@ trait VectorBinaryArithmetic extends BinaryExpression {
   @transient protected lazy val rightFloat: Boolean = elementType(right).contains(FloatType)
 }
 
-private[functions] object VectorKernels {
+private[graft] object VectorKernels {
   @inline def at(a: ArrayData, isFloat: Boolean, i: Int): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** The interpreted `graft_cosine`: Σab / sqrt(Σa²·Σb²) in one pass,
+    * elements widened to double; null on a length mismatch or a zero
+    * norm. Callers off the expression path (a driver-held pool) use it
+    * to get the same bits as the SQL function. */
+  def cosine(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = at(a, fa, i); val y = at(b, fb, i)
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else dot / denom
+  }
 }
 
 /** Σ aᵢ·bᵢ in one primitive-array pass. */
@@ -104,19 +120,8 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends VectorBinaryArithmetic {
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    val fa = leftFloat; val fb = rightFloat
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = VectorKernels.at(a, fa, i); val y = VectorKernels.at(b, fb, i)
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else dot / denom
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.cosine(l.asInstanceOf[ArrayData], leftFloat, r.asInstanceOf[ArrayData], rightFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {

@@ -1290,7 +1290,7 @@ object Retrieval {
       case "mmr" => // beyond-reference: diversified top-k
         // Request-derived pool clamps to the driver-safety ceiling: k and
         // poolN are caller-controlled at the serving edge, and mmrRerank
-        // collects poolN^2 sim pairs — an uncapped top_k=10^5 request
+        // holds poolN^2 sim pairs on the driver — an uncapped top_k=10^5 request
         // would be a 10^10-pair driver OOM.
         require(req.k >= 1 && req.k <= Search.MaxMmrPool,
           s"mmr mode needs 1 <= k <= ${Search.MaxMmrPool}, got k=${req.k}")

@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextExpressions
+import graft.functions.{TextExpressions, VectorKernels}
 import graft.functions.VectorExpressions.fusedCosine
 
 /** The generic retrieval API — the reference's four search modes
@@ -21,8 +22,8 @@ import graft.functions.VectorExpressions.fusedCosine
 object Search {
 
   /** Hard ceiling on [[mmrRerank]]'s candidate pool. The greedy MMR pass
-    * collects the pool's relevance list AND its poolN² pairwise similarity
-    * matrix to the driver; 1000² = 10⁶ pairs is a bounded index-scale
+    * holds the pool's vectors and relevance list AND its poolN² pairwise
+    * similarity matrix on the driver; 1000² = 10⁶ pairs is a bounded index-scale
     * artifact, but an unchecked caller value (e.g. 10⁵ → 10¹⁰ pairs) is a
     * driver OOM. Servers clamp request-derived pools to this before
     * calling ([[Retrieval.run]]); direct callers hit the `require`. */
@@ -47,14 +48,17 @@ object Search {
     * relevant-but-different results.
     *
     * Distribution boundary, stated plainly: the candidate pool (top
-    * `poolN` by rounded relevance) and its `poolN`² pairwise similarity
-    * matrix are computed DISTRIBUTED; the greedy selection itself is
-    * inherently sequential (selection i depends on 1..i−1) and runs on
-    * the driver over that bounded index-scale artifact — the same rule
-    * as the serving edge's ≤k collect and the codebook artifacts. All
-    * inputs to the greedy are 6-decimal-rounded with doc-id tiebreaks,
-    * so the selection is deterministic and the DuckDB oracle replays it
-    * exactly with a recursive CTE. */
+    * `poolN` by rounded relevance) is computed DISTRIBUTED and collected
+    * once, vectors included; its `poolN`² pairwise similarity matrix is
+    * then computed on the driver with `graft_cosine`'s own kernel
+    * ([[graft.functions.VectorKernels.cosine]], so the same bits as the
+    * SQL function), and the greedy selection, inherently sequential
+    * (selection i depends on 1..i−1), runs there over that bounded
+    * index-scale artifact — the same rule as the serving edge's ≤k
+    * collect and the codebook artifacts. All inputs to the greedy are
+    * 6-decimal-rounded (`r6` is Spark's `round(x, 6)` on doubles) with
+    * doc-id tiebreaks, so the selection is deterministic and the DuckDB
+    * oracle replays it exactly with a recursive CTE. */
   def mmrRerank(corpus: DataFrame, id: Column, vec: Column, query: DataFrame,
       poolN: Int = 20, k: Int = 10, lambda: Double = 0.7,
       // the diversity weight is an EXPLICIT parameter, not 1−λ computed
@@ -64,22 +68,20 @@ object Search {
       diversity: Double = 0.3): DataFrame = {
     require(k >= 1 && k <= poolN, s"need 1 <= k <= poolN, got k=$k poolN=$poolN")
     require(poolN <= MaxMmrPool,
-      s"poolN=$poolN exceeds MaxMmrPool=$MaxMmrPool (poolN^2 sim pairs are driver-collected)")
+      s"poolN=$poolN exceeds MaxMmrPool=$MaxMmrPool (poolN^2 sim pairs are held on the driver)")
     val s = corpus.sparkSession
+    def r6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val pool = corpus.crossJoin(broadcast(query))
       .select(id.as("vec_id"), vec.as("v"),
         round(fusedCosine(s, vec, col("qv")), 6).as("rel"))
       .orderBy(desc("rel"), asc("vec_id")).limit(poolN)
-      .localCheckpoint() // feeds the rel map and both sides of the sim matrix
-    val rel = pool.select(col("vec_id"), col("rel"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val sims = pool.select(col("vec_id").as("ia"), col("v").as("va"))
-      .crossJoin(pool.select(col("vec_id").as("ib"), col("v").as("vb")))
-      .select(col("ia"), col("ib"),
-        round(fusedCosine(s, col("va"), col("vb")), 6).as("sim"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      .select(col("vec_id"), col("v").cast("array<double>"), col("rel")) // exact widening
+      .collect()
+    val rel = pool.map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val vecs = pool.map(r => r.getLong(0) -> ArrayData.toArrayData(r.getSeq[Double](1).toArray))
+    val sims = (for ((ia, va) <- vecs; (ib, vb) <- vecs)
+      yield (ia, ib) -> r6(VectorKernels.cosine(va, false, vb, false))).toMap
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     val remaining = scala.collection.mutable.TreeSet.empty[Long] ++ rel.keys
     while (selected.size < k && remaining.nonEmpty) {

@@ -1,9 +1,13 @@
 package org.apache.spark.sql
 
+import java.io.CharArrayWriter
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType, TemporaryViewRelation}
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
 /** The handful of `private[sql]` internals graft's deferred-view leaf
@@ -28,6 +32,29 @@ object GraftSqlShim {
   /** Wrap a logical plan as a DataFrame (`Dataset.ofRows`). */
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(classicSession(s), plan)
+
+  /** `df.toJSON.collect()` with the JSON written on the driver: the
+    * executed plan's rows are collected as one SQL execution, then each
+    * is written by the generator `Dataset.toJSON` uses in its tasks (same
+    * schema, same default options, same session time zone), so every
+    * string is byte-identical. Rows that are already on the driver (a
+    * plan folded into a `LocalRelation`) need no Spark job, where
+    * `toJSON`'s `MapPartitions` would launch one. */
+  def collectJson(df: DataFrame): Array[String] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+    val writer = new CharArrayWriter()
+    val gen = new JacksonGenerator(ds.schema, writer,
+      new JSONOptions(Map.empty[String, String], ds.sparkSession.sessionState.conf.sessionLocalTimeZone))
+    try rows.map { row =>
+      writer.reset()
+      gen.write(row)
+      gen.flush()
+      writer.toString
+    } finally gen.close()
+  }
 
   /** The executed plan's InternalRow RDD — the physical hand-off a
     * custom leaf exec node returns from `doExecute`. */

@@ -20,7 +20,7 @@ class GoldenPathSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("curate → pack → write → compact → train → index → search, end to end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
+    val dir = tempDir("graft_golden")
 
     // 1. curate: quality/repetition/language/exact/near-dup gates
     val docs = Tables.documents(spark, d)
@@ -157,7 +157,7 @@ class GoldenPathSpec extends SparkSpec {
     val docs = Tables.documents(spark, d)
     val isPos = col("lang") === "en"
     val cut = docs.agg(expr("max(doc_id) * 4 DIV 5")).head().getLong(0)
-    val modelDir = java.nio.file.Files.createTempDirectory("graft_gold_nb").toString
+    val modelDir = tempDir("graft_gold_nb")
 
     // batch backfill + "daily" increment through the SAME batch applier
     Streams.applyNbBatch(docs.filter($"doc_id" <= cut), $"text", isPos, modelDir, 0L)

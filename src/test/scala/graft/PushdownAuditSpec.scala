@@ -55,7 +55,7 @@ class PushdownAuditSpec extends SparkSpec {
 
   test("fuzzyFromIndex: expanded-term postings reads prune to buckets and push the term set; corpus never scanned") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("lex_fz_push").toString
+    val dir = tempDir("lex_fz_push")
     graft.operators.Lexical.writeInvertedIndex(
       graft.Tables.documents(spark, d), col("doc_id"), col("text"), s"$dir/idx")
     val df = graft.operators.Lexical.fuzzyFromIndex(spark, s"$dir/idx",

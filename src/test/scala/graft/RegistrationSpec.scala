@@ -15,7 +15,7 @@ class RegistrationSpec extends SparkSpec {
 
   /** Fresh copy of the sf0.001 tables, so sfDir-keyed caches are cold. */
   private def coldDir(): String = {
-    val tmp = Files.createTempDirectory("graft_reg_cold")
+    val tmp = Paths.get(tempDir("graft_reg_cold"))
     val src = Paths.get("/root/testdata/sf0.001")
     Files.list(src).forEach { p =>
       if (p.getFileName.toString.endsWith(".parquet"))

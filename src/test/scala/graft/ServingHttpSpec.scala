@@ -2,6 +2,8 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSpec
 import graft.operators.Retrieval
 
@@ -92,6 +94,23 @@ class ServingHttpSpec extends SparkSpec {
     }
   }
 
+  test("requests that do no Spark work answer below the 40 ms delayed-ACK floor") {
+    // the JDK server flushes a response's headers before its body; without
+    // no-delay sockets Nagle holds every body for the client's delayed ACK
+    withServer { port =>
+      val json = """{"mode":"sideways"}"""
+      (0 until 3).foreach(_ => post(port, "/api/search", json)) // connect, warm the route
+      val ms = (0 until 20).map { _ =>
+        val t0 = System.nanoTime()
+        val (status, _) = post(port, "/api/search", json)
+        assert(status === 400)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 20.0, f"median $median%.1f ms over 20 sequential requests: ${ms.mkString(", ")}")
+    }
+  }
+
   test("invalid mode on /api/search → 400 with app.py's exact envelope") {
     withServer { port =>
       val (status, body) = post(port, "/api/search", """{"mode":"sideways"}""")
@@ -130,7 +149,7 @@ class ServingHttpSpec extends SparkSpec {
     // a server whose data directory vanished after startup: the request
     // is well-formed, the engine faults — a monitor must never be told
     // the client was at fault (app.py:329-331's envelope)
-    val gone = java.nio.file.Files.createTempDirectory("graft_gone").toString
+    val gone = tempDir("graft_gone")
     val srv = ServingHttp.start(spark, gone, 0)
     try {
       val (status, body) = post(srv.getAddress.getPort, "/api/search",
@@ -303,6 +322,56 @@ class ServingHttpSpec extends SparkSpec {
       round(4)
       assert(compiles.getCount - before === 0L,
         s"a warm round compiled ${compiles.getCount - before} class(es)")
+    }
+  }
+
+  /** Spark jobs launched while `f` runs in the per-thread pools that
+    * [[ServingHttp]]'s handlers run their requests in. */
+  private def servedJobs(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = s"served-jobs-marker-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.jobGroup.id").contains(marker)) drained.countDown()
+        else if (prop("spark.scheduler.pool").exists(_.startsWith("graft-serve-")))
+          jobs.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every job the requests launched has been counted
+      sc.setJobGroup(marker, "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a warm graph request launches no Spark job; its JSON is written on the driver") {
+    withServer { port =>
+      assert(post(port, "/api/search", keyed("graph", 5))._1 === 200) // loads the hot image
+      var body = ""
+      val n = servedJobs { body = post(port, "/api/search", keyed("graph", 6))._2 }
+      assert(body === Serving.handle(spark, d, keyed("graph", 6)))
+      assert(n === 0, s"a warm graph request launched $n Spark job(s)")
+    }
+  }
+
+  test("a warm mmr request runs two Spark jobs: the query broadcast and the pool collect") {
+    withServer { port =>
+      assert(post(port, "/api/search", keyed("mmr", 5))._1 === 200)
+      var body = ""
+      val n = servedJobs { body = post(port, "/api/search", keyed("mmr", 6))._2 }
+      assert(body === Serving.handle(spark, d, keyed("mmr", 6)))
+      assert(n <= 2, s"a warm mmr request launched $n Spark job(s)")
     }
   }
 

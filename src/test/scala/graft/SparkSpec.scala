@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session; Spark 4's
@@ -20,6 +23,27 @@ object SparkSpec {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+/** A spec on the shared session, with a per-suite temp root: every
+  * [[tempDir]] lives under it, and `afterAll` removes the root with all
+  * it holds, so a test run leaves nothing in the JVM temp dir. */
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  private var tmpRoot: Option[Path] = None
+  private var made = 0
+
+  /** A fresh, empty dir `<prefix>-<n>` under this suite's temp root. The
+    * name is short on purpose: plan strings cut a scan's location at 100
+    * characters, and specs look for path parts in them. */
+  def tempDir(prefix: String): String = synchronized {
+    val root = tmpRoot.getOrElse {
+      val r = Files.createTempDirectory("graft_spec"); tmpRoot = Some(r); r
+    }
+    made += 1
+    Files.createDirectory(root.resolve(s"$prefix-$made")).toString
+  }
+
+  override protected def afterAll(): Unit =
+    try synchronized { tmpRoot.foreach(r => graft.plans.Scratch.rm(r.toFile)); tmpRoot = None }
+    finally super.afterAll()
 }

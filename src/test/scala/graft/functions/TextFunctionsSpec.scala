@@ -259,7 +259,7 @@ class TextFunctionsSpec extends SparkSpec {
     // corpus: doc1 = "a b", doc2 = "a b", doc3 = "a c" → total 6 tokens
     // tf: a=3, b=2, c=1; c2: (a,b)=2, (a,c)=1; c1(a)=3
     // doc1: p(a)=3/6; p(b|a)=0.7*(2/3)+0.3*(2/6)
-    val d = java.nio.file.Files.createTempDirectory("graft_bigram").toString
+    val d = tempDir("graft_bigram")
     Seq((1L, "a b", "en", "s", 3L), (2L, "a b", "en", "s", 3L),
       (3L, "a c", "en", "s", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -277,7 +277,7 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("bigramSurprisal ranks a common-pattern doc below a rare-pattern doc") {
-    val d = java.nio.file.Files.createTempDirectory("graft_bigram2").toString
+    val d = tempDir("graft_bigram2")
     val common = (1L to 20L).map(i => (i, "the cat sat on the mat", "en", "s", 22L))
     val rare = Seq((99L, "zyx qwv jkl pqr mno stu", "en", "s", 23L))
     (common ++ rare).toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -261,7 +261,7 @@ class CurationSpec extends SparkSpec {
     import spark.implicits._
     val packs = (0 until 64).map(i => (i.toLong, s"payload_$i")).toDF("pack_id", "body")
     val sharded = Curation.shardPacks(packs, $"pack_id".cast("string"), packsPerShard = 8L)
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards")
     Curation.writeTrainingShards(sharded, dir)
     val back = spark.read.parquet(dir)
     assert(back.count() === 64)

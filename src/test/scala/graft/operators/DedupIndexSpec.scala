@@ -24,7 +24,7 @@ class DedupIndexSpec extends SparkSpec {
   test("probeMinhashIndex ≡ minhashPairsAcross (bit parity, config from meta)") {
     val inc = docs.filter(col("doc_id") % 4 === 0)
     val lake = docs.filter(col("doc_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_spec").toString
+    val dir = tempDir("graft_sig_spec")
     Dedup.writeMinhashIndex(lake, col("doc_id"), col("text"), col("blk"),
       dir, shingleN = 3)
     val served = Dedup.probeMinhashIndex(inc, col("doc_id"), col("text"),
@@ -39,12 +39,12 @@ class DedupIndexSpec extends SparkSpec {
     val inc = docs.filter(col("doc_id") % 4 === 0)
     val first = docs.filter(col("doc_id") % 4 === 1)
     val second = docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
-    val appended = java.nio.file.Files.createTempDirectory("graft_sig_app").toString
+    val appended = tempDir("graft_sig_app")
     Dedup.writeMinhashIndex(first, col("doc_id"), col("text"), col("blk"),
       appended, shingleN = 3)
     Dedup.appendToMinhashIndex(second, col("doc_id"), col("text"), col("blk"),
       appended)
-    val rebuilt = java.nio.file.Files.createTempDirectory("graft_sig_reb").toString
+    val rebuilt = tempDir("graft_sig_reb")
     Dedup.writeMinhashIndex(first.unionByName(second), col("doc_id"),
       col("text"), col("blk"), rebuilt, shingleN = 3)
     def probe(dir: String) = Dedup.probeMinhashIndex(inc, col("doc_id"),
@@ -55,7 +55,7 @@ class DedupIndexSpec extends SparkSpec {
   test("probe reads the lake through PartitionFilters on bucket") {
     val inc = docs.filter(col("doc_id") % 4 === 0)
     val lake = docs.filter(col("doc_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_plan").toString
+    val dir = tempDir("graft_sig_plan")
     Dedup.writeMinhashIndex(lake, col("doc_id"), col("text"), col("blk"),
       dir, shingleN = 3)
     val plan = Dedup.probeMinhashIndex(inc, col("doc_id"), col("text"),
@@ -74,7 +74,7 @@ class DedupIndexSpec extends SparkSpec {
     val lake = Seq((1L, text, "b"), (2L, text, "b"), (3L, text, "b"),
       (4L, other, "b")).toDF("doc_id", "text", "blk")
     val inc = Seq((1000L, text, "b")).toDF("doc_id", "text", "blk")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_td").toString
+    val dir = tempDir("graft_sig_td")
     Dedup.writeMinhashIndex(lake, col("doc_id"), col("text"), col("blk"), dir)
     def probe() = Dedup.probeMinhashIndex(inc, col("doc_id"), col("text"),
       col("blk"), dir)
@@ -110,7 +110,7 @@ class DedupIndexSpec extends SparkSpec {
     val text = "alpha beta gamma delta epsilon zeta eta theta"
     val lake = (1 to 30).map(i => (i.toLong, text, "b")).toDF("doc_id", "text", "blk")
     val inc = Seq((1000L, text, "b")).toDF("doc_id", "text", "blk")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_hot").toString
+    val dir = tempDir("graft_sig_hot")
     Dedup.writeMinhashIndex(lake, col("doc_id"), col("text"), col("blk"), dir)
     def n(maxBandFreq: Int) = Dedup.probeMinhashIndex(inc, col("doc_id"),
       col("text"), col("blk"), dir, maxBandFreq = maxBandFreq).count()
@@ -136,14 +136,14 @@ class DedupIndexSpec extends SparkSpec {
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // one-shot build + whole-corpus probe = the in-plan banded join
-    val dir = java.nio.file.Files.createTempDirectory("graft_hpl_spec").toString
+    val dir = tempDir("graft_hpl_spec")
     Dedup.writeHyperplaneIndex(emb, col("vec_id"), col("embedding"), dir,
       bands = 32)
     val served = rescored(
       Dedup.probeHyperplaneIndex(emb, col("vec_id"), col("embedding"), dir))
     assert(inPlan.nonEmpty && served === inPlan)
     // append ≡ rebuild over the union
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_hpl_app").toString
+    val dir2 = tempDir("graft_hpl_app")
     Dedup.writeHyperplaneIndex(emb.filter(col("vec_id") % 2 === 0),
       col("vec_id"), col("embedding"), dir2, bands = 32)
     Dedup.appendToHyperplaneIndex(emb.filter(col("vec_id") % 2 =!= 0),

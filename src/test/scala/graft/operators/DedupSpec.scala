@@ -443,7 +443,7 @@ class DedupSpec extends SparkSpec {
     val inc = Seq((20L, v(1, 0.011, 0))).toDF("id", "vec")
     val cents = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 0.0, 1.0)))
       .toDF("cid", "c")
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdel").toString
+    val dir = tempDir("graft_semdel")
     Search.writeIvfIndex(lake, $"vec", cents, s"$dir/idx")
     def probe() = Dedup.semanticDedupIncrementIdx(spark, s"$dir/idx", inc,
         $"id", $"vec", cents, minCos = 0.95)

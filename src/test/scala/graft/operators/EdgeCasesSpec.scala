@@ -122,7 +122,7 @@ class EdgeCasesSpec extends SparkSpec {
   }
 
   test("gram index: empty lake and empty probe both flow through") {
-    val dir = java.nio.file.Files.createTempDirectory("gram_edge").toString
+    val dir = tempDir("gram_edge")
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     GramIndex.write(docs, $"doc_id", $"text", s"$dir/idx", n = 8)
     val probe = Seq((1L, "one two three four five six seven eight nine"))
@@ -135,7 +135,7 @@ class EdgeCasesSpec extends SparkSpec {
     assert(GramIndex.contaminatedIdsFromIndex(probe, $"text", s"$dir/idx")
       .count() === 0)
     // empty probe against a real index: empty result, no error
-    val dir2 = java.nio.file.Files.createTempDirectory("gram_edge2").toString
+    val dir2 = tempDir("gram_edge2")
     GramIndex.write(probe, $"doc_id", $"text", s"$dir2/idx", n = 8)
     assert(GramIndex.memorizationRateFromIndex(
       docs, $"doc_id", $"text", s"$dir2/idx").count() === 0)

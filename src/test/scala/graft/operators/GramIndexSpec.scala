@@ -29,14 +29,11 @@ class GramIndexSpec extends SparkSpec {
     (102L, "tiny doc")
   ).toDF("doc_id", "text")
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def memRows(df: DataFrame): Seq[(Long, Long, Long, Double)] =
     df.as[(Long, Long, Long, Double)].collect().toSeq
 
   test("memorizationRateFromIndex: bit parity with the in-plan operator") {
-    val dir = tmp("gram_mem")
+    val dir = tempDir("gram_mem")
     GramIndex.write(corpus, $"doc_id", $"text", s"$dir/idx", n = 8)
     val idx = memRows(GramIndex.memorizationRateFromIndex(
       probe, $"doc_id", $"text", s"$dir/idx"))
@@ -50,7 +47,7 @@ class GramIndexSpec extends SparkSpec {
   }
 
   test("decontaminateFromIndex + contaminatedIds: parity with Curation") {
-    val dir = tmp("gram_dec")
+    val dir = tempDir("gram_dec")
     val train = corpus
     val test5 = probe
     GramIndex.write(train, $"doc_id", $"text", s"$dir/idx", n = 5)
@@ -77,7 +74,7 @@ class GramIndexSpec extends SparkSpec {
   }
 
   test("probe prunes the gram scan to the probe's buckets (PartitionFilters)") {
-    val dir = tmp("gram_prune")
+    val dir = tempDir("gram_prune")
     GramIndex.write(corpus, $"doc_id", $"text", s"$dir/idx", n = 8)
     // single short probe doc → few grams → strictly fewer buckets than 64
     val one = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta"))
@@ -98,7 +95,7 @@ class GramIndexSpec extends SparkSpec {
   test("append equals rebuild; disjoint-append contract enforced loudly") {
     val a = corpus.filter($"doc_id" < 25L)
     val b = corpus.filter($"doc_id" >= 25L)
-    val dir = tmp("gram_app")
+    val dir = tempDir("gram_app")
     GramIndex.write(a, $"doc_id", $"text", s"$dir/inc", n = 8)
     GramIndex.append(b, $"doc_id", $"text", s"$dir/inc")
     GramIndex.write(corpus, $"doc_id", $"text", s"$dir/full", n = 8)
@@ -118,7 +115,7 @@ class GramIndexSpec extends SparkSpec {
   }
 
   test("threshold probe (minOverlap) and reversed benchmark gate: parity with Curation") {
-    val dir = tmp("gram_thresh")
+    val dir = tempDir("gram_thresh")
     GramIndex.write(corpus, $"doc_id", $"text", s"$dir/idx", n = 5)
     // ≥2-distinct-shingles threshold: same survivors as the in-plan rule
     val idx2 = corpus.select($"doc_id")
@@ -137,7 +134,7 @@ class GramIndexSpec extends SparkSpec {
     assert(idx2.size > plan1.size, "the fixture must exercise the gap")
     // reversed direction: the PROBE set indexed as the benchmark, the
     // corpus gated against it — must equal in-plan decontaminate
-    val bdir = tmp("gram_bench")
+    val bdir = tempDir("gram_bench")
     GramIndex.write(probe, $"doc_id", $"text", s"$bdir/idx", n = 5)
     val gated = GramIndex.decontamGateFromIndex(corpus, $"doc_id", $"text",
         s"$bdir/idx")
@@ -146,7 +143,7 @@ class GramIndexSpec extends SparkSpec {
   }
 
   test("int-typed id builds a readable index; docids sidecar drives the disjointness probe") {
-    val dir = tmp("gram_int")
+    val dir = tempDir("gram_int")
     // readGrams pins `doc_id LONG`; without the write-side cast this
     // index would build fine and then throw on every vectorized read
     val intCorpus = corpus.withColumn("doc_id", $"doc_id".cast("int"))
@@ -171,7 +168,7 @@ class GramIndexSpec extends SparkSpec {
   }
 
   test("takedown of EVERY doc leaves a validly-empty index; ids become re-appendable") {
-    val dir = tmp("gram_all_del")
+    val dir = tempDir("gram_all_del")
     GramIndex.write(corpus, $"doc_id", $"text", s"$dir/idx", n = 8)
     GramIndex.delete(corpus.select($"doc_id"), $"doc_id", s"$dir/idx")
     GramIndex.merge(spark, s"$dir/idx")
@@ -194,7 +191,7 @@ class GramIndexSpec extends SparkSpec {
   }
 
   test("takedown: tombstoned docs leave the audit immediately; merge applies physically") {
-    val dir = tmp("gram_del")
+    val dir = tempDir("gram_del")
     GramIndex.write(corpus, $"doc_id", $"text", s"$dir/idx", n = 8)
     // doc 100's memorized windows come only from lake docs 10/11 — delete
     // both and the rate must drop to the fresh-build-on-live-set answer

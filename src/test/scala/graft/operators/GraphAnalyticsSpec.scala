@@ -313,7 +313,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     import graft.operators.Search
     import graft.streaming.Streams
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_cc_stream").toString
+    val dir = tempDir("graft_graph_cc_stream")
     def ang(deg: Double) = Array(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
     // TWO disjoint rings in the stored layout (0-3 near 0°, 10-13 near
     // 180°) — two components before the stream
@@ -357,7 +357,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     import graft.operators.Search
     import graft.streaming.Streams
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_pr_stream").toString
+    val dir = tempDir("graft_graph_pr_stream")
     def ang(deg: Double) = Array(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
     val base = (0 until 8).map(i => (i.toLong, ang(30 + i * 15)))
     val ring = (0 until 8).flatMap(i =>
@@ -397,7 +397,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("takedown label propagation: a deleted seed's past votes stop conducting (dependents flip)") {
     import graft.operators.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_lp_del").toString
+    val dir = tempDir("graft_lp_del")
     try {
       // path 0-1-2-3-4; seeds: 0 -> label 1, 4 -> label 2. With both
       // seeds, node 2 ties at round 2 and takes min label 1; with seed 0
@@ -757,7 +757,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("takedown communities: deleting a doc splits its neighbors' community (labels move non-locally)") {
     import graft.operators.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_cm_del").toString
+    val dir = tempDir("graft_cm_del")
     try {
       // barbell: triangle {0,1,2}, triangle {4,5,6}, bridge 2-3-4.
       // Hand-unrolled sync LPA (identity labels, 3 rounds) over the

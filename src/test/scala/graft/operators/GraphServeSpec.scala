@@ -52,7 +52,7 @@ class GraphServeSpec extends SparkSpec {
   test("an id in the corpus but not in the layout walks with its embeddings vector (fallback)") {
     // a PARTIAL layout — the per-shard shape where the corpus outgrows
     // one shard's index: ids < 50 indexed, the rest only in embeddings
-    val tmp = java.nio.file.Files.createTempDirectory("graft_serve_fb").toString
+    val tmp = tempDir("graft_serve_fb")
     val sub = Tables.embeddings(spark, d).filter(col("vec_id") < 50)
       .select(col("vec_id"), col("embedding"))
     Search.writeGraphIndex(sub, col("vec_id"), col("embedding"),
@@ -77,7 +77,7 @@ class GraphServeSpec extends SparkSpec {
 
   test("a corpus-sized layout is refused loudly, pointing at the distributed spelling") {
     val clean = s"${Retrieval.graphIdxDir(spark, d)}/idx"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_serve_big").toString
+    val tmp = tempDir("graft_serve_big")
     def cp(src: java.io.File, dst: java.io.File): Unit =
       if (src.isDirectory) {
         dst.mkdirs(); src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
@@ -101,7 +101,7 @@ class GraphServeSpec extends SparkSpec {
     // land a REAL takedown inside the race window the stamp protocol
     // argues about: after the stamp read, before the image load
     val clean = s"${Retrieval.graphIdxDir(spark, d)}/idx"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_serve_race").toString
+    val tmp = tempDir("graft_serve_race")
     def cp(src: java.io.File, dst: java.io.File): Unit =
       if (src.isDirectory) {
         dst.mkdirs(); src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
@@ -133,7 +133,7 @@ class GraphServeSpec extends SparkSpec {
   test("a takedown AFTER the hot image loaded is served immediately (stamp reload)") {
     // scratch copy so the shared per-JVM layouts stay pristine
     val clean = s"${Retrieval.graphIdxDir(spark, d)}/idx"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_serve_del").toString
+    val tmp = tempDir("graft_serve_del")
     def cp(src: java.io.File, dst: java.io.File): Unit =
       if (src.isDirectory) {
         dst.mkdirs(); src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))

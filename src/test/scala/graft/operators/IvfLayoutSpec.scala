@@ -18,7 +18,7 @@ class IvfLayoutSpec extends SparkSpec {
     val e = graft.Tables.embeddings(spark, d)
     val cents = Retrieval.labelCentroids(spark, d)
       .select(col("label").cast("long").as("cid"), col("c"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_api").toString
+    val dir = tempDir("graft_ivf_api")
     Search.writeIvfIndex(e, col("embedding"), cents, s"$dir/idx")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val indexed = Search.knnIvfIndexed(spark, s"$dir/idx", col("embedding"),
@@ -39,7 +39,7 @@ class IvfLayoutSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val e = graft.Tables.embeddings(spark, d)
     // cluster assignment = the IVF write path (here: label as the cluster)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf")
     e.withColumn("cluster", col("label").cast("long"))
       .write.partitionBy("cluster").parquet(s"$dir/emb")
 
@@ -75,7 +75,7 @@ class IvfLayoutSpec extends SparkSpec {
     val e = graft.Tables.embeddings(spark, d)
     val cents = Retrieval.labelCentroids(spark, d)
       .select(col("label").cast("long").as("cid"), col("c"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_fil").toString
+    val dir = tempDir("graft_ivf_fil")
     Search.writeIvfIndex(e, col("embedding"), cents, s"$dir/idx")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val filtered = Search.knnIvfIndexed(spark, s"$dir/idx", col("embedding"),
@@ -110,7 +110,7 @@ class IvfLayoutSpec extends SparkSpec {
     val e = graft.Tables.embeddings(spark, d)
     val cents = Retrieval.labelCentroids(spark, d)
       .select(col("label").cast("long").as("cid"), col("c"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_ms").toString
+    val dir = tempDir("graft_ivf_ms")
     Search.writeIvfIndex(e, col("embedding"), cents, s"$dir/idx")
     val qbag = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -150,7 +150,7 @@ class IvfLayoutSpec extends SparkSpec {
     val a = all.filter(col("vec_id") < 60)
     val b = all.filter(col("vec_id") >= 60)
     val centsA = Search.kmeansTrain(a, col("vec_id"), col("embedding"), k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_retrain").toString
+    val dir = tempDir("graft_retrain")
     Search.writeIvfIndex(a, col("embedding"), centsA, s"$dir/idx")
     Search.appendToIvfIndex(b, col("embedding"), centsA, s"$dir/idx")
     val newCents = Search.retrainIvfIndex(spark, s"$dir/idx",
@@ -160,7 +160,7 @@ class IvfLayoutSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/idx__retrain_old").exists())
     // fresh build on the union corpus for comparison
     val centsF = Search.kmeansTrain(all, col("vec_id"), col("embedding"), k = 4)
-    val freshDir = java.nio.file.Files.createTempDirectory("graft_retrain_f").toString
+    val freshDir = tempDir("graft_retrain_f")
     Search.writeIvfIndex(all, col("embedding"), centsF, s"$freshDir/idx")
     // centroids agree (tolerance: summation order differs between the
     // index layout and the original corpus layout)
@@ -187,7 +187,7 @@ class IvfLayoutSpec extends SparkSpec {
   test("IVF takedown: tombstones filter the probe; compaction applies physically, touching only deleted clusters") {
     val all = clusteredCorpus(80)
     val cents = Search.kmeansTrain(all, col("vec_id"), col("embedding"), k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_td").toString
+    val dir = tempDir("graft_ivf_td")
     Search.writeIvfIndex(all, col("embedding"), cents, s"$dir/idx")
     val q = all.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     def serve() = Search.knnIvfIndexed(spark, s"$dir/idx", col("embedding"),
@@ -201,7 +201,7 @@ class IvfLayoutSpec extends SparkSpec {
     // replacing the removed entries — not just pre minus deleted
     val post = serve()
     assert(deleted.forall(id => !post.exists(_._1 == id)) && post.size == 10)
-    val freshDir = java.nio.file.Files.createTempDirectory("graft_ivf_td_f").toString
+    val freshDir = tempDir("graft_ivf_td_f")
     Search.writeIvfIndex(all.filter(!col("vec_id").isin(deleted: _*)),
       col("embedding"), cents, s"$freshDir/idx")
     assert(post === Search.knnIvfIndexed(spark, s"$freshDir/idx",
@@ -234,7 +234,7 @@ class IvfLayoutSpec extends SparkSpec {
   test("IVF compaction: crash at every swap step self-heals; straddling append survives; all-deleted cluster dir goes") {
     val all = clusteredCorpus(40)
     val cents = Search.kmeansTrain(all, col("vec_id"), col("embedding"), k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_crash").toString
+    val dir = tempDir("graft_ivf_crash")
     Search.writeIvfIndex(all, col("embedding"), cents, s"$dir/idx")
     val someCluster = spark.read.parquet(s"$dir/idx")
       .select(col("vec_id"), col("cluster").cast("long")).as[(Long, Long)]
@@ -286,7 +286,7 @@ class IvfLayoutSpec extends SparkSpec {
     val edges = Search.knnGraph(corpus, col("vec_id"), col("embedding"),
       cents, k = 3).select("__vid", "nbr_id").localCheckpoint()
     val query = Seq(Tuple1(Seq(1f, 0.4f, 0f, 0f, 0f, 0f, 0f, 0f))).toDF("qv")
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_idx").toString
+    val dir = tempDir("graft_graph_idx")
     Search.writeGraphIndex(corpus, col("vec_id"), col("embedding"), edges,
       s"$dir/idx", entriesN = 8, buckets = 4)
     val inPlan = Search.graphSearch(corpus, col("vec_id"), col("embedding"),
@@ -311,7 +311,7 @@ class IvfLayoutSpec extends SparkSpec {
   test("graph layout: a build/serve bucket-modulus mismatch fails loudly instead of silently missing rows") {
     val corpus = clusteredCorpus(12)
     val edges = Seq((0L, 1L), (1L, 2L)).toDF("__vid", "nbr_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bktguard").toString
+    val dir = tempDir("graft_bktguard")
     Search.writeGraphIndex(corpus.select(col("vec_id"), col("embedding")),
       col("vec_id"), col("embedding"), edges, s"$dir/idx",
       entriesN = 4, buckets = 8)
@@ -350,7 +350,7 @@ class IvfLayoutSpec extends SparkSpec {
     val edges = Seq((e, a), (a, t), (e, c), (e2, c), (c, spare))
       .toDF("__vid", "nbr_id")
     val query = Seq(Tuple1(v(1, 0, 0))).toDF("qv")
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_del").toString
+    val dir = tempDir("graft_graph_del")
     Search.writeGraphIndex(corpus, col("vec_id"), col("embedding"), edges,
       s"$dir/idx", entriesN = 2, buckets = 2)
     def serve() = Search.graphSearchIndexed(spark, s"$dir/idx", query,
@@ -371,7 +371,7 @@ class IvfLayoutSpec extends SparkSpec {
     // compaction with crash injection at each swap step: serving stays
     // correct mid-crash (tombstones still present), retry converges
     Seq("staged", "vacated").foreach { step =>
-      val freshDir = java.nio.file.Files.createTempDirectory(s"graft_gc_$step").toString
+      val freshDir = tempDir(s"graft_gc_$step")
       Search.writeGraphIndex(corpus, col("vec_id"), col("embedding"), edges,
         s"$freshDir/idx", entriesN = 2, buckets = 2)
       Search.deleteFromGraphIndex(Seq(a, e2).toDF("vec_id"), col("vec_id"), s"$freshDir/idx")
@@ -408,7 +408,7 @@ class IvfLayoutSpec extends SparkSpec {
     val edges = Search.nnDescend(nodes, col("id"), col("vec"),
       Search.knnGraph(nodes, col("id"), col("vec"), cents, k = 2)
         .select(col("__vid"), col("nbr_id")), k = 2, rounds = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_grb_cos").toString
+    val dir = tempDir("graft_grb_cos")
     // cos-carrying store: the weight column must survive a rebuild —
     // a weighted centrality reader breaks otherwise
     Search.writeGraphIndex(nodes, col("id"), col("vec"),
@@ -440,7 +440,7 @@ class IvfLayoutSpec extends SparkSpec {
         entriesN = 8, buckets = 4)
     }
     def nodesOf(c: DataFrame) = c.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_grebuild").toString
+    val dir = tempDir("graft_grebuild")
     recipe(nodesOf(corpus), s"$dir/idx")
     // entry ring member to delete: smallest md5 of 0..39
     def md5hex(x: String) = java.security.MessageDigest.getInstance("MD5")
@@ -478,7 +478,7 @@ class IvfLayoutSpec extends SparkSpec {
     assert(serve(s"$dir/idx") === serve(s"$dir/fresh"))
     // crash injection: boom at each step, re-run converges to the same state
     Seq("staged", "prepared", "vacated").foreach { step =>
-      val cdir = java.nio.file.Files.createTempDirectory(s"graft_grb_$step").toString
+      val cdir = tempDir(s"graft_grb_$step")
       recipe(nodesOf(corpus), s"$cdir/idx")
       Search.deleteFromGraphIndex(Seq(7L).toDF("id"), col("id"), s"$cdir/idx")
       intercept[RuntimeException] {
@@ -495,7 +495,7 @@ class IvfLayoutSpec extends SparkSpec {
     }
     // straddling append during the rebuild: caught up into the staged
     // graph exactly once and reachable afterwards
-    val sdir = java.nio.file.Files.createTempDirectory("graft_grb_straddle").toString
+    val sdir = tempDir("graft_grb_straddle")
     recipe(nodesOf(corpus), s"$sdir/idx")
     var injected = false
     Search.rebuildGraphIndex(spark, s"$sdir/idx", kmeansK = 4, linkK = 2,
@@ -519,7 +519,7 @@ class IvfLayoutSpec extends SparkSpec {
   test("retrainIvfIndex: pre-snapshot tombstones are applied, mid-migration ones carried") {
     val all = clusteredCorpus(60)
     val cents0 = Search.kmeansTrain(all, col("vec_id"), col("embedding"), k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_retrain_td").toString
+    val dir = tempDir("graft_retrain_td")
     Search.writeIvfIndex(all, col("embedding"), cents0, s"$dir/idx")
     val deleted = Seq(5L, 17L, 33L)
     Search.deleteFromIvfIndex(deleted.toDF("vec_id"), col("vec_id"), s"$dir/idx")
@@ -564,7 +564,7 @@ class IvfLayoutSpec extends SparkSpec {
     val b = all.filter(col("vec_id") >= 50 && col("vec_id") < 70)
     val late = all.filter(col("vec_id") >= 70)
     val centsA = Search.kmeansTrain(a, col("vec_id"), col("embedding"), k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_retrain_s").toString
+    val dir = tempDir("graft_retrain_s")
     Search.writeIvfIndex(a, col("embedding"), centsA, s"$dir/idx")
     // a streamed batch BEFORE the migration, with its replay marker
     graft.streaming.Streams.applyIvfBatch(b, col("embedding"),
@@ -604,7 +604,7 @@ class IvfLayoutSpec extends SparkSpec {
     val all = clusteredCorpus(80)
     val cents = Search.kmeansTrain(all, col("vec_id"), col("embedding"), k = 4)
     val book = Search.pqTrain(all, col("vec_id"), col("embedding"), m = 4, ks = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_td").toString
+    val dir = tempDir("graft_ivfpq_td")
     Search.writeIvfPqIndex(all, col("embedding"), cents, book, ks = 8, s"$dir/idx")
     val q = all.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     // exact config (all clusters probed, corpus-sized rerank pool): the
@@ -621,7 +621,7 @@ class IvfLayoutSpec extends SparkSpec {
     assert(deleted.forall(id => !post.exists(_._1 == id)) && post.size == 10,
       "recalled PQ codes must stop scoring immediately")
     // equals a fresh IVFADC build (same codebooks) without the deleted rows
-    val freshDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_td_f").toString
+    val freshDir = tempDir("graft_ivfpq_td_f")
     Search.writeIvfPqIndex(all.filter(!col("vec_id").isin(deleted: _*)),
       col("embedding"), cents, book, ks = 8, s"$freshDir/idx")
     assert(post === serve(s"$freshDir/idx"))

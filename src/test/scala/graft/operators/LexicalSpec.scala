@@ -72,7 +72,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("bm25FromIndex: bit-identical to the corpus scan, bucket filter prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_idx").toString
+    val dir = tempDir("lex_idx")
     try {
       Lexical.writeInvertedIndex(
         graft.Tables.documents(spark, sf), $"doc_id", $"text", s"$dir/idx")
@@ -100,7 +100,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("phraseFromIndex: exact occurrence counts vs a driver-side sliding window") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_phrase").toString
+    val dir = tempDir("lex_phrase")
     try {
       Lexical.writeInvertedIndex(
         graft.Tables.documents(spark, sf), $"doc_id", $"text", s"$dir/idx")
@@ -127,7 +127,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("proximityFromIndex: slop widens matches; counts match a driver-side scan") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_prox").toString
+    val dir = tempDir("lex_prox")
     try {
       Lexical.writeInvertedIndex(
         graft.Tables.documents(spark, sf), $"doc_id", $"text", s"$dir/idx")
@@ -156,7 +156,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("appendToIndex: build half + append half serves bit-identical to a full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_incr").toString
+    val dir = tempDir("lex_incr")
     try {
       val docs = graft.Tables.documents(spark, sf)
       val cut = 250L
@@ -244,7 +244,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("healIndex: serving recovers an index whose stats swap was interrupted") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_heal").toString
+    val dir = tempDir("lex_heal")
     try {
       Lexical.writeInvertedIndex(
         graft.Tables.documents(spark, sf), $"doc_id", $"text", s"$dir/idx")
@@ -268,7 +268,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("takedown liveDocs: deleted docs leave every served query; surviving scores stay bit-identical (stale df)") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_td").toString
+    val dir = tempDir("lex_td")
     Lexical.writeInvertedIndex(
       graft.Tables.documents(spark, sf), $"doc_id", $"text", s"$dir/idx")
     val pre = Lexical.bm25FromIndex(spark, s"$dir/idx")
@@ -291,12 +291,12 @@ class LexicalSpec extends SparkSpec {
   test("mergeIndex: post-merge index is bit-identical to a fresh build on the filtered corpus; crash-interrupted merge re-runs to the same state") {
     val docs = graft.Tables.documents(spark, sf)
     val pre = Lexical.bm25FromIndex(spark, {
-      val tmp = java.nio.file.Files.createTempDirectory("lex_mg_pre").toString
+      val tmp = tempDir("lex_mg_pre")
       Lexical.writeInvertedIndex(docs, $"doc_id", $"text", s"$tmp/idx"); s"$tmp/idx"
     }).as[(Long, Double)].collect().toMap
     val del = pre.toSeq.sortBy { case (id, sc) => (-sc, id) }.take(3).map(_._1)
     // fresh build on the filtered corpus = the merge's target state
-    val freshDir = java.nio.file.Files.createTempDirectory("lex_mg_fresh").toString
+    val freshDir = tempDir("lex_mg_fresh")
     Lexical.writeInvertedIndex(docs.filter(!$"doc_id".isin(del: _*)),
       $"doc_id", $"text", s"$freshDir/idx")
     def tableRows(dir: String, t: String): Set[String] =
@@ -306,7 +306,7 @@ class LexicalSpec extends SparkSpec {
           case x => String.valueOf(x)
         }.mkString("|")).toSet
     // a merge interrupted after the terms swap re-runs to completion
-    val dir = java.nio.file.Files.createTempDirectory("lex_mg").toString
+    val dir = tempDir("lex_mg")
     Lexical.writeInvertedIndex(docs, $"doc_id", $"text", s"$dir/idx")
     Lexical.deleteFromIndex(del.toDF("doc_id"), $"doc_id", s"$dir/idx")
     intercept[RuntimeException] {
@@ -429,7 +429,7 @@ class LexicalSpec extends SparkSpec {
     assert(exp === Set(("cat", "cart"), ("cat", "cap"), ("dog", "dig")),
       s"got $exp")
     // scoring semantics via the public scorer on a written corpus
-    val dir = java.nio.file.Files.createTempDirectory("lex_fuzzy").toString
+    val dir = tempDir("lex_fuzzy")
     saved.write.parquet(s"$dir/documents.parquet")
     val scored = Lexical.bm25FuzzyScores(spark, dir, Seq("cat", "dog"))
       .as[(Long, Double)].collect().toMap
@@ -490,7 +490,7 @@ class LexicalSpec extends SparkSpec {
       (2L, "apple banana cherry date"),
       (3L, "unrelated words entirely here"),
       (4L, "banana only here today")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lex_mlt").toString
+    val dir = tempDir("lex_mlt")
     docs.write.parquet(s"$dir/documents.parquet")
     val got = Lexical.moreLikeThis(spark, dir, 1L, maxQueryTerms = 2)
       .as[(Long, Double)].collect().toMap
@@ -556,7 +556,7 @@ class LexicalSpec extends SparkSpec {
 
   test("fuzzyFromIndex: bit-identical to the corpus scan; takedown filters the served hits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lex_fuzzy_idx").toString
+    val dir = tempDir("lex_fuzzy_idx")
     Lexical.writeInvertedIndex(graft.Tables.documents(spark, sf),
       col("doc_id"), col("text"), dir)
     val scan = Lexical.bm25FuzzyScores(spark, sf, Seq("vektor", "sow"))
@@ -580,7 +580,7 @@ class LexicalSpec extends SparkSpec {
     // own terms table, the in-plan path over the corpus vocabulary, and
     // both must select identical expansions and scores
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lex_fuzzy_auto_idx").toString
+    val dir = tempDir("lex_fuzzy_auto_idx")
     Lexical.writeInvertedIndex(graft.Tables.documents(spark, sf),
       col("doc_id"), col("text"), dir)
     val scan = Lexical.bm25AutoFuzzyScores(spark, sf, Lexical.AutoFuzzyTerms)
@@ -601,7 +601,7 @@ class LexicalSpec extends SparkSpec {
       (3L, "hash q hash", "fr", "web"),
       (4L, "nothing matching here", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("lex_hl").toString
+    val dir = tempDir("lex_hl")
     docs.write.parquet(s"$dir/documents.parquet")
     val hl = Lexical.searchHighlight(spark, dir, Seq("hash"), k = 10)
       .select("doc_id", "n_occ", "snippet")
@@ -683,7 +683,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("index read: a term routed to a missing bucket dir returns no rows, no PATH_NOT_FOUND") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_missing").toString
+    val dir = tempDir("lex_missing")
     try {
       sparseIndex(s"$dir/idx")
       val t = unroutedTerm(s"$dir/idx")
@@ -696,7 +696,7 @@ class LexicalSpec extends SparkSpec {
   }
 
   test("index read: after appendToIndex into a previously empty bucket, the new doc is found") {
-    val dir = java.nio.file.Files.createTempDirectory("lex_newbucket").toString
+    val dir = tempDir("lex_newbucket")
     try {
       sparseIndex(s"$dir/idx")
       val t = unroutedTerm(s"$dir/idx")

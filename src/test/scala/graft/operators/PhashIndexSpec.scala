@@ -31,7 +31,7 @@ class PhashIndexSpec extends SparkSpec {
   private val ids: Seq[Long] = (1L to 120L)
 
   test("phash index: write + whole-corpus probe ≡ brute all-pairs (pigeonhole parity)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph_spec").toString
+    val dir = tempDir("graft_ph_spec")
     Multimodal.writePhashIndex(imgsOf(ids), dir)
     val got = Multimodal.probePhashIndex(imgsOf(ids), dir)
       .filter(col("doc_a") < col("doc_b"))
@@ -42,7 +42,7 @@ class PhashIndexSpec extends SparkSpec {
   }
 
   test("phash index: append is the merge — incremental build ≡ one-shot build") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph_app").toString
+    val dir = tempDir("graft_ph_app")
     val (lake, inc) = ids.partition(_ % 2 == 0)
     Multimodal.writePhashIndex(imgsOf(lake), dir)
     // cross-corpus probe BEFORE append: increment vs lake only
@@ -62,7 +62,7 @@ class PhashIndexSpec extends SparkSpec {
   }
 
   test("phash index: takedown drops pairs immediately; compaction reclaims physically and is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph_del").toString
+    val dir = tempDir("graft_ph_del")
     Multimodal.writePhashIndex(imgsOf(ids), dir)
     val want = brutePairs(ids)
     // pick a doc that participates in a pair — takedown must be visible
@@ -90,7 +90,7 @@ class PhashIndexSpec extends SparkSpec {
   }
 
   test("phash index: probe reads the lake through PartitionFilters on bucket") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph_plan").toString
+    val dir = tempDir("graft_ph_plan")
     Multimodal.writePhashIndex(imgsOf(ids), dir)
     val plan = Multimodal.probePhashIndex(imgsOf(ids.take(3)), dir)
       .queryExecution.executedPlan.toString
@@ -102,7 +102,7 @@ class PhashIndexSpec extends SparkSpec {
   }
 
   test("phash index: probe takes its config from the index meta, not the caller") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph_meta").toString
+    val dir = tempDir("graft_ph_meta")
     // widen the radius guard: bands from META must bound maxHamming
     Multimodal.writePhashIndex(imgsOf(ids.take(20)), dir, grid = 4, bands = 4)
     val e = intercept[IllegalArgumentException] {

@@ -65,7 +65,7 @@ class SearchSpec extends SparkSpec {
     // A file-backed corpus, like production: against a LocalRelation the
     // optimizer constant-folds the whole pipeline (and EliminateLimits can
     // even drop the top-k), which is not the plan shape being claimed.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_plan").toString
+    val dir = tempDir("graft_ivf_plan")
     corpus.write.parquet(s"$dir/corpus")
     val lake = spark.read.parquet(s"$dir/corpus")
     val cents = Seq((0L, v(1, 0.02, 0).map(_.toDouble)), (1L, v(0, 0.02, 1).map(_.toDouble)))
@@ -180,7 +180,7 @@ class SearchSpec extends SparkSpec {
     val q = Seq(Tuple1(mk(2, 0))).toDF("qv")
     val cents = Search.kmeansTrain(corpus, $"id", $"vec", k = 4, iters = 10)
     val book = Search.pqTrain(corpus, $"id", $"vec", m = 4, ks = 4, sampleN = 60)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = tempDir("graft_ivfpq")
     Search.writeIvfPqIndex(corpus, $"vec", cents, book, ks = 4, s"$dir/idx")
     // the at-rest table carries both index forms
     val idx = spark.read.parquet(s"$dir/idx")

@@ -90,12 +90,12 @@ class TextAnalysisSpec extends SparkSpec {
       TextAnalysis.exciseFromLineIndex(all, $"doc_id", $"text", dir, maxOcc = 2L)
         .orderBy("doc_id").as[(Long, String, Long, Long)].collect().toSeq
     // one-shot reference
-    val ref = java.nio.file.Files.createTempDirectory("graft_lc_ref").toString
+    val ref = tempDir("graft_lc_ref")
     TextAnalysis.writeLineCountIndex(all, $"text", ref)
     val want = excised(ref)
     assert(want.map(_._4).sum === 3L, s"boiler (3 occurrences > 2) excises: $want")
     // incremental: write half 1, fold half 2 in as a batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_lc_inc").toString
+    val dir = tempDir("graft_lc_inc")
     TextAnalysis.writeLineCountIndex(half1.toDF("doc_id", "text"), $"text", dir)
     TextAnalysis.applyLineCountBatch(half2.toDF("doc_id", "text"), $"text", dir,
       batchId = 1L)
@@ -147,7 +147,7 @@ class TextAnalysisSpec extends SparkSpec {
     val boiler = "accept cookies to continue"
     val docs = ((1L to 5L).map(i => (i, s"$boiler\nunique line number $i")) :+
       (6L, "another singleton document")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lc_prune").toString
+    val dir = tempDir("graft_lc_prune")
     TextAnalysis.writeLineCountIndex(docs, $"text", dir)
     val before = spark.read.parquet(s"$dir/counts").count()
     TextAnalysis.pruneLineCountIndex(spark, dir, floor = 2L)

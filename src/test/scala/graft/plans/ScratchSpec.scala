@@ -53,7 +53,7 @@ class ScratchSpec extends SparkSpec {
   }
 
   test("with spark.graft.scratch.dir set, dir's output lands under it") {
-    val root = Files.createTempDirectory("graft_scratch_root").toFile
+    val root = new java.io.File(tempDir("graft_scratch_root"))
     try {
       val s = spark.newSession()
       s.conf.set("spark.graft.scratch.dir", s"${root.getPath}/nested")

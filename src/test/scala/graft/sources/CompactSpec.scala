@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -9,8 +7,7 @@ import graft.SparkSpec
 class CompactSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-compact").toString
+  private def tmpDir(): String = tempDir("graft-compact")
 
   test("compactParquet: merges small files, content identical, staging gone") {
     val dir = s"${tmpDir()}/t"

@@ -152,7 +152,7 @@ class MultimodalStubSpec extends SparkSpec {
     // (disjoint histogram bin → cos 0 → kept); doc 2 is sub-frame-sized
     val text = "a" * 256 + "a" * 256 + "Q" * 256
     val docs = Seq((1L, text), (2L, "short")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mm_fd").toString
+    val dir = tempDir("mm_fd")
     docs.write.parquet(s"$dir/documents.parquet")
     val got = graft.operators.Multimodal.frameDedup(spark, dir)
       .as[(Long, Long, Option[Double], Boolean)].collect().toSeq

@@ -10,11 +10,8 @@ import graft.SparkSpec
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("CsvSource: BOM + diacritic headers + sentinels + safe casts, one pass") {
-    val dir = tmp("graft_csv")
+    val dir = tempDir("graft_csv")
     // utf-8-sig style: BOM + Turkish headers + sentinel cells (the exact
     // edge the reference handles imperatively)
     val csv = "﻿İdari Bölgeler,Tarih En Erken,Mesafe\n" +
@@ -38,7 +35,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CsvSource: explicit schema skips inference and binds types") {
-    val dir = tmp("graft_csv_schema")
+    val dir = tempDir("graft_csv_schema")
     Files.write(Paths.get(dir, "t.csv"), "id,score\n1,2.5\n2,3.5\n".getBytes(StandardCharsets.UTF_8))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
@@ -49,7 +46,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CsvSource: round-trip write/read keeps rows") {
-    val dir = tmp("graft_csv_rt")
+    val dir = tempDir("graft_csv_rt")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     CsvSource.write(df, s"$dir/out")
     val back = CsvSource.read(spark, s"$dir/out")
@@ -58,7 +55,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JsonSource: schema'd read, corrupt record quarantined not fatal") {
-    val dir = tmp("graft_json")
+    val dir = tempDir("graft_json")
     val good = """{"image_path":"dataset/1900/01/a.jpg","filename":"a.jpg","features":[0.1,0.2],"feature_dimension":2}"""
     val bad = """{"image_path": BROKEN"""
     Files.write(Paths.get(dir, "a.json"), (good + "\n" + bad).getBytes(StandardCharsets.UTF_8))
@@ -73,7 +70,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JsonSource: write then read round-trips the nested segment shape") {
-    val dir = tmp("graft_json_rt")
+    val dir = tempDir("graft_json_rt")
     val row = (
       "x.jpg",
       Seq((1, 100, Seq(0f, 0f, 10f, 10f), 0.97f, Seq(0.5f, 0.5f),
@@ -111,7 +108,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("BinarySource: glob scan, path parts, existence semi-join") {
-    val dir = tmp("graft_bin")
+    val dir = tempDir("graft_bin")
     Files.createDirectories(Paths.get(dir, "1900", "01"))
     Files.write(Paths.get(dir, "1900", "01", "a.jpg"), Array[Byte](1, 2, 3))
     Files.write(Paths.get(dir, "1900", "01", "b.png"), Array[Byte](4, 5))

@@ -128,7 +128,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("upsertByKey foreachBatch sink: later batches win, target stays keyed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = tempDir("graft_upsert")
     val target = s"$dir/target"
     val b1 = Seq(Ev(1L, ts(0), 10L, "view", 1.0), Ev(2L, ts(1), 11L, "view", 2.0)).toDF()
     Streams.upsertByKey(spark, target, "event_id")(b1, 0L)
@@ -141,7 +141,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("upsertByKey: stale staging dirs from crashed earlier batches are cleared") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_heal").toString
+    val dir = tempDir("graft_upsert_heal")
     val target = s"$dir/target"
     // simulate two crashed attempts that staged but never swapped
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"${target}__staging_3"))
@@ -163,7 +163,7 @@ class StreamsSpec extends SparkSpec {
     // INSIDE the state dir — where the rename-swap silently discards
     // them and the Path.getName-based cleaners never look. Pin that the
     // slash spelling is exactly the no-slash spelling.
-    val dir = java.nio.file.Files.createTempDirectory("graft_slash").toString
+    val dir = tempDir("graft_slash")
     val b1 = Seq(Ev(1L, ts(0), 10L, "view", 1.0)).toDF()
     Streams.upsertByKey(spark, s"$dir/target/", "event_id")(b1, 0L)
     val b2 = Seq(Ev(1L, ts(1), 10L, "click", 2.0)).toDF()
@@ -185,7 +185,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("upsertByKeyPartitioned: only touched partitions are rewritten") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_part").toString
+    val dir = tempDir("graft_upsert_part")
     val target = s"$dir/target"
     def batch(rows: (Long, String, Double)*) =
       rows.toDF("event_id", "day", "value")
@@ -283,7 +283,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("startUpsertStream: full writeStream wiring upserts across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upstream").toString
+    val dir = tempDir("graft_upstream")
     val input = MemoryStream[Ev]
     val q = Streams.startUpsertStream(input.toDF(), s"$dir/target", s"$dir/ckpt")
     try {
@@ -366,7 +366,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("startUpsertStream with partCol routes through the partitioned upsert") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upstream_part").toString
+    val dir = tempDir("graft_upstream_part")
     val input = MemoryStream[Ev]
     val q = Streams.startUpsertStream(
       input.toDF().withColumn("day", to_date($"ts")),
@@ -437,7 +437,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("ingestPipeline: gate → dedup → partitioned upsert, redacted text at rest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_pipe").toString
+    val dir = tempDir("graft_ingest_pipe")
     val input = MemoryStream[(Long, Timestamp, String, String)]
     val q = Streams.ingestPipeline(
       input.toDF().toDF("id", "ts", "day", "text"),
@@ -467,7 +467,7 @@ class StreamsSpec extends SparkSpec {
 
   test("modelGatedIngest: gate flips as the streamed NB model learns; per-phase parity with the batch gate") {
     import graft.operators.Classify
-    val dir = java.nio.file.Files.createTempDirectory("graft_model_gate").toString
+    val dir = tempDir("graft_model_gate")
     val modelDir = s"$dir/model"
     val input = MemoryStream[(Long, Timestamp, String, String)]
     val q = Streams.modelGatedIngest(
@@ -518,7 +518,7 @@ class StreamsSpec extends SparkSpec {
 
   test("fractionGatedIngest: below-k gate is the exact historical percentile; gate-then-learn; seed admits") {
     import graft.operators.Classify
-    val dir = java.nio.file.Files.createTempDirectory("graft_frac_gate").toString
+    val dir = tempDir("graft_frac_gate")
     val modelDir = s"$dir/model"
     val sketchDir = s"$dir/sketch"
     // model store first (both classes) — no cold-start phase here, the
@@ -604,7 +604,7 @@ class StreamsSpec extends SparkSpec {
     // phase-1 sketch state, the margins from nbScore under the store.
     import graft.operators.{Classify, TextAnalysis}
     import graft.functions.TextFunctions
-    val dir = java.nio.file.Files.createTempDirectory("graft_stack").toString
+    val dir = tempDir("graft_stack")
     val modelDir = s"$dir/model"
     val sketchDir = s"$dir/sketch"
     // disjoint alphabetic filler per doc (content dedup must not collapse
@@ -682,7 +682,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("fractionGatedIngest: marker retention prunes dead sidecars, keeps the replay window") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_frac_prune").toString
+    val dir = tempDir("graft_frac_prune")
     val labeled = Seq(
       (101L, "the quick brown fox is excellent quality writing and fluent prose", true),
       (102L, "excellent fluent prose with quality words about the brown fox", true),
@@ -721,7 +721,7 @@ class StreamsSpec extends SparkSpec {
 
   test("fractionGatedIngest: the cold-start verdict is durable; a fresh checkpoint over stale sidecars is refused") {
     import graft.functions.TextFunctions
-    val dir = java.nio.file.Files.createTempDirectory("graft_frac_cold").toString
+    val dir = tempDir("graft_frac_cold")
     val input = MemoryStream[(Long, Timestamp, String, String)]
     val ckpt = s"$dir/ckpt"
     // NO model store yet: batch 0 must land whole AND record the fact
@@ -773,7 +773,7 @@ class StreamsSpec extends SparkSpec {
     // conclude "no history" and admit the whole batch (the pre-r14
     // bug); the healed read must find the history and keep gating.
     import graft.operators.Classify
-    val dir = java.nio.file.Files.createTempDirectory("graft_frac_heal").toString
+    val dir = tempDir("graft_frac_heal")
     val modelDir = s"$dir/model"
     val sketchDir = s"$dir/sketch"
     val labeled = Seq(
@@ -823,7 +823,7 @@ class StreamsSpec extends SparkSpec {
 
   test("modelGatedIngest benchmark gate: eval-contaminated docs never land") {
     import graft.operators.{Curation, GramIndex}
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_gate").toString
+    val dir = tempDir("graft_bench_gate")
     // the benchmark set, indexed once at publication (n=5 shingles)
     val bench = Seq(
       (900L, "the secret held out evaluation passage nobody may train on"))
@@ -879,7 +879,7 @@ class StreamsSpec extends SparkSpec {
 
   test("indexIngest: streamed index serves bit-identical to a full rebuild") {
     import graft.operators.Lexical
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_stream").toString
+    val dir = tempDir("graft_idx_stream")
     val b1 = Seq(
       (1L, "the vector engine joins a hash join to a stream"),
       (2L, "filter the stream before the hash join runs"))
@@ -919,7 +919,7 @@ class StreamsSpec extends SparkSpec {
 
   test("gramIngest: appended lake docs are immediately audit-visible; equals batch audit on the union") {
     import graft.operators.{Dedup, GramIndex}
-    val dir = java.nio.file.Files.createTempDirectory("graft_gram_stream").toString
+    val dir = tempDir("graft_gram_stream")
     val b1 = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "completely different content with no shared runs at all okay"))
@@ -960,7 +960,7 @@ class StreamsSpec extends SparkSpec {
 
   test("phashIngest: streamed image batches are immediately probe-visible; equals a one-shot build") {
     import graft.operators.Multimodal
-    val dir = java.nio.file.Files.createTempDirectory("graft_ph_stream").toString
+    val dir = tempDir("graft_ph_stream")
     def imgs(ids: Seq[Long]) = graft.sources.JdkImage
       .renderBmpFixtures(ids.toDF("doc_id")).toDF("doc_id", "payload")
     val all = (1L to 120L)
@@ -982,7 +982,7 @@ class StreamsSpec extends SparkSpec {
       val after2 = probe()
       // batch analog: one-shot builds over each prefix of the lake
       def oneShot(lake: Seq[Long]): Set[(Long, Long, Long)] = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ph_ref").toString
+        val tmp = tempDir("graft_ph_ref")
         Multimodal.writePhashIndex(imgs(lake), tmp)
         Multimodal.probePhashIndex(imgs(probeIds), tmp)
           .filter($"doc_a" < $"doc_b")
@@ -1018,7 +1018,7 @@ class StreamsSpec extends SparkSpec {
 
   test("urlBlocklistGated composes into a streaming ingest (stateless per-row gate)") {
     import graft.operators.Curation
-    val dir = java.nio.file.Files.createTempDirectory("graft_url_stream").toString
+    val dir = tempDir("graft_url_stream")
     val input = MemoryStream[(Long, Timestamp, String, String, String)]
     // the blocklist gate FIRST (stage-1: cheapest, before any content
     // look), then the standard hygiene chain and upsert sink
@@ -1044,7 +1044,7 @@ class StreamsSpec extends SparkSpec {
 
   test("lineCountIngest: streamed line counts serve excision identical to a one-shot count") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("graft_lc_stream").toString
+    val dir = tempDir("graft_lc_stream")
     val boiler = "subscribe to our newsletter"
     val b1 = Seq((1L, s"$boiler\nfirst article body"),
       (2L, s"second piece\n$boiler"))
@@ -1064,7 +1064,7 @@ class StreamsSpec extends SparkSpec {
       input.addData(b2); q.processAllAvailable()
       // after batch 2 the accumulated count is 3 — excises everywhere,
       // exactly like a one-shot count over the union
-      val ref = java.nio.file.Files.createTempDirectory("graft_lc_sref").toString
+      val ref = tempDir("graft_lc_sref")
       TextAnalysis.writeLineCountIndex(probe, $"text", ref)
       assert(served(s"$dir/idx") === served(ref))
       assert(served(s"$dir/idx").map(_._4).sum === 3L)
@@ -1079,7 +1079,7 @@ class StreamsSpec extends SparkSpec {
 
   test("hplIngest: streamed hyperplane index pairs identical to a one-shot build") {
     import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_hpl_stream").toString
+    val dir = tempDir("graft_hpl_stream")
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect().toSeq
     val (b2, b1) = emb.partition(_._1 % 3 == 0)
@@ -1113,7 +1113,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ivfIngest: streamed IVF index serves identical to a batch build; replays skip") {
     import graft.operators.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString
+    val dir = tempDir("graft_ivf_stream")
     val cents = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0))).toDF("cid", "c")
     val b1 = Seq((1L, Array(0.9, 0.1)), (2L, Array(0.1, 0.9)))
     val b2 = Seq((3L, Array(0.8, 0.2)), (4L, Array(0.05, 1.0)))
@@ -1157,7 +1157,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ivfIngest-maintained lake serves incremental semantic dedup ≡ in-plan") {
     import graft.operators.{Dedup, Search}
-    val dir = java.nio.file.Files.createTempDirectory("graft_sem_stream").toString
+    val dir = tempDir("graft_sem_stream")
     val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "c")
     // the lake arrives as two micro-batches into the cluster-partitioned
     // index — the SAME layout the semantic probe partition-prunes, so
@@ -1195,7 +1195,7 @@ class StreamsSpec extends SparkSpec {
 
   test("semanticIngest: arriving near-dups are dropped against batch AND lake; replay idempotent") {
     import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_sem_ingest").toString
+    val dir = tempDir("graft_sem_ingest")
     val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "c")
     val b1 = Seq((10L, Array(0.9, 0.1)), (11L, Array(0.1, 0.9)))
     // 12 ~ lake 10 (cross-batch dup), 13 new, 14 ~ 13 (within-batch dup)
@@ -1235,7 +1235,7 @@ class StreamsSpec extends SparkSpec {
 
   test("graphIngest: streamed inserts are reachable (incl. within-batch links); replays skip") {
     import graft.operators.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_stream").toString
+    val dir = tempDir("graft_graph_stream")
     // base corpus: 8 points fanned over the upper half-plane, ring edges
     def ang(deg: Double) = Array(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
     val base = (0 until 8).map(i => (i.toLong, ang(30 + i * 15)))
@@ -1292,7 +1292,7 @@ class StreamsSpec extends SparkSpec {
     // the add-vs-train split's parity contract: a micro-batch STREAMED
     // into the layout must land exactly what the batch append lands —
     // same nodes, same forward+reverse edge multiset, same served page
-    val root = java.nio.file.Files.createTempDirectory("graft_graph_par").toString
+    val root = tempDir("graft_graph_par")
     def ang(deg: Double) = Array(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
     val base = (0 until 8).map(i => (i.toLong, ang(30 + i * 15)))
     val ring = (0 until 8).flatMap(i =>
@@ -1332,7 +1332,7 @@ class StreamsSpec extends SparkSpec {
 
   test("takedownIngest: one deletion stream fans out to multiple index families; replay harmless") {
     import graft.operators.Search
-    val dir = java.nio.file.Files.createTempDirectory("graft_takedown").toString
+    val dir = tempDir("graft_takedown")
     def ang(deg: Double) = Array(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
     val base = (0 until 8).map(i => (i.toLong, ang(i * 40)))
     // family 1: IVF layout; family 2: graph layout — same id space
@@ -1377,7 +1377,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("fileIngest: streaming file source reads the events shape") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val dir = tempDir("graft_ingest")
     evs.take(3).toDF().write.parquet(s"$dir/in")
     val q = Streams.fileIngest(spark, s"$dir/in", maxFilesPerTrigger = 1)
       .writeStream.format("memory").queryName("ingest_sink")
@@ -1389,8 +1389,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("nbIngest: streamed count state == full retrain; crash replay can't double-count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nbmodel").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nbmodel_ck").toString
+    val dir = tempDir("graft_nbmodel")
+    val ckpt = tempDir("graft_nbmodel_ck")
     val b1 = Seq((1L, "good fine good", true), (2L, "bad awful", false))
     val b2 = Seq((3L, "fine new tokens", true), (4L, "awful bad bad", false),
       (5L, "good awful", true))
@@ -1424,7 +1424,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("nbStoreReady/nbModelFromStore: mid-swap readers use the __old copy, never heal") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nbro").toString
+    val dir = tempDir("graft_nbro")
     val b1 = Seq((1L, "good fine", true), (2L, "bad poor", false))
     Streams.applyNbBatch(b1.toDF("id", "text", "pos"), col("text"), col("pos"), dir, 0L)
     // the exact between-renames shape of a LIVE applyNbBatch swap: state
@@ -1453,7 +1453,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("applyNbBatch: crash-interrupted state swap heals before the next batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nbheal").toString
+    val dir = tempDir("graft_nbheal")
     val b1 = Seq((1L, "good fine", true), (2L, "bad poor", false))
     val b2 = Seq((3L, "fine good good", true), (4L, "poor", false))
     Streams.applyNbBatch(b1.toDF("id", "text", "pos"), col("text"), col("pos"), dir, 0L)
@@ -1480,8 +1480,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("quantileSketchIngest: streamed sample == batch quantileSketch over the union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qsketch").toString + "/state"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qsketch_ck").toString
+    val dir = tempDir("graft_qsketch") + "/state"
+    val ckpt = tempDir("graft_qsketch_ck")
     val b1 = (1L to 400L).map(i => (i, (i % 97).toDouble))
     val b2 = (401L to 900L).map(i => (i, (i % 89).toDouble))
     val input = MemoryStream[(Long, Double)]
@@ -1504,8 +1504,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("funnelIngest: stream ≡ batch funnel incl. out-of-order step 1; junk evicted below watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString + "/state"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_funnel_ck").toString
+    val dir = tempDir("graft_funnel") + "/state"
+    val ckpt = tempDir("graft_funnel_ck")
     def h(hh: Double): Timestamp = new Timestamp(1700000000000L + (hh * 3600000L).toLong)
     // u1 completes; u2's first view arrives LATE (batch 2) and must
     // re-validate the click that preceded it in arrival order; u3's
@@ -1545,8 +1545,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("weightedSampleIngest: streamed sample == batch weightedGroupSample over the union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wsample").toString + "/state"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_wsample_ck").toString
+    val dir = tempDir("graft_wsample") + "/state"
+    val ckpt = tempDir("graft_wsample_ck")
     // heavy ids (w=50) sprinkled among light ones (w=1), split across
     // batches so the merge has to displace earlier light winners
     val b1 = (1L to 300L).map(i => (i, if (i % 50 == 0) 50.0 else 1.0))
@@ -1576,8 +1576,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("kmvSketchIngest: streamed estimate == batch kmvDistinct; replay is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv").toString + "/state"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_kmv_ck").toString
+    val dir = tempDir("graft_kmv") + "/state"
+    val ckpt = tempDir("graft_kmv_ck")
     val b1 = (1L to 300L).map(i => i % 213) // duplicates on purpose
     val b2 = (1L to 500L).map(i => i % 377)
     val input = MemoryStream[Long]

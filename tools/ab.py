@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Alternated A/B of perfbench runs: a parent revision against this checkout.
 
-    python3 tools/ab.py --parent HEAD~1 --workload serve_search --pairs 10
+    python3 tools/ab.py --parent HEAD~1 --workload serve_search --pairs 10 --claim latency_p50_s
 
 The parent revision is exported with `git archive` into a temporary
 directory (a self-contained copy: no worktree is registered in the
@@ -13,12 +13,14 @@ pair, so drift of the box over the sequence touches both sides alike.
 It prints every pair's end-to-end metrics, then for each end-to-end
 metric of BENCHMARK.json each side's median and quartiles, how many pairs the change won (ties
 count for neither side) and the change of the medians against the
-parent's interquartile range and against the metric's bound. A gain in
-`cpu_s_per_op` is claimed only when the change won at least nine tenths
-of all pairs run (a pair in which either side errored is a loss), the
-medians differ by more than the parent's interquartile range, and the
-change had no more errored or incorrect runs and no more failed ops than
-the parent. Nothing under perfbench/ is edited.
+parent's interquartile range and against the metric's bound. Which way
+is better for a metric is read from BENCHMARK.json. A gain in the metric
+named by `--claim` (one of BENCHMARK.json's end-to-end metrics) is claimed
+only when the change won at least nine tenths of all pairs run (a pair in
+which either side errored is a loss), the medians differ by more than the
+parent's interquartile range, and the change had no more errored or
+incorrect runs and no more failed ops than the parent. Nothing under
+perfbench/ is edited.
 """
 import argparse
 import json
@@ -31,7 +33,6 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-CLAIMED = "cpu_s_per_op"  # the end-to-end metric a gain is claimed on
 
 
 def export(rev, dest):
@@ -66,8 +67,8 @@ def quartiles(v):
     return q1, statistics.median(v), q3
 
 
-def summarise(spec, pairs, total):
-    """The table of every end-to-end metric and the verdict on CLAIMED.
+def summarise(spec, pairs, total, claim):
+    """The table of every end-to-end metric and the verdict on `claim`.
 
     Wins are counted over all `total` pairs: a pair in which either side
     errored counts as a loss for the change. Medians and quartiles are
@@ -100,11 +101,11 @@ def summarise(spec, pairs, total):
         lines.append(f"| {name} | {amed:.4g} [{aq1:.4g}, {aq3:.4g}] | {bmed:.4g} [{bq1:.4g}, {bq3:.4g}] | "
                      f"{diff / amed * 100 if amed else 0:+.1f} % | {wins}/{total} | "
                      f"{'yes' if beyond_iqr else 'no'} | {'yes' if worse <= bounds[name] else 'NO'} |")
-        if name == CLAIMED:
+        if name == claim:
             verdict = (wins >= 0.9 * total and sign * diff > 0 and beyond_iqr, wins)
     won, wins = verdict if verdict is not None else (False, 0)
     won = won and bad["change"] <= bad["parent"] and failed["change"] <= failed["parent"]
-    lines += ["", f"{CLAIMED}: change won {wins}/{total} pairs; gain "
+    lines += ["", f"{claim}: change won {wins}/{total} pairs; gain "
               f"{'claimed' if won else 'NOT shown'} (needs >= 9/10 of all pairs, a median "
               "difference beyond the parent's interquartile range, and no more errored, "
               "incorrect runs or failed ops than the parent)"]
@@ -118,10 +119,15 @@ def main():
     p.add_argument("--pairs", type=int, default=10)
     p.add_argument("--seed", type=int, default=1, help="seed of the first pair; pair i uses seed + i")
     p.add_argument("--workdir", help="directory for the parent's copy (default: a new temporary directory)")
+    p.add_argument("--claim", required=True, metavar="METRIC",
+                   help="the end-to-end metric of BENCHMARK.json a gain is claimed on")
     args = p.parse_args()
     spec = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     if args.workload not in [w["name"] for w in spec["workloads"]]:
         p.error(f"unknown workload {args.workload}")
+    metrics = [m["name"] for m in spec["end_to_end"]]
+    if args.claim not in metrics:
+        p.error(f"--claim {args.claim} is not an end-to-end metric of BENCHMARK.json: {', '.join(metrics)}")
     seconds = spec["run_seconds"]
     if args.workdir:
         os.makedirs(args.workdir, exist_ok=True)
@@ -147,7 +153,7 @@ def main():
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     print()
-    print(summarise(spec, pairs, args.pairs))
+    print(summarise(spec, pairs, args.pairs, args.claim))
 
 
 if __name__ == "__main__":
