@@ -325,9 +325,9 @@ class ServingHttpSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs launched while `f` runs in the per-thread pools that
-    * [[ServingHttp]]'s handlers run their requests in. */
-  private def servedJobs(f: => Unit): Int = {
+  /** `f`'s value and the Spark jobs launched while it runs in the
+    * per-thread pools that [[ServingHttp]]'s handlers run requests in. */
+  private def servedJobs[A](f: => A): (A, Int) = {
     val sc = spark.sparkContext
     val marker = s"served-jobs-marker-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -342,36 +342,28 @@ class ServingHttpSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      f
+      val out = f
       // the listener bus delivers in order: once the marker job's start
       // arrives, every job the requests launched has been counted
       sc.setJobGroup(marker, "listener drain marker")
       sc.parallelize(Seq(1), 1).count()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get()
+      (out, jobs.get())
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }
 
-  test("a warm graph request launches no Spark job; its JSON is written on the driver") {
+  test("warm requests: graph launches no Spark job, mmr two (query broadcast, pool collect)") {
+    // the JSON is written on the driver, so rows already there need no job
     withServer { port =>
-      assert(post(port, "/api/search", keyed("graph", 5))._1 === 200) // loads the hot image
-      var body = ""
-      val n = servedJobs { body = post(port, "/api/search", keyed("graph", 6))._2 }
-      assert(body === Serving.handle(spark, d, keyed("graph", 6)))
-      assert(n === 0, s"a warm graph request launched $n Spark job(s)")
-    }
-  }
-
-  test("a warm mmr request runs two Spark jobs: the query broadcast and the pool collect") {
-    withServer { port =>
-      assert(post(port, "/api/search", keyed("mmr", 5))._1 === 200)
-      var body = ""
-      val n = servedJobs { body = post(port, "/api/search", keyed("mmr", 6))._2 }
-      assert(body === Serving.handle(spark, d, keyed("mmr", 6)))
-      assert(n <= 2, s"a warm mmr request launched $n Spark job(s)")
+      for ((mode, most) <- Seq("graph" -> 0, "mmr" -> 2)) {
+        assert(post(port, "/api/search", keyed(mode, 5))._1 === 200) // per-JVM builds
+        val (body, n) = servedJobs(post(port, "/api/search", keyed(mode, 6))._2)
+        assert(body === Serving.handle(spark, d, keyed(mode, 6)))
+        assert(n <= most, s"a warm $mode request launched $n Spark job(s)")
+      }
     }
   }
 
