@@ -64,14 +64,29 @@ private[graft] object VectorKernels {
 
   /** The interpreted `graft_cosine`: Σab / sqrt(Σa²·Σb²) in one pass,
     * elements widened to double; null on a length mismatch or a zero
-    * norm. Callers off the expression path (a driver-held pool) use it
-    * to get the same bits as the SQL function. */
+    * norm. */
   def cosine(a: ArrayData, fa: Boolean, b: ArrayData, fb: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
       val x = at(a, fa, i); val y = at(b, fb, i)
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else dot / denom
+  }
+
+  /** [[cosine]] over vectors already widened on the driver: the same
+    * pass in the same order, so the same bits as the SQL function. The
+    * driver-side scorers use it: the graph hot tier, mmr's pool matrix
+    * and the driver-served whole mode. */
+  def cosine(a: Array[Double], b: Array[Double]): java.lang.Double = {
+    val n = a.length
+    if (n != b.length) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i); val y = b(i)
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)

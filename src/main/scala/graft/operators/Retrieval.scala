@@ -1246,9 +1246,24 @@ object Retrieval {
       // style fixed budget) or "auto" (ES AUTO — 0/1/2 by term length)
       fuzziness: String = "1")
 
+  private val pointImages = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.FutureTask[Option[Search.PointImage]]]()
+
+  /** The point band's serving image of `d` ([[Search.PointImage]] of
+    * [[imageVecs]] and [[segs]]), built once per JVM by [[Scratch.once]]
+    * outside the map's bin lock; None when it is over the graph hot
+    * tier's driver budget, and then `whole` and `tags` run their
+    * distributed plans. Its arrays hold `24 + 8·dim` bytes per image and
+    * 16 per segment (sf0.1: 166 KB, BASELINE.md). */
+  private[graft] def pointImage(s: SparkSession, d: String): Option[Search.PointImage] =
+    Scratch.once(pointImages, d)(Search.pointImage(imageVecs(s, d), segs(s, d)))
+
   /** One entry point, four modes, every knob an argument — each mode
     * delegates to the same generic [[Search]] engine the named queries
-    * use, so parameterization adds no second code path. */
+    * use, so parameterization adds no second code path. `whole` and
+    * `tags` answer from the driver-held [[pointImage]] with the rows of
+    * [[Search.knnBrute]] and [[Search.tagSearch]] (`PointImageSpec` pins
+    * it), as `graph` answers from its hot image: no Spark job. */
   def run(s: SparkSession, d: String, req: SearchRequest): DataFrame = {
     val qid = req.queryImageId
     def qSegs = segs(s, d).filter(col("image_id") === qid)
@@ -1257,12 +1272,15 @@ object Retrieval {
       .select(col("seg_id").as("qseg"), col("embedding").as("qv"))
     def others = segs(s, d).filter(col("image_id") =!= qid)
     req.mode match {
-      case "whole" =>
-        val qw = imageVecs(s, d).filter(col("image_id") === qid)
-          .select(col("wv").as("qv"))
-        Search.knnBrute(imageVecs(s, d).filter(col("image_id") =!= qid),
-            col("wv"), qw, req.k, tie = col("image_id"), offset = 1.0)
-          .select(col("image_id"), col("score"))
+      case "whole" => pointImage(s, d) match {
+        case Some(img) => Search.knnServeById(s, img, qid, req.k, offset = 1.0)
+        case None =>
+          val qw = imageVecs(s, d).filter(col("image_id") === qid)
+            .select(col("wv").as("qv"))
+          Search.knnBrute(imageVecs(s, d).filter(col("image_id") =!= qid),
+              col("wv"), qw, req.k, tie = col("image_id"), offset = 1.0)
+            .select(col("image_id"), col("score"))
+      }
       case "segment" =>
         Search.segmentScores(others.select("image_id", "embedding"), qSegs)
           .orderBy(desc("avg_sim"), asc("image_id")).limit(req.k)
@@ -1274,8 +1292,10 @@ object Retrieval {
           queryWhole = imageVecs(s, d).filter(col("image_id") === qid)
             .select(col("wv").as("qv")),
           qSegs = qSegs, k = req.k, wWhole = req.wWhole, wSeg = req.wSeg)
-      case "tags" =>
-        Search.tagSearch(segs(s, d), req.tags, req.minConf, req.k)
+      case "tags" => pointImage(s, d) match {
+        case Some(img) => Search.tagSearchServe(s, img, req.tags, req.minConf, req.k)
+        case None => Search.tagSearch(segs(s, d), req.tags, req.minConf, req.k)
+      }
       case "lexical" => // beyond-reference: deterministic BM25 (portable ES _score)
         require(req.terms.nonEmpty, "lexical mode needs non-empty 'terms'")
         // served from the at-rest index (r19): per request only the query

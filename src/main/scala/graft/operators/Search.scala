@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,9 +81,9 @@ object Search {
       .select(col("vec_id"), col("v").cast("array<double>"), col("rel")) // exact widening
       .collect()
     val rel = pool.map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val vecs = pool.map(r => r.getLong(0) -> ArrayData.toArrayData(r.getSeq[Double](1).toArray))
+    val vecs = pool.map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
     val sims = (for ((ia, va) <- vecs; (ib, vb) <- vecs)
-      yield (ia, ib) -> r6(VectorKernels.cosine(va, false, vb, false))).toMap
+      yield (ia, ib) -> r6(VectorKernels.cosine(va, vb))).toMap
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     val remaining = scala.collection.mutable.TreeSet.empty[Long] ++ rel.keys
     while (selected.size < k && remaining.nonEmpty) {
@@ -1235,7 +1237,7 @@ object Search {
       case d: java.lang.Double => d.doubleValue()
       case o => o.toString.toDouble
     }.toArray
-    case o => sys.error(s"graph hot tier: unexpected vec cell $o")
+    case o => sys.error(s"driver image: unexpected vec cell $o")
   }
 
   /** Spec-only seam: runs between the stamp read and the image load in
@@ -1254,7 +1256,8 @@ object Search {
     * multiple of the on-disk bytes, well inside this JVM's heap), loud
     * for the mistake it exists to catch: pointing the hot tier at a
     * whole-corpus layout that belongs on the distributed spelling.
-    * Override via -Dgraft.graph.hot.maxBytes / GRAFT_GRAPH_HOT_MAX_BYTES. */
+    * Override via -Dgraft.graph.hot.maxBytes / GRAFT_GRAPH_HOT_MAX_BYTES.
+    * The point band's image ([[pointImage]]) is held to the same budget. */
   private def hotMaxBytes: Long =
     sys.props.get("graft.graph.hot.maxBytes")
       .orElse(sys.env.get("GRAFT_GRAPH_HOT_MAX_BYTES"))
@@ -1332,20 +1335,6 @@ object Search {
     })
   }
 
-  /** The exact [[graphSearchIndexed]] cosine: one ascending-index pass,
-    * elements widened to double — bit-identical to
-    * [[graft.functions.VectorExpressions]]' fused kernel. */
-  private def hotCos(a: Array[Double], b: Array[Double]): java.lang.Double = {
-    if (a.length != b.length) return null
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      val x = a(i); val y = b(i)
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
-  }
-
   /** [[graphSearchIndexed]]'s SERVING twin: the same deterministic beam
     * walk — same entry ring, same (score desc, id asc) beam and final
     * tiebreaks, same tombstone semantics — executed driver-side against
@@ -1388,7 +1377,7 @@ object Search {
     def score(ids: Iterable[Long]): Unit = ids.foreach { id =>
       if (!hot.tombs.contains(id) && !scores.containsKey(id)) {
         val v = hot.vecs.get(id)
-        if (v != null) scores.put(id, hotCos(v, qv))
+        if (v != null) scores.put(id, VectorKernels.cosine(v, qv))
       }
     }
     def top(n: Int): Seq[Long] = {
@@ -1704,4 +1693,118 @@ object Search {
       .groupBy("image_id")
       .agg(count(lit(1)).as("n_matched"), max("conf").as("best_conf"))
       .orderBy(desc("best_conf"), asc("image_id")).limit(k)
+
+  // --- the point band, served from the driver ------------------------------
+
+  /** A driver-held copy of the two tables the point band reads, rows as
+    * Spark computed them: whole vectors `(image_id: bigint, wv)` and
+    * segments `(image_id: bigint, tag, conf: double)`. [[knnServeById]]
+    * and [[tagSearchServe]] answer from it with the rows [[knnBrute]] and
+    * [[tagSearch]] give over those tables, as a `LocalRelation`, so a
+    * request runs no Spark job; the schemas are the distributed plans'
+    * own, resolved once at load. Query-independent, so one image serves
+    * every request (the session reuse of the EDBT 2020 top-k framework,
+    * PAPERS.md). */
+  final class PointImage private[Search] (
+      private[Search] val ids: Array[Long],
+      private[Search] val vecs: Array[Array[Double]],
+      private[Search] val at: scala.collection.mutable.LongMap[Int],
+      private[Search] val byTag: Map[String, (Array[Long], Array[Double])],
+      private[Search] val knnSchema: org.apache.spark.sql.types.StructType,
+      private[Search] val tagSchema: org.apache.spark.sql.types.StructType)
+
+  /** Load the [[PointImage]] of `vecs` and `segTable`, or None — then the
+    * distributed plans serve — when their on-disk bytes are over the graph
+    * hot tier's driver budget ([[hotMaxBytes]]), when a whole-vector id
+    * repeats, or when a segment has no id (the image keys rows by id). */
+  def pointImage(vecs: DataFrame, segTable: DataFrame): Option[PointImage] = {
+    val hadoop = vecs.sparkSession.sparkContext.hadoopConfiguration
+    val onDisk = (vecs.inputFiles ++ segTable.inputFiles).distinct.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(hadoop).getFileStatus(p).getLen
+    }.sum
+    if (onDisk > hotMaxBytes) return None
+    // a null id can neither be the query nor pass `image_id != query`
+    val v = vecs.select("image_id", "wv").collect().filterNot(_.isNullAt(0))
+    val ids = v.map(_.getLong(0))
+    val at = scala.collection.mutable.LongMap.empty[Int]
+    ids.indices.foreach(i => at(ids(i)) = i)
+    if (at.size != ids.length) return None
+    val segRows = segTable.select("image_id", "tag", "conf").collect()
+    if (segRows.exists(_.isNullAt(0))) return None
+    // a null tag or conf never passes the filter
+    val byTag = segRows.filterNot(r => r.isNullAt(1) || r.isNullAt(2))
+      .groupBy(_.getString(1))
+      .map { case (t, rs) => t -> (rs.map(_.getLong(0)), rs.map(_.getDouble(2))) }
+    val knnSchema = knnBrute(vecs.filter(col("image_id") =!= 0L), col("wv"),
+        vecs.select(col("wv").as("qv")), 1, tie = col("image_id"))
+      .select("image_id", "score").schema
+    Some(new PointImage(ids, v.map(r => if (r.isNullAt(1)) null else widen(r.get(1))),
+      at, byTag, knnSchema, tagSearch(segTable, Nil, 0.0, 1).schema))
+  }
+
+  /** [[knnBrute]]'s serving twin: the `k` nearest whole vectors to image
+    * `queryId`'s, itself excluded, scored `graft_cosine + offset` with
+    * the same kernel ([[graft.functions.VectorKernels]]) and ordered
+    * score desc (nulls last), id asc. An id not in the image gives the
+    * empty relation, as the distributed plan's empty query frame does. */
+  def knnServeById(s: SparkSession, img: PointImage, queryId: Long, k: Int,
+      offset: Double = 0.0): DataFrame = {
+    require(k >= 0, s"top_k must be >= 0, got $k")
+    val rows = img.at.get(queryId).toSeq.flatMap { q =>
+      val qv = img.vecs(q)
+      val cand = img.ids.indices.filter(_ != q).toArray
+      val score = cand.map { i =>
+        val v = img.vecs(i)
+        val c = if (v == null || qv == null) null else VectorKernels.cosine(v, qv)
+        if (c == null) null else java.lang.Double.valueOf(c + offset)
+      }
+      val ids = cand.map(img.ids)
+      topByScore(ids, score, k).map(i => InternalRow(ids(i), score(i)))
+    }
+    localRows(s, img.knnSchema, rows)
+  }
+
+  /** [[tagSearch]]'s serving twin: per image, the segments with tag ∈
+    * `tags` and conf ≥ `minConf` counted and their best conf taken,
+    * ordered best desc, id asc. Doubles compare as Spark compares them
+    * (`SQLOrderingUtil`, NaN above all). */
+  def tagSearchServe(s: SparkSession, img: PointImage, tags: Seq[String],
+      minConf: Double, k: Int): DataFrame = {
+    require(k >= 0, s"top_k must be >= 0, got $k")
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val n = scala.collection.mutable.LongMap.empty[Long]
+    val best = scala.collection.mutable.LongMap.empty[Double]
+    for (t <- tags.distinct; (ids, confs) <- img.byTag.get(t); i <- ids.indices
+         if compareDoubles(confs(i), minConf) >= 0) {
+      val (id, c) = (ids(i), confs(i))
+      n(id) = n.getOrElse(id, 0L) + 1L
+      if (best.get(id).forall(b => compareDoubles(c, b) > 0)) best(id) = c
+    }
+    val ids = n.keys.toArray
+    val score = ids.map(id => java.lang.Double.valueOf(best(id)))
+    localRows(s, img.tagSchema,
+      topByScore(ids, score, k).map(i => InternalRow(ids(i), n(ids(i)), score(i))))
+  }
+
+  /** The first `k` indices of `ids` under `ORDER BY score DESC NULLS LAST,
+    * id ASC`, doubles compared as Spark's sort compares them. */
+  private def topByScore(ids: Array[Long], score: Array[java.lang.Double],
+      k: Int): Seq[Int] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    Array.range(0, ids.length).sorted(new Ordering[Int] {
+      def compare(i: Int, j: Int): Int = {
+        val (a, b) = (score(i), score(j))
+        val bys =
+          if (a == null) { if (b == null) 0 else 1 }
+          else if (b == null) -1
+          else compareDoubles(b, a)
+        if (bys != 0) bys else java.lang.Long.compare(ids(i), ids(j))
+      }
+    }).take(k).toSeq
+  }
+
+  private def localRows(s: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    GraftSqlShim.ofRows(s, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 import graft.operators.{Analytics, Retrieval}
 
 /** Plan-level audit that the declarative-plan promise holds where it
@@ -16,6 +19,13 @@ class PushdownAuditSpec extends SparkSpec {
   private def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.executedPlan.toString
       .linesIterator.filter(_.contains("FileScan")).toSeq
+
+  /** Every parquet scan node of the plan, inside adaptive plans and
+    * subqueries too. */
+  private def fileScans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] =
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f
+    }
 
   test("knn_whole: label pre-filter and query point-lookup are pushed; vectors pruned") {
     val s = scans(Retrieval.knnWhole(spark, d))
@@ -60,16 +70,20 @@ class PushdownAuditSpec extends SparkSpec {
       graft.Tables.documents(spark, d), col("doc_id"), col("text"), s"$dir/idx")
     val df = graft.operators.Lexical.fuzzyFromIndex(spark, s"$dir/idx",
       Seq("vektor", "sow"))
-    val s = scans(df)
-    val postScans = s.filter(_.contains("postings"))
-    assert(postScans.nonEmpty, s"expected a postings scan:\n${s.mkString("\n")}")
-    assert(postScans.forall(l =>
-        l.contains("PartitionFilters") && l.contains("bucket")),
-      s"postings read must prune to the expanded terms' buckets:\n${postScans.mkString("\n")}")
-    assert(postScans.exists(_.contains("In(term")),
-      s"expanded term set must push into the postings scan:\n${postScans.mkString("\n")}")
-    assert(!s.exists(_.contains("documents.parquet")),
-      s"index serving must not scan the corpus:\n${s.mkString("\n")}")
+    // scans picked by their relation's root paths: the printed Location
+    // is cut at 100 characters, so a long temp root would hide the path
+    val all = fileScans(df)
+    def under(f: FileSourceScanExec, root: String) =
+      f.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(root))
+    val postScans = all.filter(under(_, s"$dir/idx/postings"))
+    val shown = all.map(_.simpleString(400)).mkString("\n")
+    assert(postScans.nonEmpty, s"expected a postings scan:\n$shown")
+    assert(postScans.forall(_.partitionFilters.exists(_.references.exists(_.name == "bucket"))),
+      s"postings read must prune to the expanded terms' buckets:\n$shown")
+    assert(postScans.exists(_.metadata("PushedFilters").contains("In(term")),
+      s"expanded term set must push into the postings scan:\n$shown")
+    assert(!all.exists(under(_, d)),
+      s"index serving must not scan the corpus:\n$shown")
   }
 
   test("quality_nb: document scans prune to the referenced columns only") {

@@ -356,9 +356,10 @@ class ServingHttpSpec extends SparkSpec {
   }
 
   test("warm requests: graph launches no Spark job, mmr two (query broadcast, pool collect)") {
-    // the JSON is written on the driver, so rows already there need no job
+    // the JSON is written on the driver, so rows already there need no
+    // job: graph, whole and tags answer from driver-held images
     withServer { port =>
-      for ((mode, most) <- Seq("graph" -> 0, "mmr" -> 2)) {
+      for ((mode, most) <- Seq("graph" -> 0, "whole" -> 0, "tags" -> 0, "mmr" -> 2)) {
         assert(post(port, "/api/search", keyed(mode, 5))._1 === 200) // per-JVM builds
         val (body, n) = servedJobs(post(port, "/api/search", keyed(mode, 6))._2)
         assert(body === Serving.handle(spark, d, keyed(mode, 6)))

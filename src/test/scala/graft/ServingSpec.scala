@@ -115,13 +115,15 @@ class ServingSpec extends SparkSpec {
       // localCheckpoint that the bench's per-rep unpersist killed): the
       // contract is that no leaf re-reads the CORPUS parquet per request
       // — the at-rest derivation read is the index-probe shape every
-      // other mode has.
+      // other mode has; a `LocalRelation` (the rows served from the
+      // driver-held point image) reads nothing at all.
       val wholeLeaves = Retrieval.run(spark, d,
           Retrieval.SearchRequest("whole", k = 3))
         .queryExecution.optimizedPlan.collectLeaves()
       assert(wholeLeaves.nonEmpty && wholeLeaves.forall {
         case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
         case _: org.apache.spark.sql.execution.LogicalRDD => true
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           lr.relation match {
             case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>

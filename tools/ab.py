@@ -19,7 +19,9 @@ named by `--claim` (one of BENCHMARK.json's end-to-end metrics) is claimed
 only when the change won at least nine tenths of all pairs run (a pair in
 which either side errored is a loss), the medians differ by more than the
 parent's interquartile range, and the change had no more errored or
-incorrect runs and no more failed ops than the parent. Nothing under
+incorrect runs and no more failed ops than the parent. For a workload
+whose runs record per-mode latencies (serve_search's `per_mode`), it
+also prints each side's per-mode median table. Nothing under
 perfbench/ is edited.
 """
 import argparse
@@ -112,6 +114,31 @@ def summarise(spec, pairs, total, claim):
     return "\n".join(lines)
 
 
+def per_mode(pairs):
+    """Each side's median of the per-run, per-mode median latencies.
+
+    Taken from the env records' `per_mode` (serve_search writes one per
+    run), over the runs that have the mode; empty when no run has one."""
+    def medians(side, mode):
+        return [p[side]["env"]["per_mode"][mode]["median_s"] for p in pairs
+                if mode in p[side].get("env", {}).get("per_mode", {})]
+    modes = sorted({m for p in pairs for side in ("parent", "change")
+                    for m in p[side].get("env", {}).get("per_mode", {})})
+    if not modes:
+        return ""
+    lines = ["| mode | runs | parent median [Q1, Q3] s | change median [Q1, Q3] s | change |",
+             "|---|---|---|---|---|"]
+    for m in sorted(modes, key=lambda m: -statistics.median(medians("parent", m) or [0])):
+        a, b = medians("parent", m), medians("change", m)
+        cells = []
+        for v in (a, b):
+            q1, med, q3 = quartiles(v) if v else (float("nan"),) * 3
+            cells.append(f"{med:.4g} [{q1:.4g}, {q3:.4g}]")
+        diff = (statistics.median(b) / statistics.median(a) - 1) * 100 if a and b else float("nan")
+        lines.append(f"| {m} | {len(a)}/{len(b)} | {cells[0]} | {cells[1]} | {diff:+.1f} % |")
+    return "\n".join(lines)
+
+
 def main():
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--parent", required=True, help="git revision to compare against")
@@ -154,6 +181,11 @@ def main():
         shutil.rmtree(tmp, ignore_errors=True)
     print()
     print(summarise(spec, pairs, args.pairs, args.claim))
+    modes = per_mode(pairs)
+    if modes:
+        print()
+        print("per-mode median latency (each run's per-mode median, then the median over runs)")
+        print(modes)
 
 
 if __name__ == "__main__":
