@@ -2,11 +2,14 @@ package graft.operators
 
 import java.util.concurrent.{ConcurrentHashMap, FutureTask}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
@@ -444,8 +447,7 @@ object Lexical {
     val expTerms = expC.select("term").distinct()
       .collect().map(_.getString(0)).toSeq
     if (expTerms.isEmpty) {
-      return docs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
+      return noHits(docs.sparkSession)
     }
     val qarr = array(expTerms.map(lit): _*)
     val stats = docs.agg(
@@ -467,6 +469,11 @@ object Lexical {
       .agg(pivots.head, pivots.tail: _*)
       .select(col("doc_id"), round(pivotTotal(labels), 6).as("score"))
   }
+
+  /** The `(doc_id, score)` relation with no rows, for a query whose
+    * expansion or term selection came back empty. */
+  private def noHits(s: SparkSession): DataFrame =
+    s.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
 
   /** Fuzzy BM25 (ES `match` with `fuzziness: 1`): each query term
     * expands to its ≤[[MaxFuzzyExpansions]] nearest vocabulary terms
@@ -543,8 +550,7 @@ object Lexical {
         .select("term").collect().map(_.getString(0)).toSeq.sorted
     }
     if (selected.isEmpty) {
-      return s.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
+      return noHits(s)
     }
     // scoring tail serves from the at-rest index (r19): bit-identical to
     // the ad-hoc corpus scan on a fresh per-JVM index (search_bm25_idx's
@@ -594,8 +600,7 @@ object Lexical {
     }
     val expTerms = expRows.map(_._2).distinct.toSeq
     if (expTerms.isEmpty) {
-      return s.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
+      return noHits(s)
     }
     val exp = expRows.toSeq.toDF("q_term", "term")
     val posts = prunedRead(s, dir, "postings", expTerms, buckets)
@@ -846,48 +851,50 @@ object Lexical {
     // on PATH_NOT_FOUND without ever reaching the swap's own self-heal
     healIndex(s, dir)
     invalidateFuzzyExpansions(dir) // vocabulary/df change below
-    val toks = docs.select(id.cast("long").as("doc_id"), tokens(text).as("toks"))
-    val posts = postings(toks, buckets)
-      .localCheckpoint() // one computation feeds both the append and the df merge
-    if (requireDisjoint) {
-      // The disjoint-doc_ids contract enforced, not assumed: a violated
-      // contract would silently yield duplicate (doc_id, term) posting
-      // rows — the score pivot's max() picks one arbitrarily and df /
-      // n_docs double-count, i.e. WRONG scores with no failure signal.
-      // Cost = one doc_id-column scan of postings with a broadcast
-      // semi-join probe (batch ids are increment-sized); parquet
-      // row-group min/max stats skip most files when ids are monotonic.
-      // Lake-scale callers that track disjointness upstream (e.g. the
-      // streaming ingest's exactly-once batch ids) may opt out.
-      val clash = s.read.parquet(s"$dir/postings").select("doc_id")
-        .join(broadcast(posts.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(clash == 0L,
-        "appendToIndex batch overlaps the indexed corpus (doc_ids must be " +
-          "NEW — an ingest increment); an overlapping append would " +
-          "double-count postings/df and corrupt BM25 scores")
-    }
-    posts.write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
-    val newDf = posts.groupBy("bucket", "term")
-      .agg(count(lit(1)).cast("double").as("df"))
-    val mergedTerms = s.read.parquet(s"$dir/terms")
-      .select("bucket", "term", "df").unionByName(newDf)
-      .groupBy("bucket", "term").agg(sum("df").as("df"))
-    swapWrite(s, s"$dir/terms") { tmp =>
-      mergedTerms.repartition(col("bucket")) // one file per bucket (§6, r20)
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    }
-    val newStats = toks.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      sum(size(col("toks"))).cast("double").as("sum_dl"))
-    val merged = s.read.parquet(s"$dir/stats")
-      .select(col("n_docs"), col("sum_dl"))
-      .unionByName(newStats)
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .select(col("n_docs"), (col("sum_dl") / col("n_docs")).as("avgdl"), col("sum_dl"))
-    swapWrite(s, s"$dir/stats") { tmp =>
-      merged.write.mode("overwrite").parquet(tmp)
-    }
+    try {
+      val toks = docs.select(id.cast("long").as("doc_id"), tokens(text).as("toks"))
+      val posts = postings(toks, buckets)
+        .localCheckpoint() // one computation feeds both the append and the df merge
+      if (requireDisjoint) {
+        // The disjoint-doc_ids contract enforced, not assumed: a violated
+        // contract would silently yield duplicate (doc_id, term) posting
+        // rows — the score pivot's max() picks one arbitrarily and df /
+        // n_docs double-count, i.e. WRONG scores with no failure signal.
+        // Cost = one doc_id-column scan of postings with a broadcast
+        // semi-join probe (batch ids are increment-sized); parquet
+        // row-group min/max stats skip most files when ids are monotonic.
+        // Lake-scale callers that track disjointness upstream (e.g. the
+        // streaming ingest's exactly-once batch ids) may opt out.
+        val clash = s.read.parquet(s"$dir/postings").select("doc_id")
+          .join(broadcast(posts.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
+          .limit(1).count()
+        require(clash == 0L,
+          "appendToIndex batch overlaps the indexed corpus (doc_ids must be " +
+            "NEW — an ingest increment); an overlapping append would " +
+            "double-count postings/df and corrupt BM25 scores")
+      }
+      posts.write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
+      val newDf = posts.groupBy("bucket", "term")
+        .agg(count(lit(1)).cast("double").as("df"))
+      val mergedTerms = s.read.parquet(s"$dir/terms")
+        .select("bucket", "term", "df").unionByName(newDf)
+        .groupBy("bucket", "term").agg(sum("df").as("df"))
+      swapWrite(s, s"$dir/terms") { tmp =>
+        mergedTerms.repartition(col("bucket")) // one file per bucket (§6, r20)
+          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+      }
+      val newStats = toks.agg(
+        count(lit(1)).cast("double").as("n_docs"),
+        sum(size(col("toks"))).cast("double").as("sum_dl"))
+      val merged = s.read.parquet(s"$dir/stats")
+        .select(col("n_docs"), col("sum_dl"))
+        .unionByName(newStats)
+        .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
+        .select(col("n_docs"), (col("sum_dl") / col("n_docs")).as("avgdl"), col("sum_dl"))
+      swapWrite(s, s"$dir/stats") { tmp =>
+        merged.write.mode("overwrite").parquet(tmp)
+      }
+    } finally dropImage(dir)
   }
 
   /** Shared index-serving preamble: heal interrupted swaps, compute the
@@ -939,7 +946,7 @@ object Lexical {
     * corpus stats intentionally stay stale until [[mergeIndex]], the
     * Lucene liveDocs-then-merge split. */
   def deleteFromIndex(ids: DataFrame, idCol: Column, dir: String): Unit =
-    graft.sources.Tombstones.add(ids, idCol, dir)
+    try graft.sources.Tombstones.add(ids, idCol, dir) finally dropImage(dir)
 
   /** Apply accumulated tombstones physically — the Lucene "merge" that
     * ends the liveDocs staleness window. Every derived artifact is
@@ -975,35 +982,37 @@ object Lexical {
       onStep: String => Unit = _ => ()): Unit = {
     healIndex(s, dir)
     invalidateFuzzyExpansions(dir) // df recombines below
-    graft.sources.Tombstones.healPartitions(s, s"$dir/postings")
-    graft.sources.Tombstones.ids(s, dir).foreach { tomb =>
-      val posts = s.read.parquet(s"$dir/postings")
-      val live = posts.join(tomb, col("doc_id") === tomb("id"), "left_anti")
-      val newTerms = live.groupBy(col("bucket"), col("term"))
-        .agg(count(lit(1)).cast("double").as("df"))
-      swapWrite(s, s"$dir/terms") { tmp =>
-        newTerms.repartition(col("bucket")) // one file per bucket (§6, r20)
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+    try {
+      graft.sources.Tombstones.healPartitions(s, s"$dir/postings")
+      graft.sources.Tombstones.ids(s, dir).foreach { tomb =>
+        val posts = s.read.parquet(s"$dir/postings")
+        val live = posts.join(tomb, col("doc_id") === tomb("id"), "left_anti")
+        val newTerms = live.groupBy(col("bucket"), col("term"))
+          .agg(count(lit(1)).cast("double").as("df"))
+        swapWrite(s, s"$dir/terms") { tmp =>
+          newTerms.repartition(col("bucket")) // one file per bucket (§6, r20)
+            .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        }
+        onStep("terms")
+        val newStats = live.select(col("doc_id"), col("dl")).distinct()
+          .agg(count(lit(1)).cast("double").as("n_docs"),
+            sum(col("dl")).as("sum_dl"))
+          .select(col("n_docs"), (col("sum_dl") / col("n_docs")).as("avgdl"),
+            col("sum_dl"))
+        swapWrite(s, s"$dir/stats") { tmp =>
+          newStats.write.mode("overwrite").parquet(tmp)
+        }
+        onStep("stats")
+        val touched = posts.join(tomb, col("doc_id") === tomb("id"), "left_semi")
+          .select(col("bucket").cast("long")).distinct()
+          .collect().map(_.getLong(0)).sorted
+        touched.foreach { b =>
+          graft.sources.Tombstones.rewriteLive(s, s"$dir/postings/bucket=$b",
+            df => df.join(tomb, col("doc_id") === tomb("id"), "left_anti"), onStep)
+        }
+        graft.sources.Tombstones.clear(s, dir)
       }
-      onStep("terms")
-      val newStats = live.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).cast("double").as("n_docs"),
-          sum(col("dl")).as("sum_dl"))
-        .select(col("n_docs"), (col("sum_dl") / col("n_docs")).as("avgdl"),
-          col("sum_dl"))
-      swapWrite(s, s"$dir/stats") { tmp =>
-        newStats.write.mode("overwrite").parquet(tmp)
-      }
-      onStep("stats")
-      val touched = posts.join(tomb, col("doc_id") === tomb("id"), "left_semi")
-        .select(col("bucket").cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      touched.foreach { b =>
-        graft.sources.Tombstones.rewriteLive(s, s"$dir/postings/bucket=$b",
-          df => df.join(tomb, col("doc_id") === tomb("id"), "left_anti"), onStep)
-      }
-      graft.sources.Tombstones.clear(s, dir)
-    }
+    } finally dropImage(dir)
   }
 
   /** BM25 served from a [[writeInvertedIndex]] layout: the query terms'
@@ -1138,7 +1147,10 @@ object Lexical {
   // past 1024 entries — a pool is ≤ PoolN tuples, so the cap is ~400 KB),
   // and swept with the owning session like every per-JVM cache here. A
   // pool build is a Spark job, so it runs through Scratch.once, outside
-  // the map's bin lock.
+  // the map's bin lock. Since the serving modes answer from the driver-held
+  // [[IndexImage]], these caches back the named bindings (`q6_rrf_hybrid`,
+  // `q7_weighted_hybrid`, `search_mlt`, `search_fuzzy_idx`) and the
+  // serving fallback for an index over the image's budget.
   private val lexPoolCache = new ConcurrentHashMap[
     (SparkSession, String, List[String]), FutureTask[Seq[(Long, Double)]]]()
   private val vecPoolCache = new ConcurrentHashMap[
@@ -1200,6 +1212,252 @@ object Lexical {
         .orderBy(desc("cs"), asc("doc_id")).limit(PoolN)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
+  }
+
+  // ------------------ the index served from the driver ------------------ //
+
+  /** A driver-held copy of one [[writeInvertedIndex]] layout, read once as
+    * [[prunedRead]] reads it (swaps healed, tombstoned docs dropped): per
+    * row of the terms table the term, its df and its postings `(doc_id,
+    * dl, tf)` by doc_id; the stats row; and the fuzzy vocabulary's
+    * delete-1 and delete-≤2 keys, evaluated by Spark through
+    * [[delVariantsCol]] / [[delVariants2Col]] so they keep Spark's
+    * code-point `length`/`substr`. Strings stay Spark's `UTF8String`
+    * bytes, so equality, `levenshtein` and order are Spark's own.
+    * [[bm25Image]], [[fuzzyImage]], [[mltImage]] and [[rrfImage]] answer
+    * from it with the rows of [[bm25Serve]], [[fuzzyServe]],
+    * [[moreLikeThis]] and [[rrfHybridK]] (`LexicalImageSpec` pins it), as
+    * a `LocalRelation`, so a request runs no Spark job; the schemas are
+    * the distributed plans' own, resolved once at load. Query-independent,
+    * so one image serves every request, like the point image. */
+  final class IndexImage private[Lexical] (
+      private[Lexical] val terms: Array[UTF8String],
+      private[Lexical] val df: Array[Double],
+      private[Lexical] val docs: Array[Array[Long]],
+      private[Lexical] val dl: Array[Array[Double]],
+      private[Lexical] val tf: Array[Array[Double]],
+      // by edit budget 0, 1, 2: key → the terms that hold it (budget 0:
+      // the term itself)
+      private[Lexical] val keys: IndexedSeq[Map[UTF8String, Array[Int]]],
+      private[Lexical] val nDocs: Double,
+      private[Lexical] val avgdl: Double,
+      private[Lexical] val scoreSchema: StructType,
+      private[Lexical] val emptySchema: StructType,
+      private[Lexical] val rrfSchema: StructType)
+
+  private val images = new ConcurrentHashMap[String, FutureTask[Option[IndexImage]]]()
+
+  /** The [[IndexImage]] of the index at `dir`, built once per JVM through
+    * [[Scratch.once]], outside the map's bin lock; [[appendToIndex]],
+    * [[deleteFromIndex]] and [[mergeIndex]] drop it when they finish. */
+  private[graft] def indexImage(s: SparkSession, dir: String): Option[IndexImage] =
+    Scratch.once(images, dir)(loadImage(s, dir))
+
+  /** The image of the per-JVM index over `d` that the serving modes read. */
+  private[graft] def servedImage(s: SparkSession, d: String): Option[IndexImage] =
+    indexImage(s, index(s, d))
+
+  /** A build that read a mutation's partial state was put in the map
+    * before it read, so this removes it too. */
+  private def dropImage(dir: String): Unit = images.remove(dir)
+
+  /** Load the image, or None — then the modes run their distributed plans
+    * — when the index's on-disk bytes are over the hot tier's driver
+    * budget ([[Search.hotMaxBytes]]), when a row sits outside its term's
+    * bucket (the pruned read would then keep it for some queries and not
+    * others), when a term repeats or a cell is null, or when the stats are
+    * not one row with a positive avgdl. */
+  private def loadImage(s: SparkSession, dir: String): Option[IndexImage] = {
+    healIndex(s, dir)
+    graft.sources.Tombstones.healPartitions(s, s"$dir/postings")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val onDisk = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(root).getLength
+    if (onDisk > Search.hotMaxBytes) return None
+    val stats = GraftSqlShim.collectInternal(readStats(s, dir).select("n_docs", "avgdl"))
+    if (stats.length != 1 || stats(0).anyNull || !(stats(0).getDouble(1) > 0.0)) return None
+    val home = col("bucket") === pmod(xxhash64(col("term")), lit(IndexBuckets.toLong))
+    // no longer term passes fuzzy's length cut (query length + budget)
+    val short = length(col("term")) <= MaxFuzzyTermLen + 2
+    val vocab = GraftSqlShim.collectInternal(
+      s.read.schema(TermsSchema).parquet(s"$dir/terms").select(col("term"), col("df"), home,
+        when(short, delVariantsCol(col("term"))), when(short, delVariants2Col(col("term")))))
+    if (vocab.exists(r => (0 to 2).exists(r.isNullAt) || !r.getBoolean(2))) return None
+    val terms = vocab.map(_.getUTF8String(0))
+    val exact = terms.indices.map(j => terms(j) -> Array(j)).toMap
+    if (exact.size != terms.length) return None
+    def keyMap(c: Int): Map[UTF8String, Array[Int]] =
+      vocab.indices.filterNot(vocab(_).isNullAt(c)).flatMap { j =>
+        val a = vocab(j).getArray(c)
+        (0 until a.numElements()).map(i => a.getUTF8String(i) -> j)
+      }.groupBy(_._1).map { case (key, js) => key -> js.map(_._2).toArray }
+    val posts = GraftSqlShim.collectInternal(
+      graft.sources.Tombstones.dropDeleted(
+          s.read.schema(PostingsSchema).parquet(s"$dir/postings"), col("doc_id"), dir)
+        .select(col("term"), col("doc_id"), col("dl"), col("tf"), home))
+    if (posts.exists(r => r.anyNull || !r.getBoolean(4))) return None
+    // a posting of a term the terms table lacks never joins a df: dropped
+    val byTerm = posts.groupBy(r => exact.get(r.getUTF8String(0)).map(_(0)))
+    val rows = terms.indices.map(j =>
+      byTerm.getOrElse(Some(j), Array.empty[InternalRow]).sortBy(_.getLong(1)))
+    Some(new IndexImage(terms, vocab.map(_.getDouble(1)),
+      rows.map(_.map(_.getLong(1))).toArray, rows.map(_.map(_.getDouble(2))).toArray,
+      rows.map(_.map(_.getDouble(3))).toArray, IndexedSeq(exact, keyMap(3), keyMap(4)),
+      stats(0).getDouble(0), stats(0).getDouble(1),
+      bm25FromIndex(s, dir, Seq("a")).orderBy(desc("score"), asc("doc_id"))
+        .limit(1).schema,
+      noHits(s).schema, rrfFuse(s, Nil, Nil, 1).schema))
+  }
+
+  /** Spark's `log` (`Log`): `StrictMath.log`, null at or below 0. */
+  private def sparkLog(x: Double): java.lang.Double =
+    if (x <= 0.0) null else java.lang.Double.valueOf(StrictMath.log(x))
+
+  /** The idf of image term `j`, [[scoredPostings]]' expression. */
+  private def idf(img: IndexImage, j: Int): java.lang.Double =
+    sparkLog(1.0 + (img.nDocs - img.df(j) + 0.5) / (img.df(j) + 0.5))
+
+  /** The pivot-and-sum tail of [[score]] and [[fuzzyFromIndex]] on the
+    * image: a doc's component for slot `i` is the max, over the slot's
+    * terms in the doc, of [[scoredPostings]]' BM25 contribution (the same
+    * operands in the same order); a doc scores when one of the slots'
+    * terms is in it; its score is the left-to-right sum of the
+    * components, 0 for an empty one, rounded to 6 places. */
+  private def scoreImage(img: IndexImage,
+      slots: Seq[Array[Int]]): (Array[Long], Array[java.lang.Double]) = {
+    val acc = scala.collection.mutable.LongMap.empty[Array[java.lang.Double]]
+    for (j <- slots.flatten.distinct) {
+      val in = slots.indices.filter(slots(_).contains(j))
+      val w = idf(img, j)
+      val (ds, dls, tfs) = (img.docs(j), img.dl(j), img.tf(j))
+      for (r <- ds.indices) {
+        val a = acc.getOrElseUpdate(ds(r), new Array[java.lang.Double](slots.size))
+        if (w != null) {
+          val sc: java.lang.Double = w * tfs(r) * (K1 + 1.0) /
+            (tfs(r) + K1 * ((1.0 - B) + B * dls(r) / img.avgdl))
+          for (i <- in if a(i) == null || compareDoubles(sc, a(i)) > 0) a(i) = sc
+        }
+      }
+    }
+    val ids = acc.keys.toArray
+    (ids, ids.map { id =>
+      val total = acc(id).map(c => if (c == null) 0.0 else c.doubleValue).reduceLeft(_ + _)
+      java.lang.Double.valueOf(Search.roundHalfUp(total, 6))
+    })
+  }
+
+  /** [[bm25FromIndex]] on the image: one slot per analyzed term. */
+  private def bm25Scores(img: IndexImage,
+      rawTerms: Seq[String]): (Array[Long], Array[java.lang.Double]) = {
+    val terms = analyze(rawTerms)
+    require(terms.nonEmpty, "BM25 needs at least one non-empty term")
+    scoreImage(img, terms.map(t => img.keys(0).getOrElse(UTF8String.fromString(t), Array.empty[Int])))
+  }
+
+  /** The first `k` scored docs by score desc, doc_id asc. */
+  private def topDocs(s: SparkSession, schema: StructType,
+      scored: (Array[Long], Array[java.lang.Double]), k: Int): DataFrame = {
+    val (ids, score) = scored
+    Search.localRows(s, schema,
+      Search.topByScore(ids, score, k).map(i => InternalRow(ids(i), score(i))))
+  }
+
+  /** `lexical` from the image: [[bm25Serve]]'s top `k`. */
+  def bm25Image(s: SparkSession, img: IndexImage, terms: Seq[String], k: Int): DataFrame =
+    topDocs(s, img.scoreSchema, bm25Scores(img, terms), k)
+
+  /** [[fuzzyExpansions]] (`auto` false) and [[autoFuzzyExpansions]] on
+    * the image, step for step: each query term's delete keys as the
+    * encoder stores them, the vocabulary terms holding one of them within
+    * the length cut, `levenshtein` within the budget, and the cap by df
+    * desc, term asc. Each `q_term` maps to its capped expansions. */
+  private def imageExpansions(img: IndexImage, rawTerms: Seq[String],
+      maxExpansions: Int, auto: Boolean): Map[UTF8String, Array[Int]] = {
+    val terms = analyze(rawTerms)
+    require(terms.nonEmpty, "fuzzy expansion needs at least one term")
+    require(terms.forall(_.length <= MaxFuzzyTermLen),
+      s"fuzzy query terms are capped at $MaxFuzzyTermLen chars")
+    def allowed(t: String) = if (auto) autoAllowed(t) else 1
+    val qvar = terms.flatMap { t =>
+      (allowed(t) match {
+        case 2 => delVariants2(t)
+        case 1 => delVariants(t)
+        case _ => Seq(t)
+      }).map(v => (UTF8String.fromString(t), UTF8String.fromString(v)))
+    }
+    val maxK = terms.map(allowed).max
+    val maxLen = terms.map(_.length).max + maxK
+    // the budget of the stored q_term, by Spark's `length`
+    def budget(q: UTF8String) =
+      if (!auto) 1 else if (q.numChars >= 6) 2 else if (q.numChars >= 3) 1 else 0
+    qvar.flatMap { case (q, v) =>
+      img.keys(maxK).getOrElse(v, Array.empty[Int])
+        .filter(img.terms(_).numChars <= maxLen).map(q -> _)
+    }.distinct
+      .filter { case (q, j) => q.levenshteinDistance(img.terms(j)) <= budget(q) }
+      .groupBy(_._1).map { case (q, cands) =>
+        q -> cands.map(_._2).sortWith { (a, b) =>
+          val byDf = compareDoubles(img.df(b), img.df(a))
+          if (byDf != 0) byDf < 0 else img.terms(a).compareTo(img.terms(b)) < 0
+        }.take(maxExpansions).toArray
+      }
+  }
+
+  /** `fuzzy` from the image: [[fuzzyServe]]'s top `k` — each analyzed
+    * term's slot holds its expansions. */
+  def fuzzyImage(s: SparkSession, img: IndexImage, rawTerms: Seq[String],
+      auto: Boolean, k: Int, maxExpansions: Int = MaxFuzzyExpansions): DataFrame = {
+    val terms = analyze(rawTerms)
+    require(terms.nonEmpty, "fuzzy search needs at least one term")
+    val exp = imageExpansions(img, terms, maxExpansions, auto)
+    if (exp.isEmpty) return Search.localRows(s, img.emptySchema, Nil)
+    topDocs(s, img.scoreSchema, scoreImage(img,
+      terms.map(t => exp.getOrElse(UTF8String.fromString(t), Array.empty[Int]))), k)
+  }
+
+  /** `mlt` from the image: [[moreLikeThis]]'s top `k`. The source doc's
+    * terms and tf come from its postings, df and n_docs from the index:
+    * on the per-JVM index, built from the same documents and never
+    * mutated, these are the values [[docsAndVocab]] derives. */
+  def mltImage(s: SparkSession, img: IndexImage, docId: Long, k: Int,
+      maxQueryTerms: Int = 5): DataFrame = {
+    val src = img.terms.indices.flatMap { j =>
+      val r = java.util.Arrays.binarySearch(img.docs(j), docId)
+      if (r < 0) None
+      else Some(j -> Option(idf(img, j)).map(w => java.lang.Double.valueOf(img.tf(j)(r) * w)).orNull)
+    }
+    // __mlt desc (nulls last), term asc
+    val selected = src.sortWith { case ((a, x), (b, y)) =>
+      val byMlt =
+        if (x == null) { if (y == null) 0 else 1 }
+        else if (y == null) -1
+        else compareDoubles(y, x)
+      if (byMlt != 0) byMlt < 0 else img.terms(a).compareTo(img.terms(b)) < 0
+    }.take(maxQueryTerms).map(p => img.terms(p._1).toString).sorted
+    if (selected.isEmpty) return Search.localRows(s, img.emptySchema, Nil)
+    val (ids, score) = bm25Scores(img, selected)
+    val keep = ids.indices.filter(ids(_) != docId)
+    topDocs(s, img.scoreSchema, (keep.map(ids).toArray, keep.map(score).toArray), k)
+  }
+
+  /** `rrf` from the image: [[rrfHybridK]]'s top `k`, fusing the image's
+    * top-[[PoolN]] BM25 pool with `vecPool` (the dense pool's ids in
+    * rank order, [[Search.vecPoolServe]]): ranks from 1, `60 + r` in long
+    * arithmetic, the full-outer fusion and the rounded `rrf_score`. */
+  def rrfImage(s: SparkSession, img: IndexImage, terms: Seq[String],
+      vecPool: Seq[Long], k: Int): DataFrame = {
+    val (ids, score) = bm25Scores(img, terms)
+    val lexPool = Search.topByScore(ids, score, PoolN).map(ids)
+    def ranks(pool: Seq[Long]) = pool.zipWithIndex.map { case (id, i) => id -> (i + 1L) }.toMap
+    val (rl, rv) = (ranks(lexPool), ranks(vecPool))
+    def part(r: Option[Long]) = r.map(x => 1.0 / (RrfK + x).toDouble).getOrElse(0.0)
+    val fused = (lexPool ++ vecPool).distinct.toArray
+    val rrf = fused.map(id =>
+      java.lang.Double.valueOf(Search.roundHalfUp(part(rl.get(id)) + part(rv.get(id)), 6)))
+    Search.localRows(s, img.rrfSchema, Search.topByScore(fused, rrf, k).map { i =>
+      val id = fused(i)
+      InternalRow(id, rl.getOrElse(id, 0L), rv.getOrElse(id, 0L), rrf(i))
+    })
   }
 
   /** The benchmark takedown set — doc_ids inside `search_bm25`'s sf0.01
@@ -1278,13 +1536,18 @@ object Lexical {
     * arithmetic are unchanged expression-for-expression, which is what
     * keeps `q6_rrf_hybrid`'s oracle hash intact. */
   def rrfHybridK(s: SparkSession, d: String, terms: Seq[String],
-      k: Int, queryVecId: Long = 0L): DataFrame = {
+      k: Int, queryVecId: Long = 0L): DataFrame =
+    rrfFuse(s, lexPoolRows(s, d, terms), vecPoolRows(s, d, queryVecId), k)
+
+  /** [[rrfHybridK]]'s fusion of the two pools' `(doc_id, score)` rows. */
+  private def rrfFuse(s: SparkSession, lexPool: Seq[(Long, Double)],
+      vecPool: Seq[(Long, Double)], k: Int): DataFrame = {
     import s.implicits._
     val byLex = Window.orderBy(desc("score"), asc("doc_id"))
-    val lex = lexPoolRows(s, d, terms).toDF("doc_id", "score")
+    val lex = lexPool.toDF("doc_id", "score")
       .select(col("doc_id"), row_number().over(byLex).cast("long").as("r_lex"))
     val byVec = Window.orderBy(desc("cs"), asc("doc_id"))
-    val vec = vecPoolRows(s, d, queryVecId).toDF("doc_id", "cs")
+    val vec = vecPool.toDF("doc_id", "cs")
       .select(col("doc_id"), row_number().over(byVec).cast("long").as("r_vec"))
     lex.join(vec, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),

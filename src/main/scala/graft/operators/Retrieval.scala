@@ -1250,21 +1250,27 @@ object Retrieval {
     java.util.concurrent.FutureTask[Option[Search.PointImage]]]()
 
   /** The point band's serving image of `d` ([[Search.PointImage]] of
-    * [[imageVecs]] and [[segs]]), built once per JVM by [[Scratch.once]]
-    * outside the map's bin lock; None when it is over the graph hot
-    * tier's driver budget, and then `whole` and `tags` run their
-    * distributed plans. Its arrays hold `24 + 8·dim` bytes per image and
-    * 16 per segment (sf0.1: 166 KB, BASELINE.md). */
+    * [[imageVecs]], [[segs]] and the embeddings), built once per JVM by
+    * [[Scratch.once]] outside the map's bin lock; None when it is over the
+    * graph hot tier's driver budget, and then `whole`, `tags` and `rrf`
+    * run their distributed plans. Its arrays hold `24 + 8·dim` bytes per
+    * image and per embedding and 16 per segment (sf0.1: about 1.2 MB,
+    * BASELINE.md). */
   private[graft] def pointImage(s: SparkSession, d: String): Option[Search.PointImage] =
-    Scratch.once(pointImages, d)(Search.pointImage(imageVecs(s, d), segs(s, d)))
+    Scratch.once(pointImages, d)(
+      Search.pointImage(imageVecs(s, d), segs(s, d), Tables.embeddings(s, d)))
 
   /** One entry point, four modes, every knob an argument — each mode
     * delegates to the same generic [[Search]] engine the named queries
     * use, so parameterization adds no second code path. `whole` and
     * `tags` answer from the driver-held [[pointImage]] with the rows of
     * [[Search.knnBrute]] and [[Search.tagSearch]] (`PointImageSpec` pins
-    * it), as `graph` answers from its hot image: no Spark job. */
+    * it), `lexical`, `fuzzy`, `mlt` and `rrf` from the lexical index's
+    * driver-held [[Lexical.IndexImage]] with the rows of their
+    * index-served plans (`LexicalImageSpec`), as `graph` answers from its
+    * hot image: no Spark job. */
   def run(s: SparkSession, d: String, req: SearchRequest): DataFrame = {
+    require(req.k >= 0, s"top_k must be >= 0, got ${req.k}")
     val qid = req.queryImageId
     def qSegs = segs(s, d).filter(col("image_id") === qid)
       .withColumn("area", segArea)
@@ -1298,15 +1304,22 @@ object Retrieval {
       }
       case "lexical" => // beyond-reference: deterministic BM25 (portable ES _score)
         require(req.terms.nonEmpty, "lexical mode needs non-empty 'terms'")
-        // served from the at-rest index (r19): per request only the query
-        // terms' bucket dirs are listed and read, routed on the driver
-        // without a Spark job — bit-identical to the ad-hoc scan on a
-        // fresh per-JVM index (search_bm25_idx's oracle contract)
-        Lexical.bm25Serve(s, d, req.terms)
-          .orderBy(desc("score"), asc("doc_id")).limit(req.k)
+        // served from the per-JVM at-rest index's driver image, with the
+        // rows of the index-served plan (search_bm25_idx's oracle
+        // contract); over the image's budget, that plan reads the query
+        // terms' pruned bucket dirs
+        Lexical.servedImage(s, d) match {
+          case Some(img) => Lexical.bm25Image(s, img, req.terms, req.k)
+          case None => Lexical.bm25Serve(s, d, req.terms)
+            .orderBy(desc("score"), asc("doc_id")).limit(req.k)
+        }
       case "rrf" => // beyond-reference: ES-style hybrid rank fusion
         require(req.terms.nonEmpty, "rrf mode needs non-empty 'terms'")
-        Lexical.rrfHybridK(s, d, req.terms, req.k, queryVecId = req.queryImageId)
+        (Lexical.servedImage(s, d), pointImage(s, d)) match {
+          case (Some(img), Some(pt)) => Lexical.rrfImage(s, img, req.terms,
+            Search.vecPoolServe(pt, qid, Lexical.PoolN), req.k)
+          case _ => Lexical.rrfHybridK(s, d, req.terms, req.k, queryVecId = qid)
+        }
       case "mmr" => // beyond-reference: diversified top-k
         // Request-derived pool clamps to the driver-safety ceiling: k and
         // poolN are caller-controlled at the serving edge, and mmrRerank
@@ -1330,14 +1343,22 @@ object Retrieval {
         require(req.terms.nonEmpty, "fuzzy mode needs non-empty 'terms'")
         require(Set("1", "auto")(req.fuzziness),
           s"fuzziness must be '1' or 'auto', got '${req.fuzziness}'")
-        // index-served (r19): SymSpell expands over the index's own terms
-        // table, scoring reads only the expansions' pruned buckets;
-        // "auto" applies ES's per-term-length 0/1/2 budget
-        Lexical.fuzzyServe(s, d, req.terms, auto = req.fuzziness == "auto")
-          .orderBy(desc("score"), asc("doc_id")).limit(req.k)
+        // index-served: SymSpell expands over the index's own terms table
+        // (the image holds its delete keys), scoring reads only the
+        // expansions' postings; "auto" applies ES's per-term-length 0/1/2
+        // budget
+        val auto = req.fuzziness == "auto"
+        Lexical.servedImage(s, d) match {
+          case Some(img) => Lexical.fuzzyImage(s, img, req.terms, auto, req.k)
+          case None => Lexical.fuzzyServe(s, d, req.terms, auto = auto)
+            .orderBy(desc("score"), asc("doc_id")).limit(req.k)
+        }
       case "mlt" => // beyond-reference: more-like-this (query_image_id = source doc)
-        Lexical.moreLikeThis(s, d, req.queryImageId)
-          .orderBy(desc("score"), asc("doc_id")).limit(req.k)
+        Lexical.servedImage(s, d) match {
+          case Some(img) => Lexical.mltImage(s, img, qid, req.k)
+          case None => Lexical.moreLikeThis(s, d, qid)
+            .orderBy(desc("score"), asc("doc_id")).limit(req.k)
+        }
       case "graph" => // beyond-reference: graph-served ANN over the at-rest index
         // HOT-TIER serve (r19): the same deterministic beam walk as the
         // distributed spelling (GraphServeSpec pins row equality incl.

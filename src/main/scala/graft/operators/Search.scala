@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{TextExpressions, VectorKernels}
 import graft.functions.VectorExpressions.fusedCosine
@@ -1257,8 +1258,9 @@ object Search {
     * for the mistake it exists to catch: pointing the hot tier at a
     * whole-corpus layout that belongs on the distributed spelling.
     * Override via -Dgraft.graph.hot.maxBytes / GRAFT_GRAPH_HOT_MAX_BYTES.
-    * The point band's image ([[pointImage]]) is held to the same budget. */
-  private def hotMaxBytes: Long =
+    * The point band's image ([[pointImage]]) and the lexical index image
+    * ([[Lexical.IndexImage]]) are held to the same budget. */
+  private[operators] def hotMaxBytes: Long =
     sys.props.get("graft.graph.hot.maxBytes")
       .orElse(sys.env.get("GRAFT_GRAPH_HOT_MAX_BYTES"))
       .map(_.toLong).getOrElse(2L << 30)
@@ -1360,13 +1362,11 @@ object Search {
   def graphSearchServeById(s: SparkSession, path: String, queryId: Long,
       k: Int, beam: Int = 32, hops: Int = 3, buckets: Int = 32,
       fallbackVec: Long => Option[Array[Double]] = _ => None): DataFrame = {
-    import s.implicits._
     requireBucketsMeta(s, path, buckets)
     val hot = graphHotFor(s, path)
     val qv = Option(hot.vecs.get(queryId))
       .orElse(fallbackVec(queryId)).orNull
-    if (qv == null)
-      return Seq.empty[(Long, Option[Double])].toDF("id", "score")
+    if (qv == null) return localRows(s, GraphServeSchema, Nil)
     // `scores` holds every VISITED live id, null score included — the
     // distributed walk keeps null-cosine rows (zero-norm or mismatched-
     // length vectors) in its visited frame, where desc ordering sorts
@@ -1402,9 +1402,14 @@ object Search {
       beamIds = top(beam)
       h += 1
     }
-    val out = top(k).map(id => (id, Option(scores.get(id)).map(_.doubleValue())))
-    out.toDF("id", "score")
+    localRows(s, GraphServeSchema, top(k).map(id => InternalRow(id, scores.get(id))))
   }
+
+  /** [[graphSearchServeById]]'s rows: a non-null id and a nullable score,
+    * the schema `toDF("id", "score")` gives `(Long, Option[Double])`
+    * tuples, written out so a request derives no encoder. */
+  private val GraphServeSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false), StructField("score", DoubleType)))
 
   /** HNSW-style incremental insert into a [[writeGraphIndex]] layout:
     * each new row (in ascending-id order — deterministic) (1) beam-
@@ -1696,40 +1701,56 @@ object Search {
 
   // --- the point band, served from the driver ------------------------------
 
-  /** A driver-held copy of the two tables the point band reads, rows as
-    * Spark computed them: whole vectors `(image_id: bigint, wv)` and
-    * segments `(image_id: bigint, tag, conf: double)`. [[knnServeById]]
+  /** A driver-held copy of the three tables the point band reads, rows
+    * as Spark computed them: whole vectors `(image_id: bigint, wv)`,
+    * segments `(image_id: bigint, tag, conf: double)` and embeddings
+    * `(vec_id: bigint, embedding)` widened to doubles. [[knnServeById]]
     * and [[tagSearchServe]] answer from it with the rows [[knnBrute]] and
     * [[tagSearch]] give over those tables, as a `LocalRelation`, so a
     * request runs no Spark job; the schemas are the distributed plans'
-    * own, resolved once at load. Query-independent, so one image serves
-    * every request (the session reuse of the EDBT 2020 top-k framework,
+    * own, resolved once at load. [[vecPoolServe]] gives rrf's dense pool
+    * from the embeddings. Query-independent, so one image serves every
+    * request (the session reuse of the EDBT 2020 top-k framework,
     * PAPERS.md). */
   final class PointImage private[Search] (
       private[Search] val ids: Array[Long],
       private[Search] val vecs: Array[Array[Double]],
       private[Search] val at: scala.collection.mutable.LongMap[Int],
       private[Search] val byTag: Map[String, (Array[Long], Array[Double])],
-      private[Search] val knnSchema: org.apache.spark.sql.types.StructType,
-      private[Search] val tagSchema: org.apache.spark.sql.types.StructType)
+      private[Search] val embIds: Array[Long],
+      private[Search] val embVecs: Array[Array[Double]],
+      private[Search] val embAt: scala.collection.mutable.LongMap[Int],
+      private[Search] val knnSchema: StructType,
+      private[Search] val tagSchema: StructType)
 
-  /** Load the [[PointImage]] of `vecs` and `segTable`, or None — then the
-    * distributed plans serve — when their on-disk bytes are over the graph
-    * hot tier's driver budget ([[hotMaxBytes]]), when a whole-vector id
-    * repeats, or when a segment has no id (the image keys rows by id). */
-  def pointImage(vecs: DataFrame, segTable: DataFrame): Option[PointImage] = {
+  /** Load the [[PointImage]] of `vecs`, `segTable` and `emb`, or None —
+    * then the distributed plans serve — when their on-disk bytes are over
+    * the graph hot tier's driver budget ([[hotMaxBytes]]), when a
+    * whole-vector or embedding id repeats or is null, or when a segment
+    * has no id (the image keys rows by id). */
+  def pointImage(vecs: DataFrame, segTable: DataFrame, emb: DataFrame): Option[PointImage] = {
     val hadoop = vecs.sparkSession.sparkContext.hadoopConfiguration
-    val onDisk = (vecs.inputFiles ++ segTable.inputFiles).distinct.map { f =>
+    val onDisk = (vecs.inputFiles ++ segTable.inputFiles ++ emb.inputFiles).distinct.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(hadoop).getFileStatus(p).getLen
     }.sum
     if (onDisk > hotMaxBytes) return None
+    def byId(rows: Array[Row]) = {
+      val at = scala.collection.mutable.LongMap.empty[Int]
+      rows.indices.foreach(i => at(rows(i).getLong(0)) = i)
+      at
+    }
+    def vecsOf(rows: Array[Row]) =
+      rows.map(r => if (r.isNullAt(1)) null else widen(r.get(1)))
     // a null id can neither be the query nor pass `image_id != query`
     val v = vecs.select("image_id", "wv").collect().filterNot(_.isNullAt(0))
-    val ids = v.map(_.getLong(0))
-    val at = scala.collection.mutable.LongMap.empty[Int]
-    ids.indices.foreach(i => at(ids(i)) = i)
-    if (at.size != ids.length) return None
+    val at = byId(v)
+    if (at.size != v.length) return None
+    // a null vec_id would rank in rrf's dense pool, so it is refused
+    val e = emb.select("vec_id", "embedding").collect()
+    if (e.exists(_.isNullAt(0))) return None
+    val embAt = byId(e)
+    if (embAt.size != e.length) return None
     val segRows = segTable.select("image_id", "tag", "conf").collect()
     if (segRows.exists(_.isNullAt(0))) return None
     // a null tag or conf never passes the filter
@@ -1739,9 +1760,25 @@ object Search {
     val knnSchema = knnBrute(vecs.filter(col("image_id") =!= 0L), col("wv"),
         vecs.select(col("wv").as("qv")), 1, tie = col("image_id"))
       .select("image_id", "score").schema
-    Some(new PointImage(ids, v.map(r => if (r.isNullAt(1)) null else widen(r.get(1))),
-      at, byTag, knnSchema, tagSearch(segTable, Nil, 0.0, 1).schema))
+    Some(new PointImage(v.map(_.getLong(0)), vecsOf(v), at, byTag,
+      e.map(_.getLong(0)), vecsOf(e), embAt, knnSchema,
+      tagSearch(segTable, Nil, 0.0, 1).schema))
   }
+
+  /** The ids of rrf's dense pool ([[Lexical.rrfHybridK]]'s vector leg)
+    * served from the image, in rank order: the first `n` embeddings by
+    * `round(graft_cosine(embedding, query's), 6)` desc (nulls last),
+    * vec_id asc, the query itself included. Empty when `queryId` has no
+    * embedding row, as the distributed pool's empty query frame is. */
+  def vecPoolServe(img: PointImage, queryId: Long, n: Int): Seq[Long] =
+    img.embAt.get(queryId).toSeq.flatMap { q =>
+      val qv = img.embVecs(q)
+      val cs = img.embVecs.map { v =>
+        val c = if (v == null || qv == null) null else VectorKernels.cosine(v, qv)
+        if (c == null) null else java.lang.Double.valueOf(roundHalfUp(c, 6))
+      }
+      topByScore(img.embIds, cs, n).map(img.embIds)
+    }
 
   /** [[knnBrute]]'s serving twin: the `k` nearest whole vectors to image
     * `queryId`'s, itself excluded, scored `graft_cosine + offset` with
@@ -1789,7 +1826,7 @@ object Search {
 
   /** The first `k` indices of `ids` under `ORDER BY score DESC NULLS LAST,
     * id ASC`, doubles compared as Spark's sort compares them. */
-  private def topByScore(ids: Array[Long], score: Array[java.lang.Double],
+  private[operators] def topByScore(ids: Array[Long], score: Array[java.lang.Double],
       k: Int): Seq[Int] = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     Array.range(0, ids.length).sorted(new Ordering[Int] {
@@ -1804,7 +1841,13 @@ object Search {
     }).take(k).toSeq
   }
 
-  private def localRows(s: SparkSession, schema: org.apache.spark.sql.types.StructType,
+  /** Spark's `round(x, scale)` of a double (`RoundBase`): HALF_UP through
+    * Scala's `BigDecimal(x)`, NaN and the infinities unchanged. */
+  private[operators] def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  private[operators] def localRows(s: SparkSession, schema: StructType,
       rows: Seq[InternalRow]): DataFrame =
     GraftSqlShim.ofRows(s, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

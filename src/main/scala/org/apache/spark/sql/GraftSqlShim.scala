@@ -42,9 +42,7 @@ object GraftSqlShim {
     * `toJSON`'s `MapPartitions` would launch one. */
   def collectJson(df: DataFrame): Array[String] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val qe = ds.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.executedPlan.executeCollect())
+    val rows = collectInternal(df)
     val writer = new CharArrayWriter()
     val gen = new JacksonGenerator(ds.schema, writer,
       new JSONOptions(Map.empty[String, String], ds.sparkSession.sessionState.conf.sessionLocalTimeZone))
@@ -54,6 +52,14 @@ object GraftSqlShim {
       gen.flush()
       writer.toString
     } finally gen.close()
+  }
+
+  /** The executed plan's rows, collected as one SQL execution, in
+    * Spark's internal form: strings stay the `UTF8String` bytes Spark
+    * compares and hashes, where `collect()` would decode them. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
   }
 
   /** The executed plan's InternalRow RDD — the physical hand-off a

@@ -357,12 +357,15 @@ class ServingHttpSpec extends SparkSpec {
 
   test("warm requests: graph launches no Spark job, mmr two (query broadcast, pool collect)") {
     // the JSON is written on the driver, so rows already there need no
-    // job: graph, whole and tags answer from driver-held images
+    // job: graph, whole, tags and the text modes answer from driver-held
+    // images; key 8's terms, typos and ids are in no pool cache of this
+    // suite (keys 0-2 and 5 fill them), so a cached pool cannot hide a job
     withServer { port =>
-      for ((mode, most) <- Seq("graph" -> 0, "whole" -> 0, "tags" -> 0, "mmr" -> 2)) {
+      for ((mode, most) <- Seq("graph" -> 0, "whole" -> 0, "tags" -> 0, "lexical" -> 0,
+          "fuzzy" -> 0, "mlt" -> 0, "rrf" -> 0, "mmr" -> 2)) {
         assert(post(port, "/api/search", keyed(mode, 5))._1 === 200) // per-JVM builds
-        val (body, n) = servedJobs(post(port, "/api/search", keyed(mode, 6))._2)
-        assert(body === Serving.handle(spark, d, keyed(mode, 6)))
+        val (body, n) = servedJobs(post(port, "/api/search", keyed(mode, 8))._2)
+        assert(body === Serving.handle(spark, d, keyed(mode, 8)))
         assert(n <= most, s"a warm $mode request launched $n Spark job(s)")
       }
     }

@@ -66,6 +66,14 @@ class ServingSpec extends SparkSpec {
     assert((JsonMethods.parse(bad) \ "error").isInstanceOf[JString])
   }
 
+  test("handleWithStatus: a negative top_k is a request error (400) in every mode") {
+    for (mode <- ServingHttp.OrderedModes) {
+      val (status, body) = Serving.handleWithStatus(spark, d, s"""{"mode":"$mode","top_k":-1}""")
+      assert(status === 400, s"$mode: $body")
+      assert(body.contains("top_k must be >= 0"), s"$mode: $body")
+    }
+  }
+
   test("handle: lexical mode via comma-string terms round-trips the envelope") {
     val out = Serving.handle(spark, d,
       """{"mode":"lexical","terms":"hash,merge","top_k":3}""")

@@ -20,6 +20,8 @@ class PointImageSpec extends SparkSpec {
 
   private def json(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq
 
+  private def emb: DataFrame = graft.Tables.embeddings(spark, d)
+
   private def knnPlan(vecs: DataFrame, qid: Long, k: Int): DataFrame =
     Search.knnBrute(vecs.filter(col("image_id") =!= qid), col("wv"),
         vecs.filter(col("image_id") === qid).select(col("wv").as("qv")), k,
@@ -86,7 +88,7 @@ class PointImageSpec extends SparkSpec {
       Row(3L, "a", 0.25), Row(3L, "b", 0.75), Row(4L, "b", 0.75),
       Row(5L, "a", Double.NaN), Row(6L, "a", null), Row(7L, null, 0.9),
       Row(8L, "c", 0.1), Row(9L, "a", 0.0), Row(9L, "a", 0.5)))
-    val img = Search.pointImage(vecs, segs).get
+    val img = Search.pointImage(vecs, segs, emb).get
     for (qid <- Seq(1L, 2L, 3L, 6L, 8L, 9L, 42L); k <- Seq(0, 1, 3, 20)) {
       val got = Search.knnServeById(spark, img, qid, k, offset = 1.0)
       assert(json(got) === json(knnPlan(vecs, qid, k)), s"query image $qid, k $k")
@@ -105,13 +107,14 @@ class PointImageSpec extends SparkSpec {
   test("the image refuses what it cannot hold: over the hot tier's budget, a repeated id, a segment without an id") {
     val vecs = Retrieval.imageVecs(spark, d)
     val segs = Retrieval.segs(spark, d)
-    assert(Search.pointImage(vecs, segs).nonEmpty)
+    assert(Search.pointImage(vecs, segs, emb).nonEmpty)
     sys.props("graft.graph.hot.maxBytes") = "1" // any real table is over
-    try assert(Search.pointImage(vecs, segs).isEmpty)
+    try assert(Search.pointImage(vecs, segs, emb).isEmpty)
     finally sys.props -= "graft.graph.hot.maxBytes"
     val twice = frame(vecSchema, Seq(Row(1L, Seq(1.0)), Row(1L, Seq(2.0))))
-    assert(Search.pointImage(twice, segs).isEmpty)
+    assert(Search.pointImage(twice, segs, emb).isEmpty)
     val noId = frame(segSchema, Seq(Row(null, "a", 0.5)))
-    assert(Search.pointImage(vecs, noId).isEmpty)
+    assert(Search.pointImage(vecs, noId, emb).isEmpty)
+    assert(Search.pointImage(vecs, segs, emb.unionByName(emb)).isEmpty)
   }
 }

@@ -21,8 +21,10 @@ which either side errored is a loss), the medians differ by more than the
 parent's interquartile range, and the change had no more errored or
 incorrect runs and no more failed ops than the parent. For a workload
 whose runs record per-mode latencies (serve_search's `per_mode`), it
-also prints each side's per-mode median table. Nothing under
-perfbench/ is edited.
+also prints each side's per-mode median table, and for one whose runs
+record every timed sample (serve_search's `latencies_s`), each side's
+median count, by mode, of the samples above the run's `latency_p95_s`:
+the modes that form the tail. Nothing under perfbench/ is edited.
 """
 import argparse
 import json
@@ -139,6 +141,41 @@ def per_mode(pairs):
     return "\n".join(lines)
 
 
+def tail_by_mode(pairs):
+    """Each side's median count, by mode, of a run's timed samples above its p95.
+
+    Counted per run from the env record's `latencies_s` ([mode, seconds]
+    per timed sample) against the run's own `latency_p95_s`, over the runs
+    that have both; empty when no run has them."""
+    def counts(r):
+        lat = r.get("env", {}).get("latencies_s")
+        p95 = r.get("metrics", {}).get("latency_p95_s", {}).get("value")
+        if not lat or p95 is None:
+            return None
+        c = {}
+        for mode, seconds in lat:
+            if seconds > p95:
+                c[mode] = c.get(mode, 0) + 1
+        return c
+    runs = {side: [c for c in (counts(p[side]) for p in pairs) if c is not None]
+            for side in ("parent", "change")}
+    if not runs["parent"] and not runs["change"]:
+        return ""
+    def median_count(side, mode):
+        v = [c.get(mode, 0) for c in runs[side]]
+        return statistics.median(v) if v else float("nan")
+    modes = sorted({m for side in runs.values() for c in side for m in c},
+                   key=lambda m: (-median_count("parent", m), m))
+    lines = [f"| mode | parent ({len(runs['parent'])} runs) | change ({len(runs['change'])} runs) |",
+             "|---|---|---|"]
+    for m in modes:
+        lines.append(f"| {m} | {median_count('parent', m):g} | {median_count('change', m):g} |")
+    totals = {side: statistics.median([sum(c.values()) for c in runs[side]]) if runs[side] else float("nan")
+              for side in runs}
+    lines.append(f"| all | {totals['parent']:g} | {totals['change']:g} |")
+    return "\n".join(lines)
+
+
 def main():
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--parent", required=True, help="git revision to compare against")
@@ -186,6 +223,11 @@ def main():
         print()
         print("per-mode median latency (each run's per-mode median, then the median over runs)")
         print(modes)
+    tail = tail_by_mode(pairs)
+    if tail:
+        print()
+        print("samples above each run's latency_p95_s, by mode (median count over runs)")
+        print(tail)
 
 
 if __name__ == "__main__":
