@@ -12,9 +12,10 @@ import graft.operators.Retrieval.SearchRequest
   * the rows of [[Lexical.bm25Serve]], [[Lexical.fuzzyServe]],
   * [[Lexical.moreLikeThis]] and [[Lexical.rrfHybridK]] with their
   * `orderBy`/`limit`, compared as `toJSON` strings (what the server
-  * writes) with the same schema, over a swept key set on the test data;
-  * and on a private index, the image must follow a takedown, an append
-  * and a merge. Every order is total (doc ids are unique), so the rows of
+  * writes) with the same schema, over a swept key set on the test data
+  * and on a built corpus whose cuts turn on Spark's string order; and on
+  * a private index, the image must follow a takedown, an append and a
+  * merge. Every order is total (doc ids are unique), so the rows of
   * `limit(k)` are the first k rows of `limit(60)`: each case runs its
   * distributed plan once and checks every k against that prefix. */
 class LexicalImageSpec extends SparkSpec {
