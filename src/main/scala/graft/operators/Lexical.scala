@@ -520,6 +520,10 @@ object Lexical {
       prefixExpansions(vocab, prefixes, maxExpansions))
   }
 
+  /** How many of the source doc's terms more-like-this queries with — ES's
+    * `max_query_terms`, smaller. */
+  val MltQueryTerms = 5
+
   /** More-like-this (ES `more_like_this`, single-doc form): rank the
     * source document's distinct terms by tf·idf (the same BM25 idf), keep
     * the top `maxQueryTerms` (ties by term — ES's `max_query_terms`
@@ -529,7 +533,7 @@ object Lexical {
     * The selected term list is a bounded driver artifact
     * (`maxQueryTerms` strings). */
   def moreLikeThis(s: SparkSession, d: String, docId: Long,
-      maxQueryTerms: Int = 5): DataFrame = {
+      maxQueryTerms: Int = MltQueryTerms): DataFrame = {
     // term selection is deterministic per (dir, doc, cap) — under a
     // serving burst the tf/df join was paid per REQUEST (mlt p95 7.4 s
     // at C=32, VERDICT r19 #1); cache the ≤ maxQueryTerms selected terms
@@ -1262,8 +1266,10 @@ object Lexical {
   private def dropImage(dir: String): Unit = images.remove(dir)
 
   /** Load the image, or None — then the modes run their distributed plans
-    * — when the index's on-disk bytes are over the hot tier's driver
-    * budget ([[Search.hotMaxBytes]]), when a row sits outside its term's
+    * — when the index's on-disk bytes or the image's estimated size are
+    * over the hot tier's driver budget ([[Search.hotMaxBytes]]), when the
+    * rows to collect are estimated over `spark.driver.maxResultSize`,
+    * when a row sits outside its term's
     * bucket (the pruned read would then keep it for some queries and not
     * others), when a term repeats or a cell is null, or when the stats are
     * not one row with a positive avgdl. */
@@ -1274,6 +1280,24 @@ object Lexical {
     val onDisk = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getContentSummary(root).getLength
     if (onDisk > Search.hotMaxBytes) return None
+    // parquet is compressed and holds no delete keys, so an index inside
+    // the budget on disk can still expand past it: estimate, from the
+    // terms table and before collecting anything, the image (24 B a
+    // posting, a key's bytes and ~64 B of object per delete key) and the
+    // collected rows (an UnsafeRow's 48 B fixed part plus the term a
+    // posting, a key's bytes plus its 16 B slot), and refuse an image over
+    // the budget or rows over what one collect may bring to the driver
+    val len = length(col("term")).cast("double")
+    val nb = octet_length(col("term")).cast("double")
+    // a term's delete-1 and delete-≤2 keys, duplicates counted
+    val nKeys = when(len <= MaxFuzzyTermLen + 2, lit(2.0) + len * 2 + len * (len - 1) / 2)
+      .otherwise(0.0)
+    val est = GraftSqlShim.collectInternal(s.read.schema(TermsSchema).parquet(s"$dir/terms")
+      .agg(coalesce(sum(col("df") * 24 + nKeys * (nb + 64)), lit(0.0)),
+        coalesce(sum(col("df") * (nb + 48) + nKeys * (nb + 16)), lit(0.0))))(0)
+    val maxResult = s.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (est.getDouble(0) > Search.hotMaxBytes ||
+        (maxResult > 0 && est.getDouble(1) > maxResult)) return None
     val stats = GraftSqlShim.collectInternal(readStats(s, dir).select("n_docs", "avgdl"))
     if (stats.length != 1 || stats(0).anyNull || !(stats(0).getDouble(1) > 0.0)) return None
     val home = col("bucket") === pmod(xxhash64(col("term")), lit(IndexBuckets.toLong))
@@ -1372,7 +1396,7 @@ object Lexical {
     * the length cut, `levenshtein` within the budget, and the cap by df
     * desc, term asc. Each `q_term` maps to its capped expansions. */
   private def imageExpansions(img: IndexImage, rawTerms: Seq[String],
-      maxExpansions: Int, auto: Boolean): Map[UTF8String, Array[Int]] = {
+      auto: Boolean): Map[UTF8String, Array[Int]] = {
     val terms = analyze(rawTerms)
     require(terms.nonEmpty, "fuzzy expansion needs at least one term")
     require(terms.forall(_.length <= MaxFuzzyTermLen),
@@ -1399,17 +1423,17 @@ object Lexical {
         q -> cands.map(_._2).sortWith { (a, b) =>
           val byDf = compareDoubles(img.df(b), img.df(a))
           if (byDf != 0) byDf < 0 else img.terms(a).compareTo(img.terms(b)) < 0
-        }.take(maxExpansions).toArray
+        }.take(MaxFuzzyExpansions).toArray
       }
   }
 
   /** `fuzzy` from the image: [[fuzzyServe]]'s top `k` — each analyzed
     * term's slot holds its expansions. */
   def fuzzyImage(s: SparkSession, img: IndexImage, rawTerms: Seq[String],
-      auto: Boolean, k: Int, maxExpansions: Int = MaxFuzzyExpansions): DataFrame = {
+      auto: Boolean, k: Int): DataFrame = {
     val terms = analyze(rawTerms)
     require(terms.nonEmpty, "fuzzy search needs at least one term")
-    val exp = imageExpansions(img, terms, maxExpansions, auto)
+    val exp = imageExpansions(img, terms, auto)
     if (exp.isEmpty) return Search.localRows(s, img.emptySchema, Nil)
     topDocs(s, img.scoreSchema, scoreImage(img,
       terms.map(t => exp.getOrElse(UTF8String.fromString(t), Array.empty[Int]))), k)
@@ -1419,8 +1443,7 @@ object Lexical {
     * terms and tf come from its postings, df and n_docs from the index:
     * on the per-JVM index, built from the same documents and never
     * mutated, these are the values [[docsAndVocab]] derives. */
-  def mltImage(s: SparkSession, img: IndexImage, docId: Long, k: Int,
-      maxQueryTerms: Int = 5): DataFrame = {
+  def mltImage(s: SparkSession, img: IndexImage, docId: Long, k: Int): DataFrame = {
     val src = img.terms.indices.flatMap { j =>
       val r = java.util.Arrays.binarySearch(img.docs(j), docId)
       if (r < 0) None
@@ -1433,7 +1456,7 @@ object Lexical {
         else if (y == null) -1
         else compareDoubles(y, x)
       if (byMlt != 0) byMlt < 0 else img.terms(a).compareTo(img.terms(b)) < 0
-    }.take(maxQueryTerms).map(p => img.terms(p._1).toString).sorted
+    }.take(MltQueryTerms).map(p => img.terms(p._1).toString).sorted
     if (selected.isEmpty) return Search.localRows(s, img.emptySchema, Nil)
     val (ids, score) = bm25Scores(img, selected)
     val keep = ids.indices.filter(ids(_) != docId)

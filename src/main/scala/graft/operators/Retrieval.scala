@@ -1253,7 +1253,8 @@ object Retrieval {
     * [[imageVecs]], [[segs]] and the embeddings), built once per JVM by
     * [[Scratch.once]] outside the map's bin lock; None when it is over the
     * graph hot tier's driver budget, and then `whole`, `tags` and `rrf`
-    * run their distributed plans. Its arrays hold `24 + 8·dim` bytes per
+    * run their distributed plans (embeddings it cannot hold send only
+    * `rrf` there, [[Search.pointImage]]). Its arrays hold `24 + 8·dim` bytes per
     * image and per embedding and 16 per segment (sf0.1: about 1.2 MB,
     * BASELINE.md). */
   private[graft] def pointImage(s: SparkSession, d: String): Option[Search.PointImage] =
@@ -1315,11 +1316,10 @@ object Retrieval {
         }
       case "rrf" => // beyond-reference: ES-style hybrid rank fusion
         require(req.terms.nonEmpty, "rrf mode needs non-empty 'terms'")
-        (Lexical.servedImage(s, d), pointImage(s, d)) match {
-          case (Some(img), Some(pt)) => Lexical.rrfImage(s, img, req.terms,
-            Search.vecPoolServe(pt, qid, Lexical.PoolN), req.k)
-          case _ => Lexical.rrfHybridK(s, d, req.terms, req.k, queryVecId = qid)
-        }
+        (for (img <- Lexical.servedImage(s, d); pt <- pointImage(s, d);
+              vecPool <- Search.vecPoolServe(pt, qid))
+          yield Lexical.rrfImage(s, img, req.terms, vecPool, req.k))
+          .getOrElse(Lexical.rrfHybridK(s, d, req.terms, req.k, queryVecId = qid))
       case "mmr" => // beyond-reference: diversified top-k
         // Request-derived pool clamps to the driver-safety ceiling: k and
         // poolN are caller-controlled at the serving edge, and mmrRerank

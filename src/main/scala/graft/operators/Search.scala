@@ -1709,7 +1709,8 @@ object Search {
     * [[tagSearch]] give over those tables, as a `LocalRelation`, so a
     * request runs no Spark job; the schemas are the distributed plans'
     * own, resolved once at load. [[vecPoolServe]] gives rrf's dense pool
-    * from the embeddings. Query-independent, so one image serves every
+    * from the embeddings, which the image holds only when they too fit
+    * (see [[pointImage]]). Query-independent, so one image serves every
     * request (the session reuse of the EDBT 2020 top-k framework,
     * PAPERS.md). */
   final class PointImage private[Search] (
@@ -1717,24 +1718,33 @@ object Search {
       private[Search] val vecs: Array[Array[Double]],
       private[Search] val at: scala.collection.mutable.LongMap[Int],
       private[Search] val byTag: Map[String, (Array[Long], Array[Double])],
-      private[Search] val embIds: Array[Long],
-      private[Search] val embVecs: Array[Array[Double]],
-      private[Search] val embAt: scala.collection.mutable.LongMap[Int],
+      private[Search] val emb: Option[Embeddings],
       private[Search] val knnSchema: StructType,
       private[Search] val tagSchema: StructType)
 
+  /** The embeddings `(vec_id, embedding)` widened to doubles, and each
+    * vec_id's row. */
+  final class Embeddings private[Search] (
+      private[Search] val ids: Array[Long],
+      private[Search] val vecs: Array[Array[Double]],
+      private[Search] val at: scala.collection.mutable.LongMap[Int])
+
   /** Load the [[PointImage]] of `vecs`, `segTable` and `emb`, or None —
-    * then the distributed plans serve — when their on-disk bytes are over
-    * the graph hot tier's driver budget ([[hotMaxBytes]]), when a
-    * whole-vector or embedding id repeats or is null, or when a segment
-    * has no id (the image keys rows by id). */
+    * then the distributed plans of `whole` and `tags` serve — when the
+    * on-disk bytes of `vecs` and `segTable` are over the graph hot tier's
+    * driver budget ([[hotMaxBytes]]), when a whole-vector id repeats or is
+    * null, or when a segment has no id (the image keys rows by id). The
+    * embeddings, which only rrf's dense pool reads, are held when the
+    * three tables' bytes fit the budget together and every vec_id is
+    * present and unique; otherwise only rrf runs its distributed plan. */
   def pointImage(vecs: DataFrame, segTable: DataFrame, emb: DataFrame): Option[PointImage] = {
     val hadoop = vecs.sparkSession.sparkContext.hadoopConfiguration
-    val onDisk = (vecs.inputFiles ++ segTable.inputFiles ++ emb.inputFiles).distinct.map { f =>
+    def bytes(files: Seq[String]) = files.distinct.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(hadoop).getFileStatus(p).getLen
     }.sum
-    if (onDisk > hotMaxBytes) return None
+    val files = (vecs.inputFiles ++ segTable.inputFiles).toSeq
+    if (bytes(files) > hotMaxBytes) return None
     def byId(rows: Array[Row]) = {
       val at = scala.collection.mutable.LongMap.empty[Int]
       rows.indices.foreach(i => at(rows(i).getLong(0)) = i)
@@ -1746,11 +1756,6 @@ object Search {
     val v = vecs.select("image_id", "wv").collect().filterNot(_.isNullAt(0))
     val at = byId(v)
     if (at.size != v.length) return None
-    // a null vec_id would rank in rrf's dense pool, so it is refused
-    val e = emb.select("vec_id", "embedding").collect()
-    if (e.exists(_.isNullAt(0))) return None
-    val embAt = byId(e)
-    if (embAt.size != e.length) return None
     val segRows = segTable.select("image_id", "tag", "conf").collect()
     if (segRows.exists(_.isNullAt(0))) return None
     // a null tag or conf never passes the filter
@@ -1760,25 +1765,34 @@ object Search {
     val knnSchema = knnBrute(vecs.filter(col("image_id") =!= 0L), col("wv"),
         vecs.select(col("wv").as("qv")), 1, tie = col("image_id"))
       .select("image_id", "score").schema
-    Some(new PointImage(v.map(_.getLong(0)), vecsOf(v), at, byTag,
-      e.map(_.getLong(0)), vecsOf(e), embAt, knnSchema,
-      tagSearch(segTable, Nil, 0.0, 1).schema))
+    val dense =
+      if (bytes(files ++ emb.inputFiles) > hotMaxBytes) None
+      else {
+        val e = emb.select("vec_id", "embedding").collect()
+        // a null vec_id would rank in rrf's dense pool, so it is refused
+        lazy val embAt = byId(e)
+        if (e.exists(_.isNullAt(0)) || embAt.size != e.length) None
+        else Some(new Embeddings(e.map(_.getLong(0)), vecsOf(e), embAt))
+      }
+    Some(new PointImage(v.map(_.getLong(0)), vecsOf(v), at, byTag, dense,
+      knnSchema, tagSearch(segTable, Nil, 0.0, 1).schema))
   }
 
   /** The ids of rrf's dense pool ([[Lexical.rrfHybridK]]'s vector leg)
-    * served from the image, in rank order: the first `n` embeddings by
-    * `round(graft_cosine(embedding, query's), 6)` desc (nulls last),
-    * vec_id asc, the query itself included. Empty when `queryId` has no
-    * embedding row, as the distributed pool's empty query frame is. */
-  def vecPoolServe(img: PointImage, queryId: Long, n: Int): Seq[Long] =
-    img.embAt.get(queryId).toSeq.flatMap { q =>
-      val qv = img.embVecs(q)
-      val cs = img.embVecs.map { v =>
+    * served from the image, in rank order: the first [[Lexical.PoolN]]
+    * embeddings by `round(graft_cosine(embedding, query's), 6)` desc
+    * (nulls last), vec_id asc, the query itself included. Empty when
+    * `queryId` has no embedding row, as the distributed pool's empty
+    * query frame is; None when the image holds no embeddings. */
+  def vecPoolServe(img: PointImage, queryId: Long): Option[Seq[Long]] =
+    img.emb.map(e => e.at.get(queryId).toSeq.flatMap { q =>
+      val qv = e.vecs(q)
+      val cs = e.vecs.map { v =>
         val c = if (v == null || qv == null) null else VectorKernels.cosine(v, qv)
         if (c == null) null else java.lang.Double.valueOf(roundHalfUp(c, 6))
       }
-      topByScore(img.embIds, cs, n).map(img.embIds)
-    }
+      topByScore(e.ids, cs, Lexical.PoolN).map(e.ids)
+    })
 
   /** [[knnBrute]]'s serving twin: the `k` nearest whole vectors to image
     * `queryId`'s, itself excluded, scored `graft_cosine + offset` with

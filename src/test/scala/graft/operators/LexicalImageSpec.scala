@@ -193,4 +193,64 @@ class LexicalImageSpec extends SparkSpec {
     try assert(Lexical.indexImage(spark, dir).isEmpty)
     finally sys.props -= "graft.graph.hot.maxBytes"
   }
+
+  test("the image refuses an index whose estimated size is over the budget though its on-disk bytes are not") {
+    // 4,000 docs of the same 12 terms: 48,000 postings whose doc ids and
+    // constant dl, tf and positions compress on disk, 24 B each in the image
+    val text = (0 until 12).map(i => s"w$i").mkString(" ")
+    val docs = (0L until 4000L).map(i => (i, text)).toDF("doc_id", "text")
+    def build(name: String): String = {
+      val dir = s"${tempDir(name)}/idx"
+      Lexical.writeInvertedIndex(docs, $"doc_id", $"text", dir)
+      dir
+    }
+    val (refused, served) = (build("lex_est"), build("lex_est_ok"))
+    val root = new org.apache.hadoop.fs.Path(refused)
+    val onDisk = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(root).getLength
+    assert(onDisk < 48000L * 24, "the index must be smaller on disk than in the image")
+    sys.props("graft.graph.hot.maxBytes") = onDisk.toString // the on-disk check passes
+    try assert(Lexical.indexImage(spark, refused).isEmpty)
+    finally sys.props -= "graft.graph.hot.maxBytes"
+    assert(Lexical.indexImage(spark, served).nonEmpty)
+  }
+
+  test("with the images refused, lexical, fuzzy, mlt and rrf serve their distributed plans' rows") {
+    // `refused` loses both images; `noPoint` keeps its index image and
+    // loses its point image. Each dir's decision is made once per JVM, so
+    // it is made here, under a 1-byte budget.
+    val (refused, noPoint) = (tempDir("lex_refused"), tempDir("lex_no_point"))
+    for (dir <- Seq(refused, noPoint)) {
+      Tables.documents(spark, d).write.parquet(s"$dir/documents.parquet")
+      Tables.embeddings(spark, d).write.parquet(s"$dir/embeddings.parquet")
+    }
+    assert(Lexical.servedImage(spark, noPoint).nonEmpty)
+    sys.props("graft.graph.hot.maxBytes") = "1"
+    try {
+      assert(Lexical.servedImage(spark, refused).isEmpty)
+      assert(Retrieval.pointImage(spark, refused).isEmpty)
+      assert(Retrieval.pointImage(spark, noPoint).isEmpty)
+    } finally sys.props -= "graft.graph.hot.maxBytes"
+    val v = vocab
+    val (terms, typos) = (Seq(v(1), v(2)), Seq(typo(v(4), 0), typo(v(5), 2)))
+    def check(dir: String, req: SearchRequest, want: DataFrame): Unit = {
+      val got = Retrieval.run(spark, dir, req)
+      assert(!got.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$dir, $req")
+      assert(json(got) === json(want), s"$dir, $req")
+      // the same documents and embeddings as the test data's image-served rows
+      assert(json(got) === json(run(req)), s"$dir, $req")
+    }
+    for (k <- Seq(1, 10)) {
+      check(refused, SearchRequest("lexical", k = k, terms = terms),
+        top(Lexical.bm25Serve(spark, refused, terms), k))
+      for (fuzziness <- Seq("1", "auto"))
+        check(refused, SearchRequest("fuzzy", k = k, terms = typos, fuzziness = fuzziness),
+          top(Lexical.fuzzyServe(spark, refused, typos, auto = fuzziness == "auto"), k))
+      check(refused, SearchRequest("mlt", k = k, queryImageId = Lexical.MltDocId),
+        top(Lexical.moreLikeThis(spark, refused, Lexical.MltDocId), k))
+      for (dir <- Seq(refused, noPoint))
+        check(dir, SearchRequest("rrf", k = k, terms = terms, queryImageId = 7L),
+          Lexical.rrfHybridK(spark, dir, terms, k, 7L))
+    }
+  }
 }

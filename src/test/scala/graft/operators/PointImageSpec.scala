@@ -115,6 +115,33 @@ class PointImageSpec extends SparkSpec {
     assert(Search.pointImage(twice, segs, emb).isEmpty)
     val noId = frame(segSchema, Seq(Row(null, "a", 0.5)))
     assert(Search.pointImage(vecs, noId, emb).isEmpty)
-    assert(Search.pointImage(vecs, segs, emb.unionByName(emb)).isEmpty)
+  }
+
+  test("embeddings the image cannot hold refuse only rrf's dense pool") {
+    val vecs = Retrieval.imageVecs(spark, d)
+    val segs = Retrieval.segs(spark, d)
+    val full = Search.pointImage(vecs, segs, emb).get
+    assert(Search.vecPoolServe(full, 0L).exists(_.nonEmpty))
+    def same(img: Search.PointImage): Unit = {
+      assert(json(Search.knnServeById(spark, img, 3L, 10, offset = 1.0)) ===
+        json(Search.knnServeById(spark, full, 3L, 10, offset = 1.0)))
+      assert(json(Search.tagSearchServe(spark, img, Seq("lbl_3"), 0.0, 10)) ===
+        json(Search.tagSearchServe(spark, full, Seq("lbl_3"), 0.0, 10)))
+    }
+    val nullId = emb.limit(1).withColumn("vec_id", lit(null).cast("long"))
+    for (bad <- Seq(emb.unionByName(emb), emb.unionByName(nullId))) {
+      val img = Search.pointImage(vecs, segs, bad).get
+      assert(Search.vecPoolServe(img, 0L).isEmpty)
+      same(img)
+    }
+    // in-memory tables have no on-disk bytes; the embeddings' file is
+    // over a 1-byte budget
+    val small = frame(vecSchema, Seq(Row(1L, Seq(1.0, 0.0)), Row(2L, Seq(0.0, 1.0))))
+    val smallSegs = frame(segSchema, Seq(Row(1L, "a", 0.5)))
+    assert(Search.vecPoolServe(Search.pointImage(small, smallSegs, emb).get, 0L).nonEmpty)
+    sys.props("graft.graph.hot.maxBytes") = "1"
+    val budgeted = try Search.pointImage(small, smallSegs, emb)
+      finally sys.props -= "graft.graph.hot.maxBytes"
+    assert(budgeted.nonEmpty && Search.vecPoolServe(budgeted.get, 0L).isEmpty)
   }
 }
