@@ -32,16 +32,50 @@ import graft.Tables
   *     [[harmonic3]] (bounded-hop harmonic centrality) and
   *     [[harmonicSketch]] (its HyperBall-style KMV-register form — the
   *     flat-state 100 TB path), [[assortativityOf]] (degree mixing),
-  *     [[clusteringOf]] (triangle census), and the takedown faces
-  *     ([[componentsDelQ]] splits, [[communitiesDelQ]] re-coarsens,
-  *     [[kcoreDelQ]]/[[harmonicDelQ]] stop counting recalled support,
-  *     [[blastRadiusQ]] scopes the re-check set).
-  *   - '''At-rest refresh + serving''': every propagation variant
-  *     (plain/personalized/weighted PageRank, label-prop, communities,
-  *     components, kcore, harmonic) has an arm over the STORED graph
-  *     layout — ids (+ the stored cos weight) only, never vectors —
-  *     and the derived per-doc signals serve as partition-pruned point
-  *     lookups through [[Retrieval.run]]'s `centrality` mode.
+  *     [[clusteringOf]] / [[localClusteringOf]] (triangle census) and
+  *     [[blastRadiusOf]] (a takedown's re-check set).
+  *   - '''At-rest refresh + serving''': the dials read the STORED graph
+  *     layouts (ids and the stored cos, never vectors), and the derived
+  *     per-doc signals serve as partition-pruned point lookups through
+  *     [[Retrieval.run]]'s `centrality` mode.
+  *
+  * '''The named queries are an edge source × dial table.''' A
+  * [[GraphSource]] is a graph's live `nodes (id, label)` and live
+  * `edges (src, dst[, cos])`. There are four sources:
+  *
+  *   - `knn`: the blocked kNN graph `knn_graph` checks, built in-plan
+  *     and memoized ([[knnEdgesCos]]);
+  *   - `refined`: the NN-Descent graph's at-rest layout
+  *     ([[Retrieval.graphIdxDir]]);
+  *   - `append`: the incrementally maintained layout
+  *     ([[Retrieval.graphAppendDir]]): a base build plus beam-searched
+  *     insert links, no rebuild;
+  *   - `del`: the refined layout with [[Retrieval.GraphDeletedIds]]
+  *     tombstoned ([[Retrieval.graphDelIdxDir]]), its live rows
+  *     memoized.
+  *
+  * Every layout is read through [[layout]], the one tombstone-aware
+  * read: a recalled id leaves the node set and neither direction of its
+  * edges conducts. A dial is one function from a source to its output
+  * relation: seeds, [[undirected]] closure, the core call, projection
+  * and order. Query `graph_<dial>` reads knn and `graph_<dial>_<source>`
+  * the others, so a maintained or tombstoned layout answers what a
+  * rebuild of the same live graph would (incremental ≡ recompute)
+  * because each dial is written once. [[queries]] is generated from the
+  * table of the sources each dial offers:
+  *
+  *   - pagerank, components, kcore, harmonic and communities: all four;
+  *   - pagerank_w: knn and refined;
+  *   - ppr, label_prop, label_prop_w, density, clustering,
+  *     clustering_local, harmonic_sketch, assortativity and modularity:
+  *     knn, refined and del.
+  *
+  * The dials that read the edge cosine (pagerank_w, label_prop_w,
+  * density) are not offered on append: its insert links are written
+  * without a cos column. Seven queries are written out, not generated:
+  * `graph_ppr_expand`, `graph_label_prop_acc`, `graph_quality_prop`,
+  * `graph_quality_prop_acc`, `graph_components_hist`,
+  * `graph_blast_radius` and `graph_stats_store`.
   *
   * Reference anchor: the reference's retrieval pipeline stops at
   * neighbor lists (`search_similar_images.py:52-95` — per-query kNN);
@@ -127,6 +161,33 @@ object GraphAnalytics {
       ceil(sqrt(count(lit(1)).cast("double")))).as("__b"))
   }
 
+  /** Data-proportional partition count for a loop-cut frame:
+    * ceil(estimated plan bytes / the AQE advisory partition size),
+    * clamped to [1, 2^22]. A lazy checkpoint's RDD keeps its
+    * partitioning and AQE cannot coalesce it, so a cut at
+    * spark.sql.shuffle.partitions would run one near-empty task per core
+    * per round on small data (the propagation family ran ~3× faster at
+    * 8 cores than at 32 that way). A `coalesce()` to this count collapses
+    * the small case and is a no-op at scale (coalesce never raises a
+    * partition count), so cut partitioning follows the data, not the
+    * core count. Driver-side only: reading optimizedPlan.stats runs no
+    * Spark job. Unknown stats (defaultSizeInBytes = Long.Max) keep the
+    * natural count. */
+  private def cutParts(df: DataFrame): Int = {
+    val advisory = BigInt(df.sparkSession.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    ((bytes + advisory - 1) / advisory)
+      .max(BigInt(1)).min(BigInt(1 << 22)).toInt
+  }
+
+  /** The standard loop cut: [[cutParts]]-sized coalesce + lazy
+    * localCheckpoint. Values are unchanged — every fold that crosses one
+    * of these cuts is partitioning-independent by design (ordered folds,
+    * integer argmax, set distinct). */
+  private def sizedCut(df: DataFrame, parts: Int): DataFrame =
+    df.coalesce(parts).localCheckpoint(eager = false)
+
   /** The shared power-iteration loop over a teleport vector `tvec` =
     * (id, __t) with Σ __t = 1:
     *
@@ -167,64 +228,23 @@ object GraphAnalytics {
     * index is for (`graph_pagerank_refined` reads stored edge ids and
     * measured 1.8× faster than the in-plan blocked build), and
     * localCheckpoint is the in-JVM equivalent. */
-  /** Data-proportional partition count for a loop-cut frame (r21, guide
-    * §2 "make partitioning scale-adaptive"): ceil(estimated plan bytes /
-    * the AQE advisory partition size), ≥ 1. The r20 per-round lazy
-    * checkpoints materialized every round at
-    * spark.sql.shuffle.partitions (= the core count in the bench)
-    * regardless of data size, and an RDD scan's partitioning is frozen
-    * against AQE coalescing — so at sf0.1 the ppr/pagerank family ran
-    * ~3× FASTER at 8 cores than at 32 (PERF_r20 scaling ratios 0.29-0.35)
-    * and graph_ppr/_refined regressed 25-30% vs the uncut r19 spelling.
-    * A `coalesce()` to this count collapses the tiny-data case (one
-    * near-empty partition per core per round → 1) and is a NO-OP at
-    * scale (coalesce never raises a partition count, and any estimate ≥
-    * advisory yields ≥ the natural count), so the cut partitioning stays
-    * ∝ data instead of ∝ the local core count. Driver-side only:
-    * reading optimizedPlan.stats runs no Spark job, and the loops call
-    * it on per-round plans that are one cut deep (cheap to optimize).
-    * Unknown stats (defaultSizeInBytes = Long.Max) degrade to the
-    * current behavior, never below it. */
-  private def cutParts(df: DataFrame): Int = {
-    val advisory = BigInt(df.sparkSession.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    ((bytes + advisory - 1) / advisory)
-      .max(BigInt(1)).min(BigInt(1 << 22)).toInt
-  }
-
-  /** The standard loop cut: [[cutParts]]-sized coalesce + lazy
-    * localCheckpoint. Values are unchanged — every fold that crosses one
-    * of these cuts is partitioning-independent by design (ordered folds,
-    * integer argmax, set distinct). */
-  private def sizedCut(df: DataFrame, parts: Int): DataFrame =
-    df.coalesce(parts).localCheckpoint(eager = false)
-
   private def prIterate(tvec: DataFrame, edges: DataFrame, iters: Int,
       damping: Double, subBuckets: Int,
       weighted: Boolean = false,
       orderedFolds: Boolean = true): DataFrame = {
     require(iters >= 1, s"pageRank: iters >= 1, got $iters")
-    // Loop-lineage discipline (r20 — the kcorePeel note applied here):
-    // tvec and the semi-joined edge set are referenced by EVERY round
-    // (~2·iters times each), and the loop-carried pr is referenced
-    // TWICE per round (the dangling-mass fold and the contribution
-    // join), so an uncut chain DOUBLES per round — graph_ppr_del's
-    // pre-r20 3-round plan held 1126 Exchange nodes and 586 parquet
-    // scans of the same inputs. tvec, e, od and dangling (all
-    // loop-invariant) plus each round's pr are therefore cut with LAZY
-    // localCheckpoints (`eager = false`: plan construction runs no job —
-    // the deferred-view contract; the first action materializes each
-    // cut once and every reference reuses its blocks). Values are
-    // unchanged: the ordered folds are partitioning-independent by
-    // design and a checkpoint stores the same deterministic rows.
-    // (The old `checkpointEvery` knob was subsumed by the every-round
-    // cut and removed in r21 — a silently-ignored parameter misleads.)
-    // Every cut is coalesced to a
-    // data-proportional partition count first (see [[cutParts]] — the
-    // r21 fix for the r20 32-partition-per-round materialization tax);
-    // nV sizes the node-cardinality frames (tv, od, dangling, each
-    // round's pr — all ≤ one row per node), nE the semi-joined edges.
+    // Loop lineage: tvec and the semi-joined edge set are referenced by
+    // every round (~2·iters times each), and the loop-carried pr twice
+    // per round (the dangling-mass fold and the contribution join), so
+    // an uncut chain doubles per round (an uncut 3-round graph_ppr_del
+    // plan held 1126 Exchange nodes and 586 parquet scans). tvec, e, od
+    // and dangling (all loop-invariant) plus each round's pr are cut
+    // with lazy localCheckpoints (`eager = false`: plan construction
+    // runs no job; the first action materializes each cut once). Values
+    // are unchanged: the ordered folds are partitioning-independent and
+    // a checkpoint stores the same deterministic rows. Each cut is sized
+    // by [[cutParts]]: nV for the node-cardinality frames (tv, od,
+    // dangling, each round's pr), nE for the semi-joined edges.
     val nV = cutParts(tvec)
     val nE = cutParts(edges)
     val tv = sizedCut(tvec, nV)
@@ -381,12 +401,10 @@ object GraphAnalytics {
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
       iters: Int): DataFrame = {
     require(iters >= 1, s"labelPropagation: iters >= 1, got $iters")
-    // Loop-lineage discipline (r20): base and e are referenced every
-    // round and lbl TWICE per round (vote lookup + prev-label join), so
-    // the uncut chain doubles per round — see the prIterate note. Lazy
-    // cuts, values unchanged (integer argmax, deterministic
-    // tie-breaks). Cuts coalesced to data-proportional counts (r21,
-    // see [[cutParts]]).
+    // Loop lineage: base and e are referenced every round and lbl twice
+    // per round (vote lookup + prev-label join), so the uncut chain
+    // doubles per round (the prIterate note). Lazy sized cuts, values
+    // unchanged (integer argmax, deterministic tie-breaks).
     val nV = cutParts(nodes)
     val nE = cutParts(edges)
     val base = sizedCut(
@@ -422,10 +440,9 @@ object GraphAnalytics {
   def weightedLabelPropagation(nodes: DataFrame, edges: DataFrame,
       iters: Int, subBuckets: Int = 16): DataFrame = {
     require(iters >= 1, s"weightedLabelPropagation: iters >= 1, got $iters")
-    // Loop-lineage discipline (r20) — the labelPropagation note applies
-    // verbatim; the slice-major fold keeps its published order (it is
-    // partitioning-independent by design), so values are unchanged.
-    // Cuts coalesced to data-proportional counts (r21, [[cutParts]]).
+    // Loop lineage: the labelPropagation note applies verbatim; the
+    // slice-major fold keeps its published order (it is
+    // partitioning-independent), so values are unchanged.
     val nV = cutParts(nodes)
     val nE = cutParts(edges)
     val base = sizedCut(
@@ -466,197 +483,12 @@ object GraphAnalytics {
     lbl
   }
 
-  // ---------------------------------------------------------------- //
-  // Named queries over the embeddings table's cluster-blocked kNN     //
-  // graph (k=3 — the same deterministic edge set `knn_graph` checks). //
-  // ---------------------------------------------------------------- //
-
-  private[operators] val Iters = 3
-  private val SeedMod = 5 // vec_id % 5 == 0 → seed (20% trusted labels)
-  private val PprSeedLabel = 3 // the "curated sample": all label-3 docs
-
-  /** The `knn_graph` edge set as (src, dst, cos) — Spark side, built
-    * ONCE per (JVM, sfDir) into scratch parquet
-    * ([[graft.plans.Scratch]]). This is the one EXPENSIVE in-plan
-    * derivation the whole family shares: kmeans assignment + cluster
-    * self-join + rank window. Before r19 every in-plan Q binding
-    * re-derived it per REFERENCE — [[prIterate]] reads its `edges` arg
-    * from the loop-invariant out-degree fold AND from every round's
-    * contribution join, so a 3-round propagation replayed the build
-    * ~7×, and the 8 most expensive suite rows were all in-plan
-    * propagation arms. r19 memoized it behind a lazy localCheckpoint;
-    * r20 moved the memo to scratch parquet because the bench's per-rep
-    * RDD unpersist was silently killing the checkpoint blocks (see the
-    * Scratch doc — reps 2-3 of every consumer failed and timed the
-    * failure). Values are unchanged — the stored rows ARE the same
-    * deterministic derivation (all graph oracles re-verified at
-    * sf0.01). */
-  private[operators] def knnEdgesCos(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"edgescos|$d") {
-      Search.knnGraph(Tables.embeddings(s, d), col("vec_id"), col("embedding"),
-          Retrieval.labelCentroids(s, d).select(col("label").as("cid"), col("c")),
-          k = 3)
-        .select(col("__vid").as("src"), col("nbr_id").as("dst"), col("cos"))
-    }
-
-  /** The `knn_graph` edge set as (src, dst) — Spark side. */
-  private def knnEdges(s: SparkSession, d: String): DataFrame =
-    knnEdgesCos(s, d).select("src", "dst")
-
-  /** The PRODUCTION graph's stored edge list (src, dst) — the clean
-    * at-rest layout every `_refined` arm reads: no vectors, no
-    * kmeans/NN-Descent re-run, just the (src, dst[, cos]) rows
-    * [[Search.writeGraphIndex]] persisted. */
-  private def storedEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-      .select(col("__vid").as("src"), col("nbr_id").as("dst"))
-
-  /** PageRank over the directed kNN graph: corpus-centrality per
-    * document, the label-free density/quality signal. 3 iterations,
-    * d = 0.85. The pr column is bit-exact vs the oracle (integer-
-    * derived doubles through ordered folds); round(9) is cosmetic. */
-  def pageRankQ(s: SparkSession, d: String): DataFrame =
-    pageRank(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        knnEdges(s, d), iters = Iters)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"))
-      .orderBy("vec_id")
-
-  /** Label propagation over the UNDIRECTED closure of the kNN graph
-    * from 20% clamped seeds (vec_id % 5 == 0 keeps its true label):
-    * the semi-supervised labeler. Output is every node's final label
-    * (null = unreachable from any seed) plus its seed flag. */
-  def labelPropQ(s: SparkSession, d: String): DataFrame = {
-    val e = knnEdges(s, d)
-    val und = e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-      when(col("vec_id") % SeedMod === 0, col("label")).as("seed"))
-    labelPropagation(nodes, und, iters = Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("label"),
-        (col("id") % SeedMod === 0).as("is_seed"))
-      .orderBy("vec_id")
-  }
-
-  /** Propagation-quality meter — and itself a fully oracle-checked
-    * relation (all-integer): how often the propagated label agrees
-    * with the held-out truth on non-seed nodes. The blocked kNN graph
-    * is label-centroid-clustered, so high agreement is the expected
-    * read; the row guards regressions in the propagation semantics. */
-  def labelPropAccQ(s: SparkSession, d: String): DataFrame = {
-    val truth = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label").as("truth"))
-    labelPropQ(s, d).join(truth, "vec_id")
-      .agg(
-        count(lit(1)).as("n_nodes"),
-        sum(when(col("is_seed"), 1L).otherwise(0L)).as("n_seed"),
-        sum(when(!col("is_seed") && col("label").isNotNull, 1L)
-          .otherwise(0L)).as("n_pred"),
-        sum(when(!col("is_seed") && col("label") === col("truth"), 1L)
-          .otherwise(0L)).as("n_correct"))
-      .select(col("n_nodes"), col("n_seed"), col("n_pred"), col("n_correct"),
-        round(col("n_correct").cast("double") / col("n_pred"), 6).as("acc"))
-  }
-
-  /** PPR ranks from the label-[[PprSeedLabel]] trusted set, joined
-    * back to the seed flag — shared by [[pprQ]] / [[pprExpandQ]]. */
-  private def pprRanks(s: SparkSession, d: String): DataFrame = {
-    val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-      (col("label") === PprSeedLabel).as("seed"))
-    personalizedPageRank(nodes, knnEdges(s, d), iters = Iters)
-      .join(nodes.select(col("id"), col("seed").as("is_seed")), "id")
-  }
-
-  /** Personalized PageRank from a trusted seed set (all label-3 docs):
-    * every document's similarity-graph proximity to the seeds — the
-    * seed-expansion selection signal, full relation. Bit-exact vs the
-    * oracle like [[pageRankQ]]. */
-  def pprQ(s: SparkSession, d: String): DataFrame =
-    pprRanks(s, d)
-      .select(col("id").as("vec_id"), col("is_seed"),
-        round(col("pr"), 9).as("ppr"))
-      .orderBy("vec_id")
-
-  /** PPR over the PRODUCTION graph — the teleport-variant twin of
-    * [[pageRankRefinedQ]]: the NN-Descent refined edge set read from
-    * the at-rest layout ([[Retrieval.graphIdxDir]]), seed mass on the
-    * label-[[PprSeedLabel]] trusted set. The 100 TB shape for
-    * seed-expansion refreshes: a new curated sample re-ranks the corpus
-    * against the STORED edge list (ids only, no vectors) — the
-    * kmeans/NN-Descent build never re-runs, only the |E|-bounded
-    * propagation loop does. Bit-exact vs the oracle's refined-pyramid
-    * replay like every ranking here. */
-  def pprRefinedQ(s: SparkSession, d: String): DataFrame = {
-    val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-      (col("label") === PprSeedLabel).as("seed"))
-    personalizedPageRank(nodes,
-        s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")),
-        iters = Iters)
-      .join(nodes.select(col("id"), col("seed").as("is_seed")), "id")
-      .select(col("id").as("vec_id"), col("is_seed"),
-        round(col("pr"), 9).as("ppr"))
-      .orderBy("vec_id")
-  }
-
-  /** Takedown-aware PPR — [[pprRefinedQ]] over the TOMBSTONED layout:
-    * a recalled doc leaves the node set AND the seed set (its teleport
-    * mass redistributes over the surviving trusted docs — the
-    * normalizer is the LIVE seed count), and neither direction of its
-    * edges conducts. A contaminated doc recalled from the curated
-    * sample must stop pulling its neighborhood into the training
-    * slice — the takedown face of seed expansion. */
-  def pprDelQ(s: SparkSession, d: String): DataFrame = {
-    val nodes = delLiveEmb(s, d)
-      .select(col("id"), (col("label") === PprSeedLabel).as("seed"))
-    val edges = delLiveEdgesCos(s, d).select("src", "dst")
-    personalizedPageRank(nodes, edges, iters = Iters)
-      .join(nodes.select(col("id"), col("seed").as("is_seed")), "id")
-      .select(col("id").as("vec_id"), col("is_seed"),
-        round(col("pr"), 9).as("ppr"))
-      .orderBy("vec_id")
-  }
-
-  /** The expansion face: the 20 NON-seed documents closest to the
-    * trusted set by PPR mass — "given this curated sample, which docs
-    * should join the training slice next". Selection is by raw pr (both
-    * sides), but the SERVED row order re-sorts by the rounded column —
-    * the oracle's outer ORDER BY key — so two raw-distinct, round-equal
-    * ppr values cannot order-diverge under the hash check. */
-  def pprExpandQ(s: SparkSession, d: String): DataFrame =
-    pprRanks(s, d).filter(!col("is_seed"))
-      .orderBy(desc("pr"), asc("id")).limit(20)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("ppr"))
-      .orderBy(desc("ppr"), asc("vec_id"))
-
-  /** PageRank over the PRODUCTION graph — the NN-Descent refined edge
-    * set read from the at-rest graph index ([[Retrieval.graphIdxDir]]:
-    * built once per JVM × sfDir, bit-identical to the in-plan
-    * derivation, IvfLayoutSpec pins it). The 100 TB shape: centrality
-    * refreshes re-read the stored edge list (ids only, no vectors),
-    * never re-run the kmeans/NN-Descent build. Build attribution lives
-    * in `knn_graph_refined`; this row measures the propagation loop on
-    * the served graph. */
-  def pageRankRefinedQ(s: SparkSession, d: String): DataFrame =
-    pageRank(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"))
-      .orderBy("vec_id")
-
-  /** kNN-density profile: each vector's degree and mean cosine to its
-    * blocked top-3 neighbors — the distribution-outlier signal (a doc
-    * whose nearest neighbors are all FAR is junk/noise; one whose
-    * neighbors are near-identical is redundancy the dedup family
-    * handles). The 3-term mean folds in neighbor order, so the value
-    * is bit-exact vs the oracle. Singleton-cluster vectors have no
-    * edges and no row — the honest read (density undefined, the
-    * codebook, not the data, isolated them). */
-  def densityQ(s: SparkSession, d: String): DataFrame =
-    densityOf(knnEdgesCos(s, d)).orderBy("vec_id")
-
-  /** [[densityQ]]'s core over any (src, dst, cos) edge list: per-src
-    * degree and neighbor-ordered mean cosine. */
+  /** kNN-density profile over any (src, dst, cos) edge list: per-src
+    * degree and neighbor-ordered mean cosine, the distribution-outlier
+    * signal (a doc whose nearest neighbors are all far is junk or
+    * noise). The mean folds in neighbor order, so it is bit-exact vs
+    * the oracle. A node with no edges has no row: its density is
+    * undefined. */
   def densityOf(edges: DataFrame): DataFrame =
     edges.groupBy(col("src"))
       .agg(count(lit(1)).as("degree"),
@@ -665,220 +497,14 @@ object GraphAnalytics {
       .select(col("src").as("vec_id"), col("degree"),
         round(col("__sum") / col("degree"), 6).as("mean_cos"))
 
-  /** [[densityQ]] over the PRODUCTION graph — the stored cos column's
-    * direct payoff: the junk/outlier signal (a doc whose refined
-    * nearest neighbors are all FAR) refreshes from (src, dst, cos) rows
-    * alone, no vectors and no NN-Descent re-run. */
-  def densityRefinedQ(s: SparkSession, d: String): DataFrame =
-    densityOf(s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-        .select(col("__vid").as("src"), col("nbr_id").as("dst"), col("cos")))
-      .orderBy("vec_id")
-
-  /** [[densityRefinedQ]] with takedowns honored — degree and mean-cos
-    * recomputed over the TOMBSTONED layout's surviving weighted edges:
-    * a doc whose nearest neighbors were recalled honestly reads a
-    * thinner degree (its density evidence shrank), and recalled docs
-    * emit no row. Completes density's in-plan/refined/del triple. */
-  def densityDelQ(s: SparkSession, d: String): DataFrame =
-    densityOf(delLiveEdgesCos(s, d)).orderBy("vec_id")
-
-  /** [[labelPropQ]]'s weighted twin — cosine-weighted votes over the
-    * same seeds, graph, and round count, so the two relations diff
-    * directly: rows where they disagree are exactly the nodes whose
-    * majority and weighted-majority verdicts split. */
-  def labelPropWQ(s: SparkSession, d: String): DataFrame = {
-    val e = knnEdgesCos(s, d)
-    val und = e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst"), col("cos")))
-      .distinct()
-    val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-      when(col("vec_id") % SeedMod === 0, col("label")).as("seed"))
-    weightedLabelPropagation(nodes,
-        und.select(col("src"), col("dst"), col("cos").as("w")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("label"),
-        (col("id") % SeedMod === 0).as("is_seed"))
-      .orderBy("vec_id")
-  }
-
-  /** [[labelPropWQ]] over the PRODUCTION graph — weighted votes
-    * through the STORED cos column (the r17 layout schema): the
-    * trusted-seed spread refreshes from (src, dst, cos) rows alone, no
-    * vector join and no NN-Descent re-run — the weighted half of the
-    * at-rest propagation matrix that `graph_pagerank_w_refined`
-    * opened. */
-  def labelPropWRefinedQ(s: SparkSession, d: String): DataFrame = {
-    val e = s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-      .select(col("__vid").as("src"), col("nbr_id").as("dst"), col("cos"))
-    val und = e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst"), col("cos")))
-      .distinct()
-    val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-      when(col("vec_id") % SeedMod === 0, col("label")).as("seed"))
-    weightedLabelPropagation(nodes,
-        und.select(col("src"), col("dst"), col("cos").as("w")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("label"),
-        (col("id") % SeedMod === 0).as("is_seed"))
-      .orderBy("vec_id")
-  }
-
-  /** Takedown-aware weighted labeling — [[labelPropWRefinedQ]] with
-    * tombstones honored: a recalled seed's weighted votes stop
-    * conducting, live nodes only. Closes the label-prop face of the
-    * takedown matrix (plain del existed; the weighted arm didn't). */
-  def labelPropWDelQ(s: SparkSession, d: String): DataFrame = {
-    val e = delLiveEdgesCos(s, d)
-    val und = e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst"), col("cos")))
-      .distinct()
-    val nodes = delLiveEmb(s, d).select(col("id"),
-      when(col("id") % SeedMod === 0, col("label")).as("seed"))
-    weightedLabelPropagation(nodes,
-        und.select(col("src"), col("dst"), col("cos").as("w")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("label"),
-        (col("id") % SeedMod === 0).as("is_seed"))
-      .orderBy("vec_id")
-  }
-
-  /** Cosine-weighted centrality — [[pageRankQ]]'s weighted twin (the
-    * `graph_label_prop` / `graph_label_prop_w` relationship, for
-    * PageRank): out-mass splits ∝ the calibrated edge weight
-    * (cos+1)/2 ∈ (0, 1], so a near-duplicate neighbor conducts more
-    * rank than a marginal one. Same graph, rounds and damping as
-    * [[pageRankQ]], so the two relations diff directly. */
-  def pageRankWQ(s: SparkSession, d: String): DataFrame =
-    weightedPageRank(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        knnEdgesCos(s, d).select(col("src"), col("dst"),
-          ((col("cos") + lit(1.0)) / lit(2.0)).as("w")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"))
-      .orderBy("vec_id")
-
-  /** Cosine-weighted centrality over the PRODUCTION graph —
-    * [[pageRankWQ]]'s at-rest twin, closing the teleport/weight matrix
-    * over the stored layout (plain/ppr/weighted now all have `_refined`
-    * arms): the NN-Descent edge WEIGHTS ride the layout (the `cos`
-    * column [[Search.writeGraphIndex]] stores when the builder has it),
-    * so the refresh reads (src, dst, cos) — still no vectors, no
-    * kmeans/NN-Descent re-run — and splits out-mass ∝ the calibrated
-    * (cos+1)/2 exactly as the in-plan twin does. */
-  def pageRankWRefinedQ(s: SparkSession, d: String): DataFrame =
-    weightedPageRank(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst"),
-            ((col("cos") + lit(1.0)) / lit(2.0)).as("w")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"))
-      .orderBy("vec_id")
-
-  /** Centrality refresh over the INCREMENTALLY MAINTAINED layout
-    * ([[Retrieval.graphAppendDir]] — base built from the
-    * all-but-increment slice, two rows inserted via beam-searched
-    * forward+reverse links): the appended nodes enter the ranking and
-    * mass renormalizes over the grown set WITHOUT any NN-Descent
-    * rebuild — the companion of `graph_pagerank_refined` for the add
-    * half of the add-vs-train split. The oracle replays the whole
-    * append construction (base pyramid + per-insert walks) and then the
-    * same unrolled power iterations over the appended edge state. */
-  def pageRankAppendQ(s: SparkSession, d: String): DataFrame =
-    pageRank(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        s.read.parquet(s"${Retrieval.graphAppendDir(s, d)}/idx/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")),
-        iters = Iters)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"))
-      .orderBy("vec_id")
-
-  /** Takedown-aware centrality refresh — [[pageRankRefinedQ]] over the
-    * TOMBSTONED at-rest layout ([[Retrieval.GraphDeletedIds]]
-    * recalled): deleted docs leave the node set, neither direction of
-    * their edges conducts, and the ranking renormalizes over the
-    * survivors (N shrinks; a survivor that lost its whole out-list
-    * becomes dangling and redistributes through the teleport — the
-    * loop's dangling path exercised by real takedowns, not just
-    * synthetic specs). Tombstones are honored through the shared
-    * store reads, the same liveDocs discipline every index family
-    * serves; the oracle replays the refined pyramid MINUS the ids. */
-  def pageRankDelQ(s: SparkSession, d: String): DataFrame = {
-    val (live, edges) = delLayoutLive(s, d)
-    pageRank(live, edges, iters = Iters)
-      .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"))
-      .orderBy("vec_id")
-  }
-
-  /** Label propagation over a (possibly tombstoned) at-rest graph
-    * layout: live nodes only, and NEITHER direction of a deleted node's
-    * edges conducts a vote — the takedown semantics the propagation
-    * family owes (a recalled document must not keep labeling its
-    * neighbors through votes it cast before the takedown). `nodes` =
-    * (id, seed) PRE-takedown; deleted ids are dropped here through the
-    * same [[graft.sources.Tombstones]] store every index family serves. */
-  def labelPropOverLayout(s: SparkSession, nodes: DataFrame, idxDir: String,
-      iters: Int): DataFrame = {
-    import graft.sources.Tombstones
-    val live = Tombstones.dropDeleted(nodes, col("id"), idxDir)
-    val e0 = Tombstones.dropDeleted(
-      Tombstones.dropDeleted(
-        s.read.parquet(s"$idxDir/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")),
-        col("src"), idxDir),
-      col("dst"), idxDir)
-    val und = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    labelPropagation(live, und, iters)
-  }
-
-  /** Takedown-aware semi-supervised labeling — [[labelPropQ]]'s
-    * semantics over the TOMBSTONED production layout
-    * ([[Retrieval.graphDelIdxDir]], the same store `graph_pagerank_del`
-    * refreshes from): recalled docs leave the node set AND their past
-    * votes stop conducting, so a dependent whose only label source was
-    * a deleted seed honestly reverts to null (or flips to the surviving
-    * majority — GraphAnalyticsSpec pins the flip on a synthetic layout).
-    * The oracle replays the refined pyramid minus the ids, then the
-    * same unrolled vote rounds. */
-  /** [[labelPropQ]] over the PRODUCTION graph — the clamped-seed
-    * spread refreshed from the stored (src, dst) rows alone, no
-    * blocked-kNN build per reading (the plain-vote twin of
-    * [[labelPropWRefinedQ]], completing the refined column of the
-    * propagation matrix). */
-  def labelPropRefinedQ(s: SparkSession, d: String): DataFrame = {
-    val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-      when(col("vec_id") % SeedMod === 0, col("label")).as("seed"))
-    labelPropOverLayout(s, nodes,
-        s"${Retrieval.graphIdxDir(s, d)}/idx", Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("label"),
-        (col("id") % SeedMod === 0).as("is_seed"))
-      .orderBy("vec_id")
-  }
-
-  def labelPropDelQ(s: SparkSession, d: String): DataFrame = {
-    val nodes = delLiveEmb(s, d).select(col("id"),
-      when(col("id") % SeedMod === 0, col("label")).as("seed"))
-    val e0 = delLiveEdgesCos(s, d).select("src", "dst")
-    val und = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    labelPropagation(nodes, und, Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("label"),
-        (col("id") % SeedMod === 0).as("is_seed"))
-      .orderBy("vec_id")
-  }
-
-  /** Global triangle census of the kNN graph's undirected closure:
-    * unordered edge pairs, wedge count Σ C(deg, 2), triangle count via
-    * the (a<b<c) ordered two-join (each triangle counted exactly once,
-    * candidate space bounded by Σ deg² — the NoN-expansion bound, never
-    * corpus²), and the global clustering coefficient 3·T / W. The
-    * cohesion dial for the graph family: near-random embeddings read
-    * low (neighbors of neighbors are strangers — beam search and label
-    * propagation will struggle), a well-clustered corpus reads high.
-    * Integer end to end until the one final division — exact replay. */
-  def clusteringQ(s: SparkSession, d: String): DataFrame =
-    clusteringOf(knnEdges(s, d))
-
-  /** [[clusteringQ]]'s core over any (src, dst) edge list (direction
-    * and duplicates are erased by the unordered-pair distinct). */
+  /** Global triangle census of any (src, dst) edge list's undirected
+    * closure (direction and duplicates are erased by the unordered-pair
+    * distinct): pair count, wedge count Σ C(deg, 2), triangle count via
+    * the (a<b<c) ordered two-join (each triangle once, candidates
+    * bounded by Σ deg², never corpus²), and the global clustering
+    * coefficient 3·T / W. Near-random embeddings read low, a
+    * well-clustered corpus reads high. Integer end to end until the one
+    * final division, so the replay is exact. */
   def clusteringOf(edges: DataFrame): DataFrame = {
     val p = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
@@ -919,7 +545,7 @@ object GraphAnalytics {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      // referenced 4× (3 joins + deg); sized cut (r21, [[cutParts]])
+      // referenced 4× (3 joins + deg): a sized cut
       .coalesce(cutParts(edges)).localCheckpoint(eager = false)
     val deg = p.select(col("a").as("v"))
       .unionByName(p.select(col("b").as("v")))
@@ -940,54 +566,6 @@ object GraphAnalytics {
           lit(2.0) * coalesce(col("__t"), lit(0L)) /
             (col("deg") * (col("deg") - 1)).cast("double"), 6))
           .as("local_coeff"))
-  }
-
-  /** [[localClusteringOf]] over the kNN graph: (vec_id, deg,
-    * n_triangles, local_coeff) for every node with ≥ 1 edge. */
-  def clusteringLocalQ(s: SparkSession, d: String): DataFrame =
-    localClusteringOf(knnEdges(s, d))
-      .select(col("v").as("vec_id"), col("deg"), col("n_triangles"),
-        col("local_coeff"))
-      .orderBy("vec_id")
-
-  /** [[clusteringQ]] over the PRODUCTION graph — the cohesion dial
-    * refreshed from the stored (src, dst) rows alone (the
-    * `graph_density_refined` payoff for the census): no blocked-kNN
-    * build per reading. */
-  def clusteringRefinedQ(s: SparkSession, d: String): DataFrame =
-    clusteringOf(storedEdges(s, d))
-
-  /** Takedown-aware census — [[clusteringQ]] over the TOMBSTONED
-    * layout's surviving edges: a recalled doc's triangles stop
-    * counting (every wedge and triangle through it leaves the census),
-    * closing the takedown matrix for the global cohesion dial. */
-  def clusteringDelQ(s: SparkSession, d: String): DataFrame = {
-    val (_, e0) = delLayoutLive(s, d)
-    clusteringOf(e0)
-  }
-
-  /** [[clusteringLocalQ]] over the PRODUCTION graph — the per-doc
-    * cohesion dial refreshed from the stored (src, dst) rows alone (no
-    * blocked-kNN build per reading), and the derivation the widened
-    * stats store serves per doc ([[statsSignals]]). */
-  def clusteringLocalRefinedQ(s: SparkSession, d: String): DataFrame =
-    localClusteringOf(storedEdges(s, d))
-      .select(col("v").as("vec_id"), col("deg"), col("n_triangles"),
-        col("local_coeff"))
-      .orderBy("vec_id")
-
-  /** Takedown-aware per-node cohesion — [[clusteringLocalQ]] over the
-    * TOMBSTONED layout: a triangle corner whose third corner was
-    * recalled honestly loses that triangle (its coefficient drops, or
-    * nulls if its degree falls under 2), and recalled ids emit no row
-    * (they keep no edges, and [[localClusteringOf]] only speaks for
-    * nodes with ≥ 1 edge). */
-  def clusteringLocalDelQ(s: SparkSession, d: String): DataFrame = {
-    val (_, e0) = delLayoutLive(s, d)
-    localClusteringOf(e0)
-      .select(col("v").as("vec_id"), col("deg"), col("n_triangles"),
-        col("local_coeff"))
-      .orderBy("vec_id")
   }
 
   /** Connected components of the UNDIRECTED closure of `edges`,
@@ -1061,12 +639,11 @@ object GraphAnalytics {
       .filter(col("src") =!= col("dst"))
       .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    // Cuts coalesced to data-proportional counts (r21, [[cutParts]]):
-    // und ≤ 2|E| rows, each round's survivor set ≤ |V|.
+    // Sized cuts ([[cutParts]]): und ≤ 2|E| rows, each round's survivor
+    // set ≤ |V|.
     val nV = cutParts(nodes)
     val nE = cutParts(edges)
-    val und = sizedCut(e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"))).distinct(), nE)
+    val und = sizedCut(undirected(e0), nE)
     def degWithin(live: DataFrame): DataFrame = und
       .join(live.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(live.select(col("id").as("dst")), Seq("dst"), "left_semi")
@@ -1083,195 +660,11 @@ object GraphAnalytics {
         when(col("in_core"), col("core_deg")).as("core_deg"))
   }
 
-  private val QualitySeedMfx = 500000L // |NB margin| ≥ 0.5 → confident seed
-
-  /** Semi-supervised QUALITY spreading — the two families composed:
-    * the NB classifier's CONFIDENT verdicts (|fixed-point margin| ≥
-    * [[QualitySeedMfx]]) become clamped seeds, and their binary quality
-    * label propagates over the similarity graph to the low-confidence
-    * docs the margin alone can't call. Integer end to end (fixed-point
-    * margins in, majority votes through), so the whole composition —
-    * NB training included — replays exactly. Docs without an embedding
-    * row keep their seed verdict (no edges reach them): the honest
-    * semantics when the embedded slice lags the corpus. Returns
-    * (id, lbl, seed, __mfx). */
-  /** The NB seed table, built once per (JVM, sfDir) into scratch
-    * parquet ([[graft.plans.Scratch]] — r20; the r19 lazy checkpoint
-    * died under the bench's per-rep unpersist) and shared by BOTH
-    * quality-prop bindings (verdict + meter) — the NB train+score
-    * pipeline runs once, not per binding. The NB lineage (tokenize →
-    * score join → margin agg) is referenced by every vote round plus
-    * the final margin join, so materializing it once is what keeps the
-    * loop |E|-bounded. */
-  private def qualityNodes(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"qualitynodes|$d") {
-      val docs = Tables.documents(s, d)
-      val (llr, scalars) = Classify.nbModel(
-        docs.filter(Classify.isTrain(col("doc_id"))),
-        col("text"), col("lang") === "en")
-      val scored = Classify.nbScoreRaw(docs, col("doc_id"), col("text"),
-        llr, scalars)
-      scored.select(col("doc_id").as("id"),
-        when(abs(col("__mfx")) >= QualitySeedMfx,
-          when(col("__mfx") > 0L, 1).otherwise(0)).as("seed"),
-        col("__mfx"))
-    }
-
-  private def qualityPropLabels(s: SparkSession, d: String): DataFrame = {
-    val nodes = qualityNodes(s, d)
-    val e = knnEdges(s, d)
-    val und = e.unionByName(
-      e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    labelPropagation(nodes.select("id", "seed"), und, iters = Iters)
-      .join(nodes, "id") // seed + __mfx both ride the checkpointed table
-  }
-
-  /** Per-doc propagated quality verdict (1 = en-like by the NB gate's
-    * own confident neighbors), null where neither confidence nor any
-    * labeled neighbor ever reached the doc. */
-  def qualityPropQ(s: SparkSession, d: String): DataFrame =
-    qualityPropLabels(s, d)
-      .select(col("id").as("doc_id"), col("lbl").as("quality"),
-        col("seed").isNotNull.as("is_seed"))
-      .orderBy("doc_id")
-
-  /** Meter: on non-seed docs that received a propagated label, how
-    * often the graph's verdict agrees with the NB margin's own
-    * (low-confidence) sign — high agreement says the graph spreads the
-    * classifier's signal rather than fighting it. */
-  def qualityPropAccQ(s: SparkSession, d: String): DataFrame =
-    qualityPropLabels(s, d)
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("seed").isNotNull, 1L).otherwise(0L)).as("n_seed"),
-        sum(when(col("seed").isNull && col("lbl").isNotNull, 1L)
-          .otherwise(0L)).as("n_prop"),
-        sum(when(col("seed").isNull &&
-            col("lbl") === when(col("__mfx") > 0L, 1).otherwise(0), 1L)
-          .otherwise(0L)).as("n_agree"))
-      .select(col("n_docs"), col("n_seed"), col("n_prop"), col("n_agree"),
-        round(col("n_agree").cast("double") / col("n_prop"), 6)
-          .as("agree_rate"))
-
-  /** (vec_id, component, comp_size) over any node/edge pair — shared by
-    * the in-plan and tombstoned component queries. */
-  private def componentsWithSizes(nodes: DataFrame,
-      edges: DataFrame): DataFrame = {
-    val comp = connectedComponents(nodes, edges)
-    val sizes = comp.groupBy("component").agg(count(lit(1)).as("comp_size"))
-    comp.join(sizes, "component")
-      .select(col("id").as("vec_id"), col("component"), col("comp_size"))
-  }
-
-  /** Connected components of the kNN graph's undirected closure:
-    * (vec_id, component, comp_size), component = min member id. The
-    * corpus-fragmentation map the graph family reads before trusting
-    * any propagation result — PageRank mass, labels and beam walks
-    * cannot cross component boundaries, so a fragmented graph means
-    * per-component signals, not corpus-level ones. (The same primitive
-    * clusters transitive near-dups — [[Dedup.dupClusters]] — here it
-    * runs on the similarity graph itself.) */
-  def componentsQ(s: SparkSession, d: String): DataFrame =
-    componentsWithSizes(
-        Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        knnEdges(s, d))
-      .orderBy("vec_id")
-
-  /** The fragmentation profile: component size → how many components.
-    * One row per distinct size — the honest summary of how connected
-    * the corpus graph actually is (a healthy blocked-kNN corpus reads
-    * few large components; a long tail of small ones flags isolated
-    * slices no propagation signal will ever reach). */
-  def componentsHistQ(s: SparkSession, d: String): DataFrame =
-    connectedComponents(
-        Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        knnEdges(s, d))
-      .groupBy("component").agg(count(lit(1)).as("comp_size"))
-      .groupBy("comp_size").agg(count(lit(1)).as("n_components"))
-      .orderBy("comp_size")
-
-  /** Takedown-aware components — [[componentsQ]] over the TOMBSTONED
-    * at-rest layout ([[Retrieval.graphDelIdxDir]], the store
-    * `graph_pagerank_del` refreshes from): recalled docs leave the node
-    * set and neither direction of their edges connects, so a component
-    * whose only bridge was a deleted doc honestly SPLITS — the
-    * structural face of a takedown (`graph_pagerank_del` shows the
-    * mass face). Same Tombstones reads as every index family. */
-  /** [[componentsQ]] over the PRODUCTION graph — the fragmentation
-    * profile refreshed from the stored (src, dst) rows alone, no
-    * blocked-kNN build per reading (the structural face of the clean
-    * at-rest serving story; its del and append twins already read
-    * their layouts). */
-  def componentsRefinedQ(s: SparkSession, d: String): DataFrame =
-    componentsWithSizes(
-        Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        storedEdges(s, d))
-      .orderBy("vec_id")
-
-  def componentsDelQ(s: SparkSession, d: String): DataFrame = {
-    val (live, edges) = delLayoutLive(s, d)
-    componentsWithSizes(live, edges).orderBy("vec_id")
-  }
-
-  /** Components over the INCREMENTALLY MAINTAINED layout
-    * ([[Retrieval.graphAppendDir]] — the store `graph_pagerank_append`
-    * ranks from): the appended nodes join their components through the
-    * beam-searched forward+reverse links written at insert time, with
-    * no NN-Descent rebuild — the structural face of the add half of the
-    * add-vs-train split (`graph_components_del` is the delete half). An
-    * insert whose links all land in one component joins it; links into
-    * two components MERGE them — exactly what reverse edges are for. */
-  def componentsAppendQ(s: SparkSession, d: String): DataFrame =
-    componentsWithSizes(
-        Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        s.read.parquet(s"${Retrieval.graphAppendDir(s, d)}/idx/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")))
-      .orderBy("vec_id")
-
-  /** The INCREMENTALLY MAINTAINED layout's stored edge list — what
-    * every `_append` structure arm reads (base build + per-insert
-    * beam-searched forward/reverse links, no rebuild). */
-  private def appendEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${Retrieval.graphAppendDir(s, d)}/idx/edges")
-      .select(col("__vid").as("src"), col("nbr_id").as("dst"))
-
-  /** [[kcoreQ]] over the INCREMENTALLY MAINTAINED layout: an inserted
-    * doc joins the core iff its insert-time links give it (and keep
-    * its neighbors) ≥ k within-core support — the cohesion face of the
-    * add half of the add-vs-train split. Same convergence guard. */
-  def kcoreAppendQ(s: SparkSession, d: String): DataFrame =
-    kcoreConverged(
-        kcorePeel(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-          appendEdges(s, d), k = CoreK, rounds = PeelRounds),
-        k = CoreK, rounds = PeelRounds)
-      .select(col("id").as("vec_id"), col("in_core"), col("core_deg"))
-      .orderBy("vec_id")
-
-  /** [[harmonicQ]] over the INCREMENTALLY MAINTAINED layout: inserted
-    * docs enter every ring they now reach, and their insert-time links
-    * shorten survivors' distances — reach refreshed with no rebuild. */
-  def harmonicAppendQ(s: SparkSession, d: String): DataFrame =
-    harmonic3(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        appendEdges(s, d))
-      .select(col("id").as("vec_id"), col("n1"), col("n2"), col("n3"),
-        col("harmonic"))
-      .orderBy("vec_id")
-
-  /** [[communitiesQ]] over the INCREMENTALLY MAINTAINED layout: an
-    * inserted doc adopts (or seeds) a community through its insert-time
-    * links — detection refreshed over the appended edge state. */
-  def communitiesAppendQ(s: SparkSession, d: String): DataFrame =
-    communitiesOverLayout(s,
-        Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        s"${Retrieval.graphAppendDir(s, d)}/idx", Iters)
-      .select(col("id").as("vec_id"), col("lbl").as("community"),
-        col("comm_size"))
-      .orderBy("vec_id")
-
   private val HarmonicHops = 3 // the published reach horizon
 
-  /** Bounded-hop harmonic centrality over the undirected closure:
-    * (vec_id, n1, n2, n3, harmonic) with n_h = |{v : dist(u,v) = h}|
+  /** Bounded-hop harmonic centrality over the undirected closure of
+    * `edges`: (id, n1, n2, n3, harmonic) for every node of `nodes` (an
+    * isolated node reads all zero), with n_h = |{v : dist(u,v) = h}|
     * and harmonic = Σ_h n_h / h — the truncated form of the
     * harmonic-centrality signal web-corpus curation filters on
     * (CommonCrawl publishes per-host harmonic centrality; Boldi &
@@ -1284,36 +677,23 @@ object GraphAnalytics {
     * Scale: reach sets grow to N · min(k·(k-1)^(h-1)+…, N) rows —
     * BOUNDED per node by the out-degree cap (k = 3 ⇒ ≤ ~40 members at
     * h = 3), so the three expansion joins and the distinct are all
-    * ~linear in N at fixed k. (Unbounded-h centrality at web scale
-    * wants the HyperBall register-sketch formulation — out of scope
-    * while every served graph here is degree-capped.) The harmonic sum
+    * ~linear in N at fixed k ([[harmonicSketch]] is the form whose
+    * state stays flat at any degree). The harmonic sum
     * is THREE terms in a fixed order (n1 + n2/2 + n3/3, each a single
     * IEEE-754 op on integer-valued doubles), so no ordered-fold
     * machinery is needed for bit parity. */
-  def harmonicQ(s: SparkSession, d: String): DataFrame =
-    harmonic3(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        knnEdges(s, d))
-      .select(col("id").as("vec_id"), col("n1"), col("n2"), col("n3"),
-        col("harmonic"))
-      .orderBy("vec_id")
-
-  /** [[harmonicQ]]'s core over any (id) / (src, dst) pair — the
-    * undirected closure is taken here. Returns (id, n1, n2, n3,
-    * harmonic) for every node (an isolated node reads all-zero). */
   def harmonic3(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val ids = nodes.select(col("id").cast("long").as("id"))
     val e0 = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    // Cuts coalesced to data-proportional counts (r21, [[cutParts]]).
-    // The per-hop reach set grows toward |V|·reach(h), so each hop's cut
+    // Sized cuts ([[cutParts]]). The per-hop reach set grows toward |V|·reach(h), so each hop's cut
     // is sized from ITS OWN plan estimate (floored at the input-derived
     // counts — an unknown estimate must never shrink a big frame).
     val nV = cutParts(nodes)
     val nE = cutParts(edges)
-    val und = sizedCut(e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"))).distinct(), nE)
+    val und = sizedCut(undirected(e0), nE)
     // cumulative reach R_h = R_{h-1} ∪ (R_{h-1} ⋈ edges), distinct;
     // sizes are cumulative counts INCLUDING self (dist 0). Each R_h is
     // referenced three times (union side, expansion side, its own size
@@ -1378,13 +758,11 @@ object GraphAnalytics {
         col("dst").cast("long").as("dst"))
       .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-    // Cuts coalesced to data-proportional counts (r21, [[cutParts]]):
-    // und ≤ 2|E|; each hop's register table is exactly one row per node
+    // Sized cuts ([[cutParts]]): und ≤ 2|E|; each hop's register table is exactly one row per node
     // (≤ k doubles each), so nV bounds it within the constant k.
     val nV = cutParts(nodes)
     val nE = cutParts(edges)
-    val und = sizedCut(e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"))).distinct(), nE)
+    val und = sizedCut(undirected(e0), nE)
     val bk = graft.functions.BottomKAgg.bottomKDistinct(k)
     // register state as exploded (id, u) pairs — ≤ k rows per node
     var pairs = ids.select(col("id"),
@@ -1410,51 +788,6 @@ object GraphAnalytics {
         round(col("__e3") - col("__e2"), 6).as("n3_est"),
         round((col("__e1") - lit(1.0)) + (col("__e2") - col("__e1")) / lit(2.0)
           + (col("__e3") - col("__e2")) / lit(3.0), 6).as("harmonic_est"))
-  }
-
-  /** [[harmonicQ]]'s sketch twin over the same kNN graph — the same
-    * rings through [[SketchK]]-wide registers, served beside the exact
-    * row so the two relations diff directly (nodes with reach < k match
-    * exactly; saturated nodes carry the self-graded estimator). */
-  def harmonicSketchQ(s: SparkSession, d: String): DataFrame =
-    harmonicSketch(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        knnEdges(s, d), k = SketchK)
-      .select(col("id").as("vec_id"), col("n1_est"), col("n2_est"),
-        col("n3_est"), col("harmonic_est"))
-      .orderBy("vec_id")
-
-  /** [[harmonicQ]] over the PRODUCTION graph — the exact three-ring
-    * reach read off the stored (src, dst) rows, no blocked-kNN build
-    * per reading. */
-  def harmonicRefinedQ(s: SparkSession, d: String): DataFrame =
-    harmonic3(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        storedEdges(s, d))
-      .select(col("id").as("vec_id"), col("n1"), col("n2"), col("n3"),
-        col("harmonic"))
-      .orderBy("vec_id")
-
-  /** [[harmonicSketchQ]] over the PRODUCTION graph — the operator that
-    * exists FOR 100 TB (flat N·k per-hop state where the exact form's
-    * reach sets explode at production degree caps) now serves from the
-    * 100 TB artifact: registers merged along the STORED edges, same
-    * estimator, same bit-exact md5 registers. */
-  def harmonicSketchRefinedQ(s: SparkSession, d: String): DataFrame =
-    harmonicSketch(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        storedEdges(s, d), k = SketchK)
-      .select(col("id").as("vec_id"), col("n1_est"), col("n2_est"),
-        col("n3_est"), col("harmonic_est"))
-      .orderBy("vec_id")
-
-  /** Takedown-aware sketch centrality — [[harmonicSketchRefinedQ]]
-    * with tombstones honored: recalled ids leave the node set, their
-    * hashes leave every register they'd have seeded, and estimates
-    * shrink where reach ran through them. */
-  def harmonicSketchDelQ(s: SparkSession, d: String): DataFrame = {
-    val (live, e0) = delLayoutLive(s, d)
-    harmonicSketch(live, e0, k = SketchK)
-      .select(col("id").as("vec_id"), col("n1_est"), col("n2_est"),
-        col("n3_est"), col("harmonic_est"))
-      .orderBy("vec_id")
   }
 
   /** Synchronous label-propagation COMMUNITY detection (Raghavan et al.
@@ -1483,7 +816,7 @@ object GraphAnalytics {
       iters: Int): DataFrame = {
     require(iters >= 1, s"communityLabelProp: iters >= 1, got $iters")
     val base = nodes.select(col("id").cast("long").as("id"))
-    // Cuts coalesced to data-proportional counts (r21, [[cutParts]]).
+    // Sized cuts ([[cutParts]]).
     val nV = cutParts(nodes)
     val nE = cutParts(edges)
     val e = sizedCut(edges.select(col("src").cast("long").as("src"),
@@ -1526,12 +859,10 @@ object GraphAnalytics {
     val e0 = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val und = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    val und = undirected(e0)
       .join(cm.select(col("id").as("src"), col("__cm").as("__ca")), "src")
       .join(cm.select(col("id").as("dst"), col("__cm").as("__cb")), "dst")
-      // referenced 3× (m2, per-community, Σ); sized cut (r21,
-      // [[cutParts]] — ≤ 2|E| rows)
+      // referenced 3× (m2, per-community, Σ): a sized cut (≤ 2|E| rows)
       .coalesce(cutParts(edges)).localCheckpoint(eager = false)
     // loud Long-overflow guard: in_c·m2 and deg_c² are ≤ m2², so m2 <
     // 3·10⁹ keeps every numerator term under 2⁶³ with headroom for the
@@ -1582,8 +913,7 @@ object GraphAnalytics {
     val e0 = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val und = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    val und = undirected(e0)
     val deg = und.groupBy(col("src").as("v")).agg(count(lit(1)).as("dg"))
     und
       .join(deg.select(col("v").as("src"), col("dg").as("__x")), "src")
@@ -1614,280 +944,8 @@ object GraphAnalytics {
           6).as("assortativity"))
   }
 
-  /** [[assortativityOf]] over the kNN graph — one exact row. */
-  def assortativityQ(s: SparkSession, d: String): DataFrame =
-    assortativityOf(knnEdges(s, d))
-
-  /** [[assortativityQ]] over the PRODUCTION graph — the degree-mixing
-    * dial refreshed from the stored (src, dst) rows alone. */
-  def assortativityRefinedQ(s: SparkSession, d: String): DataFrame =
-    assortativityOf(storedEdges(s, d))
-
-  /** Takedown-aware degree mixing — [[assortativityQ]] over the
-    * TOMBSTONED layout: a recalled hub's stubs leave both sides of
-    * every degree product, so the mixing verdict regrades over the
-    * surviving graph (a takedown that removes the hub-hub redundancy
-    * core flips an assortative read back toward the normal
-    * disassortative kNN shape). */
-  def assortativityDelQ(s: SparkSession, d: String): DataFrame = {
-    val (_, e0) = delLayoutLive(s, d)
-    assortativityOf(e0)
-  }
-
-  /** The LPA label tables both community faces and their modularity
-    * meters consume, built ONCE per (JVM, sfDir) into scratch parquet
-    * ([[graft.plans.Scratch]] — r20; r19's session-keyed lazy
-    * checkpoints died under the bench's per-rep unpersist, see the
-    * Scratch doc): the partition and its grade are two reads of ONE
-    * detection run (exactly how production would grade a partition it
-    * just computed), so the [[Iters]] vote rounds don't re-run per
-    * binding. Values are unchanged — the stored table IS the same
-    * deterministic derivation. */
-  private def communityLabels(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"lpaclean|$d") {
-      val e = knnEdges(s, d)
-      val und = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      communityLabelProp(
-        Tables.embeddings(s, d).select(col("vec_id").as("id")), und, Iters)
-    }
-
-  /** Cached takedown-layout LPA labels (id, lbl) + the live edge set
-    * they were detected on (the modularity meter grades against it). */
-  private def delCommunityLabels(s: SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val labels = graft.plans.Scratch.frame(s, s"lpadel|$d") {
-      val (live, e0) = delLayoutLive(s, d)
-      val und = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      communityLabelProp(live, und, Iters)
-    }
-    val (_, e0) = delLayoutLive(s, d)
-    (labels, e0)
-  }
-
-  /** Cached clean-layout LPA labels (id, lbl) + the stored edge set —
-    * [[delCommunityLabels]]'s clean twin (the stats serving store's
-    * derivation, exposed as named queries). */
-  private def refinedCommunityLabels(s: SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val labels = graft.plans.Scratch.frame(s, s"lparefined|$d") {
-      val e0 = storedEdges(s, d)
-      val und = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      communityLabelProp(
-        Tables.embeddings(s, d).select(col("vec_id").as("id")), und, Iters)
-    }
-    (labels, storedEdges(s, d))
-  }
-
-  /** The kNN graph's community partition — [[communityLabelProp]] over
-    * the undirected closure, [[Iters]] rounds: (vec_id, community,
-    * comm_size). Where `graph_components` answers "can signals reach",
-    * this answers "where do they pool". */
-  def communitiesQ(s: SparkSession, d: String): DataFrame = {
-    val cm = communityLabels(s, d)
-    cm.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
-      .join(cm, "lbl")
-      .select(col("id").as("vec_id"), col("lbl").as("community"),
-        col("comm_size"))
-      .orderBy("vec_id")
-  }
-
-  /** [[communitiesQ]] over the PRODUCTION graph — detection refreshed
-    * from the stored (src, dst) rows (the derivation the centrality
-    * serving store reads, exposed as a named oracle-checked query). */
-  def communitiesRefinedQ(s: SparkSession, d: String): DataFrame = {
-    val (cm, _) = refinedCommunityLabels(s, d)
-    cm.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
-      .join(cm, "lbl")
-      .select(col("id").as("vec_id"), col("lbl").as("community"),
-        col("comm_size"))
-      .orderBy("vec_id")
-  }
-
-  /** One exact row grading [[communitiesQ]]'s partition:
-    * [[modularityOf]] over the same graph — the standard "did LPA find
-    * real structure" meter (Q ≈ 0 = no better than random mixing). */
-  def modularityQ(s: SparkSession, d: String): DataFrame =
-    modularityOf(communityLabels(s, d), knnEdges(s, d))
-
-  /** [[modularityQ]] grading [[communitiesRefinedQ]]'s partition over
-    * the same stored edges — did detection over the at-rest layout
-    * keep real structure. */
-  def modularityRefinedQ(s: SparkSession, d: String): DataFrame = {
-    val (labels, e0) = refinedCommunityLabels(s, d)
-    modularityOf(labels, e0)
-  }
-
-  /** The takedown partition graded — [[modularityOf]] over
-    * [[communitiesDelQ]]'s surviving graph and labels: did the
-    * re-coarsened partition keep real structure after the recall, or
-    * did the deletions break the communities' cohesion (Q collapsing
-    * toward 0 is the signal to re-run detection at more rounds). */
-  def modularityDelQ(s: SparkSession, d: String): DataFrame = {
-    val (labels, e0) = delCommunityLabels(s, d)
-    modularityOf(labels, e0)
-  }
-
-  /** Takedown-aware communities — [[communitiesQ]]'s semantics over the
-    * TOMBSTONED production layout ([[Retrieval.graphDelIdxDir]], the
-    * same store `graph_pagerank_del` / `graph_label_prop_del` serve):
-    * recalled docs leave the node set AND their past votes stop
-    * conducting, so the partition re-coarsens without them — a
-    * community whose cohesion ran through a deleted doc honestly SPLITS
-    * (label-prop labels move non-locally; GraphAnalyticsSpec pins a
-    * split on a synthetic layout). Completes the structure family's
-    * takedown symmetry: components and label-prop had del arms,
-    * communities now does too. The oracle replays the refined pyramid
-    * minus the ids, then the same unrolled unclamped-LPA rounds. */
-  def communitiesDelQ(s: SparkSession, d: String): DataFrame = {
-    val (cm, _) = delCommunityLabels(s, d)
-    cm.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
-      .join(cm, "lbl")
-      .select(col("id").as("vec_id"), col("lbl").as("community"),
-        col("comm_size"))
-      .orderBy("vec_id")
-  }
-
-  /** Unclamped-LPA communities over a (possibly tombstoned) at-rest
-    * graph layout: live nodes only, neither direction of a deleted
-    * node's edges conducts a vote — the [[labelPropOverLayout]]
-    * discipline for the community face. Returns (id, lbl, comm_size). */
-  def communitiesOverLayout(s: SparkSession, nodes: DataFrame,
-      idxDir: String, iters: Int): DataFrame = {
-    val (live, e0) = layoutLive(s, nodes, idxDir)
-    val und = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    val cm = communityLabelProp(live, und, iters)
-    cm.groupBy("lbl").agg(count(lit(1)).as("comm_size"))
-      .join(cm, "lbl")
-      .select(col("id"), col("lbl"), col("comm_size"))
-  }
-
-  /** Live rows of the per-JVM TOMBSTONED fixture layout
-    * ([[Retrieval.graphDelIdxDir]]): tombstone-filtered (id, label)
-    * node rows and (src, dst, cos) edge rows, materialized ONCE per
-    * (JVM, sfDir) into scratch parquet ([[graft.plans.Scratch]], r20).
-    * The fixture is immutable after its one-time build (the tombstone
-    * lands inside the [[Retrieval.graphDelIdxDir]] cache builder and
-    * nothing writes there afterwards), so every `_del` arm re-running
-    * the tombstone-distinct + anti-joins + 32-bucket-dir layout scan
-    * per rep was pure repetition. Values unchanged — the stored rows
-    * ARE the anti-joins' output. The GENERIC [[layoutLive]] below stays
-    * un-memoized: specs mutate tombstones on their own layouts between
-    * calls and must see fresh reads. */
-  private def delLiveEmb(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"dellivenodes|$d") {
-      import graft.sources.Tombstones
-      Tombstones.dropDeleted(
-        Tables.embeddings(s, d)
-          .select(col("vec_id").cast("long").as("id"), col("label")),
-        col("id"), s"${Retrieval.graphDelIdxDir(s, d)}/idx")
-    }
-
-  private def delLiveEdgesCos(s: SparkSession, d: String): DataFrame =
-    graft.plans.Scratch.frame(s, s"delliveedges|$d") {
-      import graft.sources.Tombstones
-      val dir = s"${Retrieval.graphDelIdxDir(s, d)}/idx"
-      Tombstones.dropDeleted(
-        Tombstones.dropDeleted(
-          s.read.parquet(s"$dir/edges")
-            .select(col("__vid").as("src"), col("nbr_id").as("dst"),
-              col("cos")),
-          col("src"), dir),
-        col("dst"), dir)
-    }
-
-  /** [[layoutLive]] over the per-JVM del fixture — the memoized (live
-    * nodes, live edges) pair every `_del` named query reads. */
-  private def delLayoutLive(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    (delLiveEmb(s, d).select("id"), delLiveEdgesCos(s, d).select("src", "dst"))
-
-  /** (live nodes, live stored edges) of a (possibly tombstoned) at-rest
-    * graph layout — the shared Tombstones discipline of every `_del`
-    * query: recalled ids leave the node set and NEITHER direction of
-    * their edges conducts. */
-  private def layoutLive(s: SparkSession, nodes: DataFrame,
-      idxDir: String): (DataFrame, DataFrame) = {
-    import graft.sources.Tombstones
-    val live = Tombstones.dropDeleted(
-      nodes.select(col("id").cast("long").as("id")), col("id"), idxDir)
-    val e0 = Tombstones.dropDeleted(
-      Tombstones.dropDeleted(
-        s.read.parquet(s"$idxDir/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")),
-        col("src"), idxDir),
-      col("dst"), idxDir)
-    (live, e0)
-  }
-
-  /** Takedown-aware k-core — [[kcoreQ]]'s semantics over the TOMBSTONED
-    * layout: a recalled doc stops corroborating its neighbors, so a
-    * node whose ≥ k support ran through it honestly peels out of the
-    * core (the cohesion face of a takedown, next to
-    * [[componentsDelQ]]'s connectivity face and [[communitiesDelQ]]'s
-    * density face). Same convergence guard as the clean query. */
-  def kcoreDelQ(s: SparkSession, d: String): DataFrame = {
-    val (live, e0) = delLayoutLive(s, d)
-    kcoreConverged(kcorePeel(live, e0, k = CoreK, rounds = PeelRounds),
-        k = CoreK, rounds = PeelRounds)
-      .select(col("id").as("vec_id"), col("in_core"), col("core_deg"))
-      .orderBy("vec_id")
-  }
-
-  /** Takedown-aware harmonic centrality — [[harmonicQ]] over the
-    * TOMBSTONED layout: distances through a recalled doc honestly grow
-    * (a ring-2 neighbor reached via the deleted bridge leaves the
-    * ring), so the centrality signal stops counting reach that no
-    * longer exists. */
-  def harmonicDelQ(s: SparkSession, d: String): DataFrame = {
-    val (live, e0) = delLayoutLive(s, d)
-    harmonic3(live, e0)
-      .select(col("id").as("vec_id"), col("n1"), col("n2"), col("n3"),
-        col("harmonic"))
-      .orderBy("vec_id")
-  }
-
   private val CoreK = 2 // the published core order of graph_kcore
   private val PeelRounds = 4 // fixed peel count (converged at test SFs)
-
-  /** [[CoreK]]-core membership after [[PeelRounds]] peel rounds:
-    * (vec_id, in_core, core_deg). The cohesion partition of the corpus
-    * graph — peripheral docs (degree-1 chains, leaf attachments) peel
-    * off, the mutually-embedded core survives; curation reads the core
-    * as the "well-supported" slice (every member has ≥ k surviving
-    * neighbors to corroborate its graph signals) and the periphery as
-    * the slice whose kNN evidence is thin.
-    *
-    * The "relation IS the 2-core" claim is GUARDED in-plan, not just
-    * spec-pinned at the test SFs: round [[PeelRounds]]+1 peels nothing
-    * iff every survivor's within-core degree is already ≥ k, which is
-    * exactly a predicate on the OUTPUT columns (a survivor with
-    * core_deg null or < k would peel next round) — so the convergence
-    * assert costs zero extra joins, and a bigger corpus whose peel
-    * cascade outruns the fixed rounds fails LOUDLY instead of serving
-    * an under-peeled set as the core. */
-  def kcoreQ(s: SparkSession, d: String): DataFrame =
-    kcoreConverged(
-        kcorePeel(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-          knnEdges(s, d), k = CoreK, rounds = PeelRounds),
-        k = CoreK, rounds = PeelRounds)
-      .select(col("id").as("vec_id"), col("in_core"), col("core_deg"))
-      .orderBy("vec_id")
-
-  /** [[kcoreQ]] over the PRODUCTION graph — the core/periphery
-    * partition refreshed from the stored (src, dst) rows alone, no
-    * blocked-kNN build per reading (its del twin already read the
-    * layout; this closes the clean serving face). Same convergence
-    * guard. */
-  def kcoreRefinedQ(s: SparkSession, d: String): DataFrame =
-    kcoreConverged(
-        kcorePeel(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-          storedEdges(s, d), k = CoreK, rounds = PeelRounds),
-        k = CoreK, rounds = PeelRounds)
-      .select(col("id").as("vec_id"), col("in_core"), col("core_deg"))
-      .orderBy("vec_id")
 
   /** In-plan convergence guard for a [[kcorePeel]] relation: one more
     * round peels nothing iff every survivor's within-core degree is
@@ -1903,42 +961,14 @@ object GraphAnalytics {
         "still has within-core degree < k); raise the round count for " +
         "this corpus")).isNull)
 
-  /** Takedown blast radius: every doc within 2 undirected hops of a
-    * recalled id on the PRODUCTION graph layout ([[Retrieval.graphIdxDir]]
-    * — the same stored edge list `graph_pagerank_refined` serves), with
-    * its hop distance. This is the takedown job's re-check working set,
-    * scoped BEFORE tombstoning: hop-1 docs hold neighbor lists that
-    * cite the recalled doc (their stored rows need repair candidates),
-    * hop-2 docs are where those repair candidates come from (the
-    * NN-of-NN pool NN-Descent draws from). Two |E|-bounded joins from a
-    * 3-row broadcast seed — never a corpus scan — and integer end to
-    * end. */
-  def blastRadiusQ(s: SparkSession, d: String): DataFrame = {
-    val e0 = s.read.parquet(s"${Retrieval.graphIdxDir(s, d)}/idx/edges")
-      .select(col("__vid").as("src"), col("nbr_id").as("dst"))
-    import s.implicits._
-    // hop 0 is the recalled ids RESTRICTED to the corpus (the oracle's
-    // b0 over embeddings): a recall-list id absent from the corpus is
-    // not a document to re-check, and emitting it unconditionally would
-    // silently diverge from the replay. Semi-join keeps the seed ≤
-    // |recall list| rows — still a broadcast.
-    val h0 = Retrieval.GraphDeletedIds.toDF("id")
-      .join(Tables.embeddings(s, d).select(col("vec_id").as("id")),
-        Seq("id"), "left_semi")
-    blastRadiusOf(e0, h0)
-      .select(col("id").as("vec_id"), col("hops"))
-      .orderBy("vec_id")
-  }
-
-  /** [[blastRadiusQ]]'s core over any (src, dst) edge list and seed set
-    * `h0` = (id): (id, hops) for every node within 2 undirected hops of
-    * a seed (the undirected closure is taken here). Two |E|-bounded
-    * joins from a broadcast seed — never a corpus scan. */
+  /** Blast radius over any (src, dst) edge list and seed set `h0` =
+    * (id): (id, hops) for every node within 2 undirected hops of a seed
+    * (the undirected closure is taken here). Two |E|-bounded joins from
+    * a broadcast seed — never a corpus scan — and integer end to end. */
   def blastRadiusOf(edges: DataFrame, h0: DataFrame): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val und = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    val und = undirected(e0)
     val h1 = und.join(broadcast(h0.select(col("id").as("src"))), "src")
       .select(col("dst").as("id")).distinct()
     val h2 = und.join(broadcast(h1.select(col("id").as("src"))), "src")
@@ -1950,7 +980,7 @@ object GraphAnalytics {
   }
 
   /** The cohesion/reach half of the per-doc serving row
-    * ([[Retrieval.graphStatsDirFor]]'s r19 widening): k-core membership
+    * ([[Retrieval.graphStatsDirFor]]): k-core membership
     * (the published [[CoreK]]/[[PeelRounds]] peel, convergence-guarded),
     * Watts-Strogatz local clustering, and the KMV harmonic-reach
     * estimate, all over the SAME live (nodes, edges) the store's
@@ -1981,75 +1011,313 @@ object GraphAnalytics {
         col("local_coeff"), col("harmonic_est"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_pagerank" -> pageRankQ,
-    "graph_pagerank_w" -> pageRankWQ,
-    "graph_pagerank_refined" -> pageRankRefinedQ,
-    "graph_pagerank_w_refined" -> pageRankWRefinedQ,
-    "graph_pagerank_del" -> pageRankDelQ,
-    "graph_pagerank_append" -> pageRankAppendQ,
-    "graph_ppr" -> pprQ,
-    "graph_ppr_refined" -> pprRefinedQ,
-    "graph_ppr_del" -> pprDelQ,
-    "graph_ppr_expand" -> pprExpandQ,
-    "graph_label_prop" -> labelPropQ,
-    "graph_label_prop_refined" -> labelPropRefinedQ,
-    "graph_label_prop_w" -> labelPropWQ,
-    "graph_label_prop_w_refined" -> labelPropWRefinedQ,
-    "graph_label_prop_w_del" -> labelPropWDelQ,
-    "graph_label_prop_del" -> labelPropDelQ,
-    "graph_label_prop_acc" -> labelPropAccQ,
-    "graph_quality_prop" -> qualityPropQ,
-    "graph_quality_prop_acc" -> qualityPropAccQ,
-    "graph_density" -> densityQ,
-    "graph_density_refined" -> densityRefinedQ,
-    "graph_density_del" -> densityDelQ,
-    "graph_clustering" -> clusteringQ,
-    "graph_clustering_refined" -> clusteringRefinedQ,
-    "graph_clustering_del" -> clusteringDelQ,
-    "graph_clustering_local" -> clusteringLocalQ,
-    "graph_clustering_local_refined" -> clusteringLocalRefinedQ,
-    "graph_clustering_local_del" -> clusteringLocalDelQ,
-    "graph_components" -> componentsQ,
-    "graph_components_refined" -> componentsRefinedQ,
-    "graph_components_hist" -> componentsHistQ,
-    "graph_components_del" -> componentsDelQ,
-    "graph_components_append" -> componentsAppendQ,
-    "graph_kcore_append" -> kcoreAppendQ,
-    "graph_harmonic_append" -> harmonicAppendQ,
-    "graph_communities_append" -> communitiesAppendQ,
-    "graph_kcore" -> kcoreQ,
-    "graph_kcore_refined" -> kcoreRefinedQ,
-    "graph_kcore_del" -> kcoreDelQ,
-    "graph_harmonic" -> harmonicQ,
-    "graph_harmonic_refined" -> harmonicRefinedQ,
-    "graph_harmonic_del" -> harmonicDelQ,
-    "graph_harmonic_sketch" -> harmonicSketchQ,
-    "graph_harmonic_sketch_refined" -> harmonicSketchRefinedQ,
-    "graph_harmonic_sketch_del" -> harmonicSketchDelQ,
-    "graph_assortativity" -> assortativityQ,
-    "graph_assortativity_refined" -> assortativityRefinedQ,
-    "graph_assortativity_del" -> assortativityDelQ,
-    "graph_communities" -> communitiesQ,
-    "graph_communities_refined" -> communitiesRefinedQ,
-    "graph_communities_del" -> communitiesDelQ,
-    "graph_modularity" -> modularityQ,
-    "graph_modularity_refined" -> modularityRefinedQ,
-    "graph_modularity_del" -> modularityDelQ,
-    "graph_blast_radius" -> blastRadiusQ,
-    "graph_stats_store" -> graphStatsStoreQ,
+  // ---------------------------------------------------------------- //
+  // The named queries: edge source × dial (see the object doc).       //
+  // ---------------------------------------------------------------- //
+
+  private[operators] val Iters = 3
+  private val SeedMod = 5 // vec_id % 5 == 0 → seed (20% trusted labels)
+  private val PprSeedLabel = 3 // the "curated sample": all label-3 docs
+
+  /** A graph as the dials read it: live `nodes (id, label)` and live
+    * `edges (src, dst[, cos])`. `labelsMemo` is the scratch key its
+    * community labels are built once under; None detects them per
+    * query. */
+  private[operators] case class GraphSource(nodes: DataFrame,
+      edges: DataFrame, labelsMemo: Option[String] = None) {
+    def ids: DataFrame = nodes.select("id")
+    def pairs: DataFrame = edges.select("src", "dst")
+  }
+
+  /** The tombstone-aware read of an at-rest graph layout at `idxDir`
+    * ([[Search.writeGraphIndex]]): `nodes` minus the tombstoned ids,
+    * and the stored edges (src, dst[, cos]) minus every edge with a
+    * tombstoned endpoint, so a recalled doc leaves the node set and
+    * neither direction of its edges conducts. A layout with no
+    * tombstones reads as stored. */
+  private[operators] def layout(s: SparkSession, nodes: DataFrame,
+      idxDir: String): GraphSource = {
+    import graft.sources.Tombstones.dropDeleted
+    val stored = s.read.parquet(s"$idxDir/edges")
+    val edges = stored.select(
+      Seq(col("__vid").as("src"), col("nbr_id").as("dst")) ++
+        (if (stored.columns.contains("cos")) Seq(col("cos")) else Nil): _*)
+    GraphSource(dropDeleted(nodes, col("id"), idxDir),
+      dropDeleted(dropDeleted(edges, col("src"), idxDir), col("dst"), idxDir))
+  }
+
+  /** The undirected closure of `edges (src, dst, …)`: both directions
+    * of every edge, as a set. Columns past src/dst ride along. */
+  private[operators] def undirected(edges: DataFrame): DataFrame =
+    edges.unionByName(edges.select(col("dst").as("src") +: col("src").as("dst") +:
+      edges.columns.filterNot(Set("src", "dst")).map(col).toSeq: _*)).distinct()
+
+  /** The `knn_graph` edge set as (src, dst, cos), built once per
+    * (JVM, sfDir) into scratch parquet ([[graft.plans.Scratch]]): the
+    * one expensive in-plan derivation the family shares (kmeans
+    * assignment, cluster self-join, rank window). [[prIterate]] reads
+    * its edges once per round, so an unmemoized build would replay per
+    * reference. */
+  private[operators] def knnEdgesCos(s: SparkSession, d: String): DataFrame =
+    graft.plans.Scratch.frame(s, s"edgescos|$d") {
+      Search.knnGraph(Tables.embeddings(s, d), col("vec_id"), col("embedding"),
+          Retrieval.labelCentroids(s, d).select(col("label").as("cid"), col("c")),
+          k = 3)
+        .select(col("__vid").as("src"), col("nbr_id").as("dst"), col("cos"))
+    }
+
+  private def corpus(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id").as("id"), col("label"))
+
+  private def knn(s: SparkSession, d: String): GraphSource =
+    GraphSource(corpus(s, d), knnEdgesCos(s, d), Some(s"lpaclean|$d"))
+
+  private def refined(s: SparkSession, d: String): GraphSource =
+    layout(s, corpus(s, d), s"${Retrieval.graphIdxDir(s, d)}/idx")
+      .copy(labelsMemo = Some(s"lparefined|$d"))
+
+  private def append(s: SparkSession, d: String): GraphSource =
+    layout(s, corpus(s, d), s"${Retrieval.graphAppendDir(s, d)}/idx")
+
+  /** The del fixture's live rows, memoized: the layout is immutable
+    * after its one-time build, so the tombstone anti-joins run once per
+    * (JVM, sfDir), not per query. */
+  private def del(s: SparkSession, d: String): GraphSource = {
+    def live = layout(s, corpus(s, d), s"${Retrieval.graphDelIdxDir(s, d)}/idx")
+    GraphSource(graft.plans.Scratch.frame(s, s"dellivenodes|$d")(live.nodes),
+      graft.plans.Scratch.frame(s, s"delliveedges|$d")(live.edges),
+      Some(s"lpadel|$d"))
+  }
+
+  private val sources: Map[String, (SparkSession, String) => GraphSource] =
+    Map("knn" -> knn _, "refined" -> refined _, "append" -> append _,
+      "del" -> del _)
+
+  /** (vec_id, cols) per node, ordered by vec_id. */
+  private def perDoc(df: DataFrame, cols: Column*): DataFrame =
+    df.select(col("id").as("vec_id") +: cols: _*).orderBy("vec_id")
+
+  /** Unclamped-LPA community labels (id, lbl) of `g`, [[Iters]]
+    * rounds over its undirected closure; memoized under
+    * `g.labelsMemo` when it has one, so a partition and its modularity
+    * grade are two reads of one detection run. */
+  private def communityLabels(g: GraphSource): DataFrame = {
+    def detect = communityLabelProp(g.ids, undirected(g.pairs), Iters)
+    g.labelsMemo.fold(detect)(key =>
+      graft.plans.Scratch.frame(g.nodes.sparkSession, key)(detect))
+  }
+
+  /** (id, lbl, comm_size): [[communityLabels]] with each community's
+    * size. */
+  private[operators] def communitySizes(g: GraphSource): DataFrame = {
+    val cm = communityLabels(g)
+    cm.groupBy("lbl").agg(count(lit(1)).as("comm_size")).join(cm, "lbl")
+      .select(col("id"), col("lbl"), col("comm_size"))
+  }
+
+  /** PPR ranks from the label-[[PprSeedLabel]] seeds, with each node's
+    * seed flag. */
+  private def pprRanks(g: GraphSource): DataFrame = {
+    val nodes = g.nodes.select(col("id"), (col("label") === PprSeedLabel).as("seed"))
+    personalizedPageRank(nodes, g.pairs, iters = Iters)
+      .join(nodes.select(col("id"), col("seed").as("is_seed")), "id")
+  }
+
+  /** (id, seed): every [[SeedMod]]-th node keeps its true label. */
+  private def seeded(g: GraphSource): DataFrame =
+    g.nodes.select(col("id"), when(col("id") % SeedMod === 0, col("label")).as("seed"))
+
+  private def labelsOut(lbl: DataFrame): DataFrame =
+    perDoc(lbl, col("lbl").as("label"), (col("id") % SeedMod === 0).as("is_seed"))
+
+  private val Every = Seq("knn", "refined", "del", "append")
+  private val NoAppend = Seq("knn", "refined", "del")
+
+  /** The dial table: each dial's name, the sources it is offered on,
+    * and its one function from a source to the output relation. */
+  private val dials: Seq[(String, Seq[String], GraphSource => DataFrame)] = Seq(
+    ("pagerank", Every, g =>
+      perDoc(pageRank(g.ids, g.pairs, iters = Iters), round(col("pr"), 9).as("pr"))),
+    // out-mass ∝ the calibrated weight (cos+1)/2 ∈ (0, 1]
+    ("pagerank_w", Seq("knn", "refined"), g =>
+      perDoc(weightedPageRank(g.ids, g.edges.select(col("src"), col("dst"),
+          ((col("cos") + lit(1.0)) / lit(2.0)).as("w")), iters = Iters),
+        round(col("pr"), 9).as("pr"))),
+    ("ppr", NoAppend, g =>
+      perDoc(pprRanks(g), col("is_seed"), round(col("pr"), 9).as("ppr"))),
+    ("label_prop", NoAppend, g =>
+      labelsOut(labelPropagation(seeded(g), undirected(g.pairs), iters = Iters))),
+    ("label_prop_w", NoAppend, g =>
+      labelsOut(weightedLabelPropagation(seeded(g),
+        undirected(g.edges).select(col("src"), col("dst"), col("cos").as("w")),
+        iters = Iters))),
+    ("density", NoAppend, g => densityOf(g.edges).orderBy("vec_id")),
+    ("clustering", NoAppend, g => clusteringOf(g.pairs)),
+    ("clustering_local", NoAppend, g =>
+      localClusteringOf(g.pairs)
+        .select(col("v").as("vec_id"), col("deg"), col("n_triangles"),
+          col("local_coeff"))
+        .orderBy("vec_id")),
+    ("components", Every, { g =>
+      val comp = connectedComponents(g.ids, g.pairs)
+      val sizes = comp.groupBy("component").agg(count(lit(1)).as("comp_size"))
+      perDoc(comp.join(sizes, "component"), col("component"), col("comp_size"))
+    }),
+    ("kcore", Every, g =>
+      perDoc(kcoreConverged(kcorePeel(g.ids, g.pairs, k = CoreK, rounds = PeelRounds),
+          k = CoreK, rounds = PeelRounds),
+        col("in_core"), col("core_deg"))),
+    ("harmonic", Every, g =>
+      perDoc(harmonic3(g.ids, g.pairs),
+        col("n1"), col("n2"), col("n3"), col("harmonic"))),
+    ("harmonic_sketch", NoAppend, g =>
+      perDoc(harmonicSketch(g.ids, g.pairs, k = SketchK),
+        col("n1_est"), col("n2_est"), col("n3_est"), col("harmonic_est"))),
+    ("assortativity", NoAppend, g => assortativityOf(g.pairs)),
+    ("communities", Every, g =>
+      perDoc(communitySizes(g), col("lbl").as("community"), col("comm_size"))),
+    ("modularity", NoAppend, g => modularityOf(communityLabels(g), g.pairs)),
   )
 
-  /** The at-rest graph-stats SERVING ARTIFACT as a relation — the exact
-    * (vec_id, pr, community, comm_size, in_core, core_deg, deg,
-    * n_triangles, local_coeff, harmonic_est) rows `Retrieval.run` mode
-    * "centrality" point-reads, read back whole so the store itself is
-    * hash-checked (not just spec-pinned): pr must equal the refined
-    * centrality replay, community/size the refined detection replay,
-    * and the r19-widened cohesion/reach columns the refined kcore /
-    * local-clustering / harmonic-sketch replays, because the store IS
-    * those derivations materialized once. */
-  def graphStatsStoreQ(s: SparkSession, d: String): DataFrame =
+  /** `graph_<dial>` over knn and `graph_<dial>_<source>` over the
+    * other sources, plus the seven queries written out below. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val grid = for ((dial, offered, f) <- dials; src <- offered) yield
+      (if (src == "knn") s"graph_$dial" else s"graph_${dial}_$src") ->
+        ((s: SparkSession, d: String) => f(sources(src)(s, d)))
+    (grid ++ Seq(
+      "graph_ppr_expand" -> pprExpand _,
+      "graph_label_prop_acc" -> labelPropAcc _,
+      "graph_quality_prop" -> qualityProp _,
+      "graph_quality_prop_acc" -> qualityPropAcc _,
+      "graph_components_hist" -> componentsHist _,
+      "graph_blast_radius" -> blastRadius _,
+      "graph_stats_store" -> statsStore _,
+    )).toMap
+  }
+
+  /** The 20 non-seed docs closest to the trusted set by PPR mass: which
+    * docs should join the training slice next. Selection is by raw pr,
+    * but rows are served in the rounded column's order (the oracle's
+    * outer ORDER BY), so two raw-distinct, round-equal values cannot
+    * order-diverge under the hash check. */
+  private def pprExpand(s: SparkSession, d: String): DataFrame =
+    pprRanks(knn(s, d)).filter(!col("is_seed"))
+      .orderBy(desc("pr"), asc("id")).limit(20)
+      .select(col("id").as("vec_id"), round(col("pr"), 9).as("ppr"))
+      .orderBy(desc("ppr"), asc("vec_id"))
+
+  /** How often `graph_label_prop`'s label agrees with the held-out
+    * truth on non-seed nodes; all-integer, so exact. */
+  private def labelPropAcc(s: SparkSession, d: String): DataFrame = {
+    val truth = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label").as("truth"))
+    queries("graph_label_prop")(s, d).join(truth, "vec_id")
+      .agg(
+        count(lit(1)).as("n_nodes"),
+        sum(when(col("is_seed"), 1L).otherwise(0L)).as("n_seed"),
+        sum(when(!col("is_seed") && col("label").isNotNull, 1L)
+          .otherwise(0L)).as("n_pred"),
+        sum(when(!col("is_seed") && col("label") === col("truth"), 1L)
+          .otherwise(0L)).as("n_correct"))
+      .select(col("n_nodes"), col("n_seed"), col("n_pred"), col("n_correct"),
+        round(col("n_correct").cast("double") / col("n_pred"), 6).as("acc"))
+  }
+
+  private val QualitySeedMfx = 500000L // |NB margin| ≥ 0.5 → confident seed
+
+  /** The NB seed table (id, seed, __mfx), built once per (JVM, sfDir)
+    * into scratch parquet and shared by both quality-prop queries: every
+    * vote round and the final margin join read it, so the NB train and
+    * score pipeline runs once. */
+  private def qualityNodes(s: SparkSession, d: String): DataFrame =
+    graft.plans.Scratch.frame(s, s"qualitynodes|$d") {
+      val docs = Tables.documents(s, d)
+      val (llr, scalars) = Classify.nbModel(
+        docs.filter(Classify.isTrain(col("doc_id"))),
+        col("text"), col("lang") === "en")
+      val scored = Classify.nbScoreRaw(docs, col("doc_id"), col("text"),
+        llr, scalars)
+      scored.select(col("doc_id").as("id"),
+        when(abs(col("__mfx")) >= QualitySeedMfx,
+          when(col("__mfx") > 0L, 1).otherwise(0)).as("seed"),
+        col("__mfx"))
+    }
+
+  /** Semi-supervised quality spreading: the NB classifier's confident
+    * verdicts (|fixed-point margin| ≥ [[QualitySeedMfx]]) become clamped
+    * seeds, and their binary label propagates over the kNN graph to the
+    * docs the margin alone can't call. Integer end to end, so the whole
+    * composition, NB training included, replays exactly. Docs without an
+    * embedding row keep their seed verdict (no edges reach them).
+    * Returns (id, lbl, seed, __mfx). */
+  private def qualityPropLabels(s: SparkSession, d: String): DataFrame = {
+    val nodes = qualityNodes(s, d)
+    labelPropagation(nodes.select("id", "seed"), undirected(knn(s, d).pairs),
+        iters = Iters)
+      .join(nodes, "id")
+  }
+
+  /** Per-doc propagated quality verdict (1 = en-like by the NB gate's
+    * own confident neighbors), null where neither confidence nor any
+    * labeled neighbor reached the doc. */
+  private def qualityProp(s: SparkSession, d: String): DataFrame =
+    qualityPropLabels(s, d)
+      .select(col("id").as("doc_id"), col("lbl").as("quality"),
+        col("seed").isNotNull.as("is_seed"))
+      .orderBy("doc_id")
+
+  /** On non-seed docs that received a propagated label, how often the
+    * graph's verdict agrees with the NB margin's own sign: high
+    * agreement says the graph spreads the classifier's signal rather
+    * than fighting it. */
+  private def qualityPropAcc(s: SparkSession, d: String): DataFrame =
+    qualityPropLabels(s, d)
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(when(col("seed").isNotNull, 1L).otherwise(0L)).as("n_seed"),
+        sum(when(col("seed").isNull && col("lbl").isNotNull, 1L)
+          .otherwise(0L)).as("n_prop"),
+        sum(when(col("seed").isNull &&
+            col("lbl") === when(col("__mfx") > 0L, 1).otherwise(0), 1L)
+          .otherwise(0L)).as("n_agree"))
+      .select(col("n_docs"), col("n_seed"), col("n_prop"), col("n_agree"),
+        round(col("n_agree").cast("double") / col("n_prop"), 6)
+          .as("agree_rate"))
+
+  /** The kNN graph's fragmentation profile: component size → how many
+    * components, one row per distinct size. A long tail of small
+    * components flags slices no propagation signal will reach. */
+  private def componentsHist(s: SparkSession, d: String): DataFrame = {
+    val g = knn(s, d)
+    connectedComponents(g.ids, g.pairs)
+      .groupBy("component").agg(count(lit(1)).as("comp_size"))
+      .groupBy("comp_size").agg(count(lit(1)).as("n_components"))
+      .orderBy("comp_size")
+  }
+
+  /** Takedown blast radius: every doc within 2 undirected hops of a
+    * recalled id on the refined layout, with its hop distance, scoped
+    * before tombstoning. Hop-1 docs hold neighbor lists that cite the
+    * recalled doc; hop-2 docs are where repair candidates come from.
+    * Hop 0 is the recall list restricted to the corpus (the oracle's
+    * `b0`): an id absent from the corpus is not a document to
+    * re-check. */
+  private def blastRadius(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val h0 = Retrieval.GraphDeletedIds.toDF("id")
+      .join(Tables.embeddings(s, d).select(col("vec_id").as("id")),
+        Seq("id"), "left_semi")
+    blastRadiusOf(refined(s, d).pairs, h0)
+      .select(col("id").as("vec_id"), col("hops"))
+      .orderBy("vec_id")
+  }
+
+  /** The at-rest graph-stats serving store ([[Retrieval.graphStatsDir]])
+    * read back whole, so the artifact `Retrieval.run` mode `centrality`
+    * point-reads is hash-checked: each column must equal the refined
+    * replay of the dial it materializes. */
+  private def statsStore(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${Retrieval.graphStatsDir(s, d)}/stats")
       .select(col("id").as("vec_id"), round(col("pr"), 9).as("pr"),
         col("community"), col("comm_size"), col("in_core"), col("core_deg"),
@@ -2277,7 +1545,7 @@ object GraphAnalytics {
     * `MATERIALIZED`. DuckDB re-INLINES un-hinted multi-referenced CTEs,
     * so a consumer like `kcoreCtesOn` (references `kund` ~6×, which
     * references `gedges` 4×) expands this pyramid combinatorially —
-    * `graph_kcore_del`'s oracle OOM'd at r17 exactly this way (the
+    * `graph_kcore_del`'s oracle ran out of memory exactly this way (the
     * `knn_graph_append` visited-CTE lesson, SURVEY §8). Hence `gref`
     * (the pyramid apex, [[Retrieval.refinedGraphCtesFrom]]), every
     * `gedges` wrapper, and each undirected closure (`kund`/`cund`/

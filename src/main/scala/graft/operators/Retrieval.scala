@@ -646,8 +646,8 @@ object Retrieval {
     * TAKEDOWN-AWARE like every other at-rest family: the build honors
     * the layout's [[graft.sources.Tombstones]] store (recalled ids
     * leave the node set, neither direction of their edges conducts —
-    * the `layoutLive` discipline, so a refresh over a tombstoned layout
-    * computes exactly `graph_pagerank_del`'s oracle-checked survivor
+    * the [[GraphAnalytics.layout]] read, so a refresh over a tombstoned
+    * layout computes exactly `graph_pagerank_del`'s oracle-checked survivor
     * ranks), and [[graphStatsReadFor]] anti-joins the tombstones again
     * at probe time, so a takedown landing AFTER the refresh blanks the
     * recalled id immediately (survivor ranks carry the documented
@@ -666,26 +666,17 @@ object Retrieval {
     * and time the refresh in isolation). */
   private[graft] def buildGraphStats(s: SparkSession, d: String,
       idx: String, outDir: String): Unit = {
-    import graft.sources.Tombstones
-    val nodes = Tombstones.dropDeleted(
-      Tables.embeddings(s, d).select(col("vec_id").as("id")),
-      col("id"), idx)
-    val edges = Tombstones.dropDeleted(
-      Tombstones.dropDeleted(
-        s.read.parquet(s"$idx/edges")
-          .select(col("__vid").as("src"), col("nbr_id").as("dst")),
-        col("src"), idx),
-      col("dst"), idx)
-    val pr = GraphAnalytics.pageRank(nodes, edges,
+    val g = GraphAnalytics.layout(s,
+      Tables.embeddings(s, d).select(col("vec_id").as("id")), idx)
+    val pr = GraphAnalytics.pageRank(g.nodes, g.pairs,
       iters = GraphAnalytics.Iters)
-    val cm = GraphAnalytics.communitiesOverLayout(s, nodes, idx,
-      GraphAnalytics.Iters)
+    val cm = GraphAnalytics.communitySizes(g)
     // r19 widening: the cohesion/reach dials (k-core membership,
     // Watts-Strogatz local clustering, KMV harmonic reach) join the
     // same refresh — their oracle-checked `_refined` derivations over
     // the SAME live nodes/edges, so one batch job materializes every
     // per-doc graph signal a curation reviewer reads in one lookup.
-    val sig = GraphAnalytics.statsSignals(nodes, edges)
+    val sig = GraphAnalytics.statsSignals(g.nodes, g.pairs)
     pr.join(cm, "id").join(sig, "id")
       .select(col("id"), col("pr"), col("lbl").as("community"),
         col("comm_size"), col("in_core"), col("core_deg"), col("deg"),

@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Takedown tombstones for the at-rest index layouts — the
   * right-to-be-forgotten half of index maintenance that the append paths
@@ -109,6 +110,33 @@ object Tombstones {
         && !st.getPath.getName.startsWith("."))
       .map(_.getPath.getName)
 
+  /** A parquet file's footer, read on the driver (no Spark job). */
+  private def footer(s: SparkSession, file: Path) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, s.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  /** Rows in the data files directly under `root`, summed from their
+    * footers. */
+  private def footerRows(s: SparkSession, f: org.apache.hadoop.fs.FileSystem,
+      root: Path): Long =
+    dataFiles(f, root).map { n =>
+      footer(s, new Path(root, n)).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+
+  /** A reader of the data files directly under `root` with the schema
+    * Spark wrote into the first one's footer, which is what schema
+    * inference would read, without inference's Spark job. A file
+    * without that key (not written by Spark) leaves it to inference. */
+  private def readerFor(s: SparkSession, root: Path, files: Seq[String]) =
+    Option(footer(s, new Path(root, files.head)).getFileMetaData
+        .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .fold(s.read)(s.read.schema)
+
   /** Heal [[rewriteLive]] swaps interrupted by a crash, for every
     * partition dir under `tableRoot`. MUST run before any full-table
     * read that follows a possible crash (compaction entry, probe entry):
@@ -204,7 +232,7 @@ object Tombstones {
     if (!f.exists(p)) return
     val snapshot = dataFiles(f, p)
     if (snapshot.isEmpty) return
-    rewrite(s.read.parquet(snapshot.map(n => s"$leafDir/$n"): _*))
+    rewrite(readerFor(s, p, snapshot).parquet(snapshot.map(n => s"$leafDir/$n"): _*))
       .write.mode("overwrite").parquet(tmpP.toString)
     stampFile.foreach { n =>
       require(n.startsWith("_"),
@@ -221,8 +249,7 @@ object Tombstones {
     }
     // "all rows deleted" must be decided on ROWS, not files — an empty
     // DataFrame still writes a zero-row part file to preserve schema
-    val hasRows = carried.nonEmpty || (dataFiles(f, tmpP).nonEmpty &&
-      !s.read.parquet(tmpP.toString).isEmpty)
+    val hasRows = carried.nonEmpty || footerRows(s, f, tmpP) > 0
     if (hasRows) {
       f.create(new Path(tmpP, SwapMarker), true).close()
       // an append may have recreated the dir since the vacate; renaming

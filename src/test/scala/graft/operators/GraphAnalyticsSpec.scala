@@ -231,7 +231,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("labelProp meter query: seeds are exact and accuracy is high on the blocked graph") {
-    val acc = GraphAnalytics.labelPropAccQ(spark, "/root/testdata/sf0.001")
+    val acc = GraphAnalytics.queries("graph_label_prop_acc")(spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long, Long, Double)].head()
     val (nNodes, nSeed, nPred, nCorrect, a) = acc
     assert(nSeed === nNodes / 5)
@@ -268,7 +268,7 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("density query: every node has its blocked degree <= 3 and a sane mean cosine") {
-    val rows = GraphAnalytics.densityQ(spark, "/root/testdata/sf0.001")
+    val rows = GraphAnalytics.queries("graph_density")(spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Double)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (id, deg, mc) =>
@@ -291,7 +291,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("clustering query: consistent census on the bound corpus") {
     val (nPairs, nWedges, nTri, coeff) =
-      GraphAnalytics.clusteringQ(spark, "/root/testdata/sf0.001")
+      GraphAnalytics.queries("graph_clustering")(spark, "/root/testdata/sf0.001")
         .as[(Long, Long, Long, Double)].head()
     assert(nPairs > 0 && nWedges > 0 && nTri >= 0)
     assert(coeff >= 0.0 && coeff <= 1.0, s"coeff $coeff")
@@ -300,7 +300,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("takedown centrality: recalled ids leave the ranking; mass renormalizes over survivors") {
     val d = "/root/testdata/sf0.001"
-    val pr = GraphAnalytics.pageRankDelQ(spark, d).as[(Long, Double)].collect()
+    val pr = GraphAnalytics.queries("graph_pagerank_del")(spark, d).as[(Long, Double)].collect()
     val ids = pr.map(_._1).toSet
     Retrieval.GraphDeletedIds.foreach(i => assert(!ids.contains(i), s"recalled $i still ranked"))
     val n = spark.read.parquet(s"$d/embeddings.parquet").count()
@@ -412,8 +412,12 @@ class GraphAnalyticsSpec extends SparkSpec {
         s"$dir/idx", entriesN = 2, buckets = 2)
       val seeded = Seq((0L, Some(1)), (1L, None), (2L, None), (3L, None),
         (4L, Some(2))).toDF("id", "seed")
-      def run() = GraphAnalytics.labelPropOverLayout(spark, seeded,
-        s"$dir/idx", iters = 2).as[(Long, Option[Int])].collect().toMap
+      def run() = {
+        val g = GraphAnalytics.layout(spark, seeded, s"$dir/idx")
+        GraphAnalytics.labelPropagation(g.nodes,
+            GraphAnalytics.undirected(g.pairs), iters = 2)
+          .as[(Long, Option[Int])].collect().toMap
+      }
       assert(run() === Map(0L -> Some(1), 1L -> Some(1), 2L -> Some(1),
         3L -> Some(2), 4L -> Some(2)))
       Search.deleteFromGraphIndex(Seq(0L).toDF("vec_id"), $"vec_id", s"$dir/idx")
@@ -429,7 +433,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_label_prop_del query: recalled ids leave the labeling; seeds among survivors hold") {
     val d = "/root/testdata/sf0.001"
-    val rows = GraphAnalytics.labelPropDelQ(spark, d)
+    val rows = GraphAnalytics.queries("graph_label_prop_del")(spark, d)
       .as[(Long, Option[Int], Boolean)].collect()
     val ids = rows.map(_._1).toSet
     Retrieval.GraphDeletedIds.foreach(i =>
@@ -442,7 +446,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("appended-layout centrality: increment ids enter the ranking without a rebuild; mass stays 1") {
     val d = "/root/testdata/sf0.001"
-    val pr = GraphAnalytics.pageRankAppendQ(spark, d)
+    val pr = GraphAnalytics.queries("graph_pagerank_append")(spark, d)
       .as[(Long, Double)].collect()
     val n = spark.read.parquet(s"$d/embeddings.parquet").count()
     assert(pr.length.toLong === n) // base slice + the appended increment
@@ -454,14 +458,14 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("quality propagation: clamped confident seeds, consistent meter, no unlabeled seed") {
     val d = "/root/testdata/sf0.001"
-    val rows = GraphAnalytics.qualityPropQ(spark, d)
+    val rows = GraphAnalytics.queries("graph_quality_prop")(spark, d)
       .as[(Long, Option[Int], Boolean)].collect()
     // every seed carries its own verdict; quality is binary where set
     rows.filter(_._3).foreach { case (id, q, _) =>
       assert(q.isDefined, s"seed $id lost its label") }
     rows.flatMap(_._2).foreach(q => assert(q == 0 || q == 1))
     val (nDocs, nSeed, nProp, nAgree, rate) =
-      GraphAnalytics.qualityPropAccQ(spark, d)
+      GraphAnalytics.queries("graph_quality_prop_acc")(spark, d)
         .as[(Long, Long, Long, Long, Double)].head()
     assert(nDocs === rows.length.toLong)
     assert(nSeed === rows.count(_._3).toLong)
@@ -538,7 +542,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     // < k, one more round would peel it — so all-core_deg ≥ 2 proves
     // the fixed-round relation IS the converged 2-core
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val rows = GraphAnalytics.kcoreQ(spark, d)
+      val rows = GraphAnalytics.queries("graph_kcore")(spark, d)
         .as[(Long, Boolean, Option[Long])].collect()
       val n = spark.read.parquet(s"$d/embeddings.parquet").count()
       assert(rows.length.toLong === n)
@@ -551,7 +555,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_components query: sizes consistent, propagation cannot cross components") {
     val d = "/root/testdata/sf0.001"
-    val rows = GraphAnalytics.componentsQ(spark, d)
+    val rows = GraphAnalytics.queries("graph_components")(spark, d)
       .as[(Long, Long, Long)].collect()
     val n = spark.read.parquet(s"$d/embeddings.parquet").count()
     assert(rows.length.toLong === n)
@@ -566,7 +570,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     // unit of mass lives inside one component, so summing pr by
     // component and re-running on ONE component's node slice must not
     // see mass from the others (structural guard, cheap at sf0.001)
-    val hist = GraphAnalytics.componentsHistQ(spark, d)
+    val hist = GraphAnalytics.queries("graph_components_hist")(spark, d)
       .as[(Long, Long)].collect()
     assert(hist.map(h => h._1 * h._2).sum === n)
     assert(hist.map(_._2).sum.toInt === byComp.size)
@@ -574,7 +578,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_components_del query: recalled bridge ids leave; components only ever split") {
     val d = "/root/testdata/sf0.001"
-    val live = GraphAnalytics.componentsDelQ(spark, d)
+    val live = GraphAnalytics.queries("graph_components_del")(spark, d)
       .as[(Long, Long, Long)].collect()
     val ids = live.map(_._1).toSet
     Retrieval.GraphDeletedIds.foreach(i =>
@@ -601,7 +605,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_blast_radius query: hop-0 = the recalled ids, hop-1 rows share a stored edge with one") {
     val d = "/root/testdata/sf0.001"
-    val rows = GraphAnalytics.blastRadiusQ(spark, d)
+    val rows = GraphAnalytics.queries("graph_blast_radius")(spark, d)
       .as[(Long, Int)].collect()
     val byHop = rows.groupBy(_._2).map { case (h, r) => h -> r.map(_._1).toSet }
     assert(rows.map(_._2).forall(h => h >= 0 && h <= 2))
@@ -644,7 +648,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_components_append query: inserted ids join components through their links, no rebuild") {
     val d = "/root/testdata/sf0.001"
-    val rows = GraphAnalytics.componentsAppendQ(spark, d)
+    val rows = GraphAnalytics.queries("graph_components_append")(spark, d)
       .as[(Long, Long, Long)].collect()
     val n = spark.read.parquet(s"$d/embeddings.parquet").count()
     assert(rows.length.toLong === n) // base slice + appended increment
@@ -772,8 +776,8 @@ class GraphAnalyticsSpec extends SparkSpec {
       Search.writeGraphIndex(nodes.toDF("vec_id", "embedding"),
         $"vec_id", $"embedding", edges.toDF("__vid", "nbr_id"),
         s"$dir/idx", entriesN = 2, buckets = 2)
-      def run() = GraphAnalytics.communitiesOverLayout(spark,
-          (0L to 6L).toDF("id"), s"$dir/idx", iters = 3)
+      def run() = GraphAnalytics.communitySizes(
+          GraphAnalytics.layout(spark, (0L to 6L).toDF("id"), s"$dir/idx"))
         .as[(Long, Long, Long)].collect()
         .map { case (id, lbl, sz) => id -> ((lbl, sz)) }.toMap
       assert(run() === Map(
@@ -797,7 +801,7 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_communities_del query: recalled ids leave the partition; sizes consistent") {
     val d = "/root/testdata/sf0.001"
-    val rows = GraphAnalytics.communitiesDelQ(spark, d)
+    val rows = GraphAnalytics.queries("graph_communities_del")(spark, d)
       .as[(Long, Long, Long)].collect()
     val ids = rows.map(_._1).toSet
     Retrieval.GraphDeletedIds.foreach(i =>
@@ -811,11 +815,11 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_density_del: recalled ids emit no row; survivors' degrees only ever thin") {
     val d = "/root/testdata/sf0.001"
-    val del = GraphAnalytics.densityDelQ(spark, d)
+    val del = GraphAnalytics.queries("graph_density_del")(spark, d)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._2).toMap
     Retrieval.GraphDeletedIds.foreach(i =>
       assert(!del.contains(i), s"recalled $i still profiled"))
-    val clean = GraphAnalytics.densityRefinedQ(spark, d)
+    val clean = GraphAnalytics.queries("graph_density_refined")(spark, d)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._2).toMap
     del.foreach { case (id, deg) =>
       assert(deg <= clean(id), s"node $id GAINED degree under a takedown") }
@@ -825,9 +829,9 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("graph_kcore_del / graph_harmonic_del: recalled ids leave; support and reach stop counting") {
     val d = "/root/testdata/sf0.001"
-    val kc = GraphAnalytics.kcoreDelQ(spark, d)
+    val kc = GraphAnalytics.queries("graph_kcore_del")(spark, d)
       .as[(Long, Boolean, Option[Long])].collect()
-    val hm = GraphAnalytics.harmonicDelQ(spark, d)
+    val hm = GraphAnalytics.queries("graph_harmonic_del")(spark, d)
       .as[(Long, Long, Long, Long, Double)].collect()
     val n = spark.read.parquet(s"$d/embeddings.parquet").count()
     Seq(kc.map(_._1), hm.map(_._1)).foreach { ids =>
@@ -895,9 +899,9 @@ class GraphAnalyticsSpec extends SparkSpec {
     // wild. (Bit-parity vs DuckDB is the oracle's job; this pins that
     // the estimates mean what they claim vs ground truth.)
     val d = "/root/testdata/sf0.001"
-    val ex = GraphAnalytics.harmonicQ(spark, d)
+    val ex = GraphAnalytics.queries("graph_harmonic")(spark, d)
       .as[(Long, Long, Long, Long, Double)].collect().map(r => r._1 -> r._5).toMap
-    val sq = GraphAnalytics.harmonicSketchQ(spark, d)
+    val sq = GraphAnalytics.queries("graph_harmonic_sketch")(spark, d)
       .as[(Long, Double, Double, Double, Double)].collect()
       .map(r => r._1 -> r._5).toMap
     val rel = ex.collect { case (id, h) if h > 0 =>
@@ -954,11 +958,41 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("pageRank query: full relation over sf0.001, mass ≈ 1, all nodes present") {
-    val df = GraphAnalytics.pageRankQ(spark, "/root/testdata/sf0.001")
+    val df = GraphAnalytics.queries("graph_pagerank")(spark, "/root/testdata/sf0.001")
     val rows = df.as[(Long, Double)].collect()
     val n = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").count()
     assert(rows.length.toLong === n)
     val total = rows.map(_._2).sum
     assert(math.abs(total - 1.0) < 1e-6, s"mass $total") // round(9) per row
+  }
+
+  test("the generated query map holds exactly the 56 graph queries, each with its oracle") {
+    val expected = Set(
+      "graph_assortativity", "graph_assortativity_del",
+      "graph_assortativity_refined", "graph_blast_radius", "graph_clustering",
+      "graph_clustering_del", "graph_clustering_local",
+      "graph_clustering_local_del", "graph_clustering_local_refined",
+      "graph_clustering_refined", "graph_communities",
+      "graph_communities_append", "graph_communities_del",
+      "graph_communities_refined", "graph_components",
+      "graph_components_append", "graph_components_del",
+      "graph_components_hist", "graph_components_refined", "graph_density",
+      "graph_density_del", "graph_density_refined", "graph_harmonic",
+      "graph_harmonic_append", "graph_harmonic_del", "graph_harmonic_refined",
+      "graph_harmonic_sketch", "graph_harmonic_sketch_del",
+      "graph_harmonic_sketch_refined", "graph_kcore", "graph_kcore_append",
+      "graph_kcore_del", "graph_kcore_refined", "graph_label_prop",
+      "graph_label_prop_acc", "graph_label_prop_del",
+      "graph_label_prop_refined", "graph_label_prop_w",
+      "graph_label_prop_w_del", "graph_label_prop_w_refined",
+      "graph_modularity", "graph_modularity_del", "graph_modularity_refined",
+      "graph_pagerank", "graph_pagerank_append", "graph_pagerank_del",
+      "graph_pagerank_refined", "graph_pagerank_w",
+      "graph_pagerank_w_refined", "graph_ppr", "graph_ppr_del",
+      "graph_ppr_expand", "graph_ppr_refined", "graph_quality_prop",
+      "graph_quality_prop_acc", "graph_stats_store")
+    assert(expected.size === 56)
+    assert(GraphAnalytics.queries.keySet === expected)
+    assert(GraphAnalytics.queries.keySet === GraphAnalytics.oracleSql.keySet)
   }
 }

@@ -201,14 +201,14 @@ class RetrievalRunSpec extends SparkSpec {
     assert(got.size === 1 && got.head._1 === 42L)
     // pr must equal graph_pagerank_refined's row — same stored edges,
     // same published loop, same round(9)
-    val wantPr = GraphAnalytics.pageRankRefinedQ(spark, d)
+    val wantPr = GraphAnalytics.queries("graph_pagerank_refined")(spark, d)
       .filter(col("vec_id") === 42L).as[(Long, Double)].head()._2
     assert(got.head._2 === wantPr)
     // community/size must equal the layout-served partition at the same
     // rounds, and the size must count its members
-    val cm = GraphAnalytics.communitiesOverLayout(spark,
+    val cm = GraphAnalytics.communitySizes(GraphAnalytics.layout(spark,
         spark.read.parquet(s"$d/embeddings.parquet").select(col("vec_id").as("id")),
-        s"${Retrieval.graphIdxDir(spark, d)}/idx", GraphAnalytics.Iters)
+        s"${Retrieval.graphIdxDir(spark, d)}/idx"))
       .as[(Long, Long, Long)].collect()
     val want = cm.find(_._1 == 42L).get
     assert((got.head._3, got.head._4) === ((want._2, want._3)))
@@ -221,11 +221,11 @@ class RetrievalRunSpec extends SparkSpec {
         "local_coeff", "harmonic_est")
       .as[(Long, Boolean, Option[Long], Long, Long, Option[Double], Double)]
       .head()
-    val wantCore = GraphAnalytics.kcoreRefinedQ(spark, d)
+    val wantCore = GraphAnalytics.queries("graph_kcore_refined")(spark, d)
       .filter(col("vec_id") === 42L)
       .as[(Long, Boolean, Option[Long])].head()
     assert((wide._2, wide._3) === ((wantCore._2, wantCore._3)))
-    val wantLcc = GraphAnalytics.clusteringLocalRefinedQ(spark, d)
+    val wantLcc = GraphAnalytics.queries("graph_clustering_local_refined")(spark, d)
       .filter(col("vec_id") === 42L)
       .as[(Long, Long, Long, Option[Double])].collect().headOption
     wantLcc match {
@@ -234,7 +234,7 @@ class RetrievalRunSpec extends SparkSpec {
       case None => // edge-less node: honest zeros, undefined coefficient
         assert((wide._4, wide._5, wide._6) === ((0L, 0L, None)))
     }
-    val wantReach = GraphAnalytics.harmonicSketchRefinedQ(spark, d)
+    val wantReach = GraphAnalytics.queries("graph_harmonic_sketch_refined")(spark, d)
       .filter(col("vec_id") === 42L)
       .select("harmonic_est").as[Double].head()
     assert(wide._7 === wantReach)
@@ -267,22 +267,22 @@ class RetrievalRunSpec extends SparkSpec {
     val got = Retrieval.graphStatsReadFor(spark, d, idx, survivor)
       .select("vec_id", "pr", "community", "comm_size")
       .as[(Long, Double, Long, Long)].head()
-    val wantPr = GraphAnalytics.pageRankDelQ(spark, d)
+    val wantPr = GraphAnalytics.queries("graph_pagerank_del")(spark, d)
       .filter(col("vec_id") === survivor).as[(Long, Double)].head()._2
     assert(got._2 === wantPr)
     // the widened reach column regrades over the SURVIVING graph too —
     // exactly graph_harmonic_sketch_del's oracle-checked survivor row
     val gotReach = Retrieval.graphStatsReadFor(spark, d, idx, survivor)
       .select("harmonic_est").as[Double].head()
-    val wantReach = GraphAnalytics.harmonicSketchDelQ(spark, d)
+    val wantReach = GraphAnalytics.queries("graph_harmonic_sketch_del")(spark, d)
       .filter(col("vec_id") === survivor)
       .select("harmonic_est").as[Double].head()
     assert(gotReach === wantReach)
     // and its community row matches the tombstoned layout's partition
-    val want = GraphAnalytics.communitiesOverLayout(spark,
+    val want = GraphAnalytics.communitySizes(GraphAnalytics.layout(spark,
         spark.read.parquet(s"$d/embeddings.parquet")
           .select(col("vec_id").as("id")),
-        idx, GraphAnalytics.Iters)
+        idx))
       .as[(Long, Long, Long)].collect().find(_._1 == survivor).get
     assert((got._3, got._4) === ((want._2, want._3)))
   }
@@ -298,7 +298,7 @@ class RetrievalRunSpec extends SparkSpec {
       .select("vec_id", "pr", "community", "comm_size")
       .as[(Long, Double, Long, Long)].head()
     assert(got._1 === inserted)
-    val wantPr = GraphAnalytics.pageRankAppendQ(spark, d)
+    val wantPr = GraphAnalytics.queries("graph_pagerank_append")(spark, d)
       .filter(col("vec_id") === inserted).as[(Long, Double)].head()._2
     assert(got._2 === wantPr)
   }

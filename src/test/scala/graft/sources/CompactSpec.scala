@@ -83,4 +83,40 @@ class CompactSpec extends SparkSpec {
     assert(back.count() === 2000L)
     assert(back.filter(col("p") === "a").count() === 500L)
   }
+
+  test("rewriteLive: a rewrite that keeps rows runs only the staged write's Spark job") {
+    val root = s"${tmpDir()}/t"
+    spark.range(100).withColumn("bkt", lit(0)).coalesce(1)
+      .write.partitionBy("bkt").parquet(root)
+    val leaf = s"$root/bkt=0"
+    assert(new java.io.File(leaf).listFiles()
+      .count(f => f.getName.endsWith(".parquet")) === 1)
+    val sc = spark.sparkContext
+    val group = s"rewrite-live-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one rewriteLive")
+      Tombstones.rewriteLive(spark, leaf, _.filter(col("id") % 2 === 0))
+      // the listener bus delivers in order: once the marker's job start
+      // arrives, every job the rewrite launched has been counted
+      sc.setJobGroup(group + "-marker", "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() === 1, s"rewriteLive ran ${jobs.get()} job(s)")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(spark.read.parquet(root).count() === 50L)
+  }
 }
