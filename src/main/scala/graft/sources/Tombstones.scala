@@ -127,12 +127,12 @@ object Tombstones {
       footer(s, new Path(root, n)).getBlocks.asScala.map(_.getRowCount).sum
     }.sum
 
-  /** A reader of the data files directly under `root` with the schema
-    * Spark wrote into the first one's footer, which is what schema
-    * inference would read, without inference's Spark job. A file
-    * without that key (not written by Spark) leaves it to inference. */
-  private def readerFor(s: SparkSession, root: Path, files: Seq[String]) =
-    Option(footer(s, new Path(root, files.head)).getFileMetaData
+  /** A reader with the schema Spark wrote into `file`'s footer, which
+    * is what schema inference would read, without inference's Spark
+    * job. A file without that key (not written by Spark) leaves it to
+    * inference. */
+  private def readerFor(s: SparkSession, file: Path) =
+    Option(footer(s, file).getFileMetaData
         .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
       .fold(s.read)(s.read.schema)
@@ -232,7 +232,7 @@ object Tombstones {
     if (!f.exists(p)) return
     val snapshot = dataFiles(f, p)
     if (snapshot.isEmpty) return
-    rewrite(readerFor(s, p, snapshot).parquet(snapshot.map(n => s"$leafDir/$n"): _*))
+    rewrite(readerFor(s, new Path(p, snapshot.head)).parquet(snapshot.map(n => s"$leafDir/$n"): _*))
       .write.mode("overwrite").parquet(tmpP.toString)
     stampFile.foreach { n =>
       require(n.startsWith("_"),
