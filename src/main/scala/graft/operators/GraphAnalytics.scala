@@ -75,7 +75,9 @@ import graft.Tables
   * without a cos column. Seven queries are written out, not generated:
   * `graph_ppr_expand`, `graph_label_prop_acc`, `graph_quality_prop`,
   * `graph_quality_prop_acc`, `graph_components_hist`,
-  * `graph_blast_radius` and `graph_stats_store`.
+  * `graph_blast_radius` and `graph_stats_store`. Blast radius reads
+  * the refined layout's stored edges with no tombstone applied: its
+  * hops must run through the recalled ids.
   *
   * Reference anchor: the reference's retrieval pipeline stops at
   * neighbor lists (`search_similar_images.py:52-95` — per-query kNN);
@@ -1029,21 +1031,26 @@ object GraphAnalytics {
     def pairs: DataFrame = edges.select("src", "dst")
   }
 
-  /** The tombstone-aware read of an at-rest graph layout at `idxDir`
-    * ([[Search.writeGraphIndex]]): `nodes` minus the tombstoned ids,
-    * and the stored edges (src, dst[, cos]) minus every edge with a
-    * tombstoned endpoint, so a recalled doc leaves the node set and
-    * neither direction of its edges conducts. A layout with no
-    * tombstones reads as stored. */
+  /** The edges (src, dst[, cos]) an at-rest graph layout at `idxDir`
+    * ([[Search.writeGraphIndex]]) stores, tombstones not applied. */
+  private def storedEdges(s: SparkSession, idxDir: String): DataFrame = {
+    val stored = s.read.parquet(s"$idxDir/edges")
+    stored.select(
+      Seq(col("__vid").as("src"), col("nbr_id").as("dst")) ++
+        (if (stored.columns.contains("cos")) Seq(col("cos")) else Nil): _*)
+  }
+
+  /** The tombstone-aware read of an at-rest graph layout at `idxDir`:
+    * `nodes` minus the tombstoned ids, and the [[storedEdges]] minus
+    * every edge with a tombstoned endpoint, so a recalled doc leaves
+    * the node set and neither direction of its edges conducts. A
+    * layout with no tombstones reads as stored. */
   private[operators] def layout(s: SparkSession, nodes: DataFrame,
       idxDir: String): GraphSource = {
     import graft.sources.Tombstones.dropDeleted
-    val stored = s.read.parquet(s"$idxDir/edges")
-    val edges = stored.select(
-      Seq(col("__vid").as("src"), col("nbr_id").as("dst")) ++
-        (if (stored.columns.contains("cos")) Seq(col("cos")) else Nil): _*)
     GraphSource(dropDeleted(nodes, col("id"), idxDir),
-      dropDeleted(dropDeleted(edges, col("src"), idxDir), col("dst"), idxDir))
+      dropDeleted(dropDeleted(storedEdges(s, idxDir), col("src"), idxDir),
+        col("dst"), idxDir))
   }
 
   /** The undirected closure of `edges (src, dst, …)`: both directions
@@ -1072,6 +1079,10 @@ object GraphAnalytics {
   private def knn(s: SparkSession, d: String): GraphSource =
     GraphSource(corpus(s, d), knnEdgesCos(s, d), Some(s"lpaclean|$d"))
 
+  /** The clean production layout. Takedowns tombstone only the del
+    * fixture's copy ([[Retrieval.graphDelIdxDir]]), never this one, so
+    * it reads as stored: the rows the oracle's `refinedEdgeCtes`
+    * replays. */
   private def refined(s: SparkSession, d: String): GraphSource =
     layout(s, corpus(s, d), s"${Retrieval.graphIdxDir(s, d)}/idx")
       .copy(labelsMemo = Some(s"lparefined|$d"))
@@ -1308,7 +1319,9 @@ object GraphAnalytics {
     val h0 = Retrieval.GraphDeletedIds.toDF("id")
       .join(Tables.embeddings(s, d).select(col("vec_id").as("id")),
         Seq("id"), "left_semi")
-    blastRadiusOf(refined(s, d).pairs, h0)
+    blastRadiusOf(
+        storedEdges(s, s"${Retrieval.graphIdxDir(s, d)}/idx").select("src", "dst"),
+        h0)
       .select(col("id").as("vec_id"), col("hops"))
       .orderBy("vec_id")
   }

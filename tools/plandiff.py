@@ -13,8 +13,10 @@ that only plan shape counts:
   - RDD ids `MapPartitionsRDD[34]` -> `MapPartitionsRDD[N]`, and source
     positions `Foo.scala:123` -> `Foo.scala:N` (a checkpoint's RDD is
     named after its call site);
-  - scratch and temp roots (`/tmp/...`, `/dev/shm/...`, the
-    `SPARK_GRAFT_SCRATCH_ROOTS` colon-separated list) -> `<tmp>`.
+  - scratch and temp paths (any path through a `graft_scratch*` dir,
+    the names `graft.plans.Scratch` gives its dirs wherever
+    `spark.graft.scratch.dir` puts them, and anything under `/tmp`,
+    `/dev/shm` or `/var/tmp`) -> `<tmp>`.
 
 Prints, per query, `identical` or a unified diff of the normalized plans,
 then a summary line. Exits 0 when every query present in both is identical
@@ -26,9 +28,8 @@ import re
 import sys
 
 
-def roots():
-    extra = [r for r in os.environ.get("SPARK_GRAFT_SCRATCH_ROOTS", "").split(":") if r]
-    return ["/tmp", "/dev/shm", "/var/tmp"] + extra
+TMP_PATH = re.compile(
+    r"(file:)?([^\s,\[\]()]*/graft_scratch|/tmp/|/dev/shm/|/var/tmp/)[^\s,\])]*")
 
 
 def normalize(text):
@@ -36,18 +37,14 @@ def normalize(text):
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
     text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
     text = re.sub(r"\.scala:\d+", ".scala:N", text)
-    for root in roots():
-        text = re.sub(r"(file:)?" + re.escape(root.rstrip("/")) + r"/[^\s,\]\)]*", "<tmp>", text)
+    text = TMP_PATH.sub("<tmp>", text)
     return text.splitlines()
 
 
 def plans(d):
-    files = sorted(f for f in os.listdir(d) if f.endswith(".txt"))
-    suffixes = {f.rsplit("_", 1)[-1] for f in files if "_" in f}
-    strip = len(suffixes) == 1 and all("_" in f for f in files)
     out = {}
-    for f in files:
-        name = f.rsplit("_", 1)[0] if strip else f[:-len(".txt")]
+    for f in sorted(f for f in os.listdir(d) if f.endswith(".txt")):
+        name = f.rsplit("_", 1)[0]
         with open(os.path.join(d, f)) as fh:
             out[name] = normalize(fh.read())
     return out
